@@ -1,13 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — times every declared query at
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line.
   *
-  * Methodology (changed round 3 after measurement, see BenchProbe): the
-  * round-2 "regression" on untouched queries was cold-start position, not
-  * checkpoint-block pressure — a query's first execution pays whole-stage
-  * codegen compilation + JIT, worth 2-5× its steady-state time, and the
+  * Methodology (changed round 3 after measurement): the round-2
+  * "regression" on untouched queries was cold-start position, not
+  * checkpoint-block pressure (`tools.Profile time` prints the block-manager
+  * footprint per query, the check that ruled it out) — a query's first
+  * execution pays whole-stage codegen compilation + JIT, worth 2-5× its
+  * steady-state time, and the
   * hash-ordered query Map reshuffles which queries run cold whenever a
   * query is added. So the bench now (1) runs EVERY query once untimed at
   * the smallest available SF (same plans → same generated classes → codegen
@@ -28,22 +29,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // normalizeTs/normalizeDate's NTZ→instant re-label is correct only
-      // under a UTC session (their documented contract) — pin it so a
-      // non-UTC host can't silently run timezone-shifted event plans that
-      // diverge from Verify's
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: every localCheckpoint emits a lineage-truncation
-    // WARN that sbt routes to [error], flooding the driver's captured tail
-    // and risking the printed JSON line falling off it
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local("graft-bench")
     val names = SparkEntry.queries.keys.toSeq.sorted
     // untimed full warmup at the smallest SF sharing the parquet layout:
     // compiles every plan's generated code and JITs the hot paths

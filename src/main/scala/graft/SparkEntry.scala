@@ -82,8 +82,8 @@ object SparkEntry {
     // join emits matches in the data batch that completes them — the
     // watermark only evicts state, never releases new inner-join rows.
     // Output is therefore bit-identical (oracle d51/d52/d54/d55/d56 +
-    // the multi-batch fixpoint tests pin it); measured (JobProfile r20
-    // A/B at sf0.1): the cost lives almost entirely in the stream-stream
+    // the multi-batch fixpoint tests pin it); measured (r20 per-job A/B
+    // at sf0.1): the cost lives almost entirely in the stream-stream
     // join drain, whose no-data batch runs 4 state-store providers per
     // partition — d54 2.59 s → 1.87 s (one fewer job); the complete/
     // update-mode drains were within noise.

@@ -15,45 +15,54 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session-scoped parquet schema reuse (r21, guide §1.2 driver floor):
+  /** Session-scoped parquet schema reuse (guide §1.2 driver floor):
     * `spark.read.parquet(path)` re-runs schema inference — DataSource
     * resolution + a footer read — on EVERY call, measured at 70–98 ms
-    * per call (tools.FloorProbe), which IS the build cost of the
-    * catalog's sub-0.5 s tail (1–3 loads per query). A catalog table in
-    * any production deployment carries its schema in the metastore and
-    * never pays this; this cache is the bare-path equivalent: the first
-    * load of a (path, dir-mtime) in a session infers and remembers the
-    * SCHEMA — metadata only, never rows — and later loads pass it
-    * explicitly, skipping inference. Keyed per SESSION (a WeakHashMap,
-    * like Spark's own FileStatusCache scoping) so cross-session conf
-    * differences (e.g. nanosAsLong) cannot leak a schema, and by the
-    * file's mtime so an overwritten fixture re-infers. Results are
-    * unchanged by construction — the explicit schema IS the inferred
-    * one. `spark.graft.schemaCache=off` disables (the A/B lever). */
+    * per call against 6–14 ms cached (plans/MEASUREMENTS.md; re-measure
+    * with the per-table line of `tools.Profile time`), which IS the build
+    * cost of the catalog's sub-0.5 s tail (1–3 loads per query). A catalog
+    * table in any production deployment carries its schema in the
+    * metastore and never pays this; this cache is the bare-path
+    * equivalent: the first load of a path in a session infers and
+    * remembers the SCHEMA — metadata only, never rows — and later loads
+    * pass it explicitly, skipping inference. Keyed per SESSION (a
+    * WeakHashMap, like Spark's own FileStatusCache scoping) so
+    * cross-session conf differences (e.g. nanosAsLong) cannot leak a
+    * schema, and by [[listingSignature]] so any rewrite re-infers.
+    * Results are unchanged by construction — the explicit schema IS the
+    * inferred one. */
   private val schemaCache =
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, Long),
+      java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, Long, Long)]),
         org.apache.spark.sql.types.StructType]]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     cachedRead(spark, s"$dir/$name.parquet")
 
+  /** (name, size, mtime) of the path and, for a directory, of each entry
+    * in it: one listing. A directory's own mtime moves only when entries
+    * are added or removed, so an in-place part-file overwrite is caught
+    * by the entry's size/mtime, not the directory's. */
+  private def listingSignature(path: String): Seq[(String, Long, Long)] = {
+    val f = new java.io.File(path)
+    def sig(e: java.io.File) = (e.getName, e.length(), e.lastModified())
+    sig(f) +: Option(f.listFiles()).toSeq.flatten.map(sig).sortBy(_._1)
+  }
+
   /** The schema-reusing parquet read behind [[load]] — also serves the
     * streaming source's per-drain schema inference
     * ([[graft.streaming.StreamMonitor.readEventsStream]]). */
   private[graft] def cachedRead(spark: SparkSession, path: String): DataFrame = {
-    if (spark.conf.getOption("spark.graft.schemaCache").contains("off"))
-      return spark.read.parquet(path)
     val perSession = schemaCache.synchronized {
       var m = schemaCache.get(spark)
       if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[(String, Long),
+        m = new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, Long, Long)]),
           org.apache.spark.sql.types.StructType]()
         schemaCache.put(spark, m)
       }
       m
     }
-    val key = (path, new java.io.File(path).lastModified())
+    val key = (path, listingSignature(path))
     val cached = perSession.get(key)
     if (cached == null) {
       val df = spark.read.parquet(path)

@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // write timestamps as TIMESTAMP_MICROS (not INT96) so the dumped
-      // schema matches DuckDB's TIMESTAMP in the driver's compare
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    // ERROR: checkpoint lineage-truncation WARNs would flood the driver's
-    // captured output tail (same rationale as Bench)
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Self-describing failure record: r11's fixture change broke 7 queries
     // at plan time and they simply vanished from the driver's correctness

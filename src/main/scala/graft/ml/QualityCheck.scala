@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The data-quality entry point — the engine-side analog of the reference's
@@ -102,12 +102,7 @@ object QualityCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC") // normalizeTs/Date contract
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-quality-check")
     // baseline = seed 42 generation; "today's data" = a drifted generation
     val numeric = Seq("tenure", "monthly_charges", "total_charges",
       "num_support_tickets", "avg_monthly_usage_gb")

@@ -161,15 +161,7 @@ object RunPipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC") // normalizeTs/Date contract
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+    val spark = graft.GraftSession.local("graft-churn-pipeline")
     val config = if (args.nonEmpty) PipelineConfig.load(args(0)) else PipelineConfig()
     val result = run(spark, config)
     val scoresJson = result.scores.map(s =>

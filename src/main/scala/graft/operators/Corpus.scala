@@ -72,10 +72,10 @@ object Corpus {
     * sparser selection drops sub-span shared runs). w=9 is where the
     * winnowed pipeline is simultaneously cheaper at scale AND
     * agreement-tight; at fixture scale (sf0.001/sf0.01) its winner set
-    * is bit-identical to exact d43's, same as w=4 (WinnowKProbe sweeps,
-    * round 16). Detection guarantee at the declared granularity: any
-    * shared run of w+k−1 = 68 chars (≈ 13.6 tokens vs d43's 12-token
-    * evidence bar) still collides. */
+    * is bit-identical to exact d43's, same as w=4 (the round-16 sweep;
+    * CorpusSpec pins the agreement bands). Detection guarantee at the
+    * declared granularity: any shared run of w+k−1 = 68 chars (≈ 13.6
+    * tokens vs d43's 12-token evidence bar) still collides. */
   def matchedWinnowW: Int = 2 * charsPerToken - 1
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -90,8 +90,9 @@ object Corpus {
   private[graft] val stageStrategyOverride =
     new scala.util.DynamicVariable[Option[String]](None)
 
-  /** The measured dup-density knee (ScaleProbe's 10×-amplified sf0.1,
-    * SURVEY §7.5 item 5): past ~1 candidate edge per kept doc the default
+  /** The measured dup-density knee (the 10×-amplified sf0.1 of
+    * plans/MEASUREMENTS.md, SURVEY §7.5 item 5): past ~1 candidate edge
+    * per kept doc the default
     * localCheckpoint strategy holds the exploded evidence stages as
     * deserialized heap blocks and thrashes (d43 chain: 39 s local vs
     * 12.8 s reliable), while serialized/file blocks (`disk`/`reliable`)
@@ -101,10 +102,12 @@ object Corpus {
     *
     * Re-deriving on different hardware: the 1.0 figure is a HOST
     * measurement (this container's heap/disk balance), not a constant of
-    * the algorithm. On a new cluster, re-run ScaleProbe's crossover
-    * block (local-vs-disk d43 chain on the 10×-amplified corpus) and set
-    * the knee to the edges/doc where the disk strategy first wins; the
-    * 40× regime gap means even a rough re-measurement lands safely. */
+    * the algorithm. On a new cluster, build the 10×-amplified corpus
+    * (recipe in plans/MEASUREMENTS.md), run `tools.Profile time
+    * d43_training_sequences --sf <amplified dir> --ab
+    * spark.graft.stageStorage=local,disk` and set the knee to the
+    * edges/doc where the disk strategy first wins; the 40× regime gap
+    * means even a rough re-measurement lands safely. */
   private[graft] val denseKneeEdgesPerDoc = 1.0
 
   /** Probe sampling fraction: the density estimate runs the pipeline's
@@ -267,7 +270,7 @@ object Corpus {
     * race to compute the stage.
     *
     * Strategy choice is a PERFORMANCE knob too, not only durability: on a
-    * dup-dense 50k-doc corpus (ScaleProbe's 10×-amplified sf0.1) the d43
+    * dup-dense 50k-doc corpus (the 10×-amplified sf0.1) the d43
     * chain measured ~39 s under the default `local` strategy vs 12.8 s
     * under `reliable` — the default's localCheckpoint holds the exploded
     * fingerprint stage as MEMORY_AND_DISK deserialized blocks, which
@@ -531,10 +534,11 @@ object Corpus {
     // audit's 6-branch union job evaluates the same sum as a PARALLEL
     // task against a small parquet. At cluster scale the trade reverses —
     // the re-scan is a full extra corpus pass and scans are wide — so an
-    // at-100TB deployment should re-apply the observation form (kept in
-    // tools.ObsProbe; beware: use observe(name)/qe.observedMetrics, NOT
-    // an Observation object, whose ObservationManager registration is
-    // non-serializable session state that breaks ML-summary closures).
+    // at-100TB deployment should re-apply the observation form (finding
+    // in plans/MEASUREMENTS.md; beware: use observe(name)/
+    // qe.observedMetrics, NOT an Observation object, whose
+    // ObservationManager registration is non-serializable session state
+    // that breaks ML-summary closures).
     // one base-table scan, materialized: feeds the edge evidence, the
     // winner join, and chunking (three consumers — without this the scan
     // would re-run per consumer; plan-asserted in CorpusSpec)

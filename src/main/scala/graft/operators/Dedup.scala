@@ -343,7 +343,7 @@ object Dedup {
       // applied to whole jobs): the eager materialization of every
       // stageMaterialize strategy executes this dataset's OWN
       // QueryExecution, so the CollectMetrics accumulator is readable
-      // synchronously afterwards (probed in tools.ObsProbe) and the
+      // synchronously afterwards (plans/MEASUREMENTS.md) and the
       // loop-control count no longer needs its own follow-up job — one
       // job per round instead of two. Deliberately the observe(name)
       // form, NOT an Observation object: Observation registers with the

@@ -92,9 +92,10 @@ object QualityModel {
     * 2 label rows × [count + 15 per-bin counts]. Package-private so tests
     * can assert its PLAN shape (map-side partial aggregation, no window)
     * directly — the declared d50 catalog entry runs [[train]] eagerly at
-    * query-construction time, so catalog-wide plan tooling (DumpPlans,
-    * PlanLintSpec) only ever sees the scoring projection, never this
-    * aggregate; QualityModelSpec covers that blind spot against it. */
+    * query-construction time, so catalog-wide plan tooling
+    * (`tools.Profile plans`, PlanLintSpec) only ever sees the scoring
+    * projection, never this aggregate; QualityModelSpec covers that blind
+    * spot against it. */
   private[graft] def trainingAggregate(docs: DataFrame): DataFrame = {
     val aggs = count(lit(1)).as("__n") +:
       features.flatMap { case (f, nb) =>

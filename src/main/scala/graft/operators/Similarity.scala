@@ -80,8 +80,8 @@ object Similarity {
     // whenever the candidate pool is smaller than k
     val nonNull = scored.where(col(scoreCol).isNotNull)
     // spark.graft.topkPrune=off bypasses the bounded pre-selection — an
-    // A/B lever for ScaleProbe's shuffle-volume measurement and the
-    // parity spec, never for production (the bloomPrune precedent)
+    // A/B lever (`tools.Profile time --ab spark.graft.topkPrune=on,off`)
+    // and the parity spec, never for production (the bloomPrune precedent)
     val pruned =
       if (scored.sparkSession.conf.get("spark.graft.topkPrune", "on") == "off")
         nonNull
@@ -99,7 +99,8 @@ object Similarity {
   /** Partition-local bounded selection feeding [[topKPerQuery]]'s rank
     * exchange: keep the best `k` candidates per query WITHIN each input
     * partition (a narrow mapPartitions, no shuffle), so the exchange
-    * carries O(partitions · queries · k) rows. Note (ScaleProbe r19):
+    * carries O(partitions · queries · k) rows. Note (r19, figures in
+    * plans/MEASUREMENTS.md):
     * Spark's own WindowGroupLimit already pushes a map-side group limit
     * below the rank exchange, so the raw shuffle-volume bound is NOT
     * unique to this operator — the measured win is (a) replacing the
@@ -869,8 +870,8 @@ object Similarity {
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String): Array[Array[Double]] =
     // schema-cached read (Tables.cachedRead, r21): artifact loads paid
-    // ~80 ms of per-call schema inference; (session, path, mtime)-keyed,
-    // so a rewritten artifact re-infers
+    // ~80 ms of per-call schema inference; keyed by session, path and
+    // file listing, so a rewritten artifact re-infers
     graft.Tables.cachedRead(spark, path)
       .orderBy(col("cell")).collect()
       .map(_.getSeq[Double](1).toArray)
@@ -1754,12 +1755,12 @@ object Similarity {
   /** Load a persisted PQ codes relation (inverse of [[savePqCodes]]). */
   def loadPqCodes(spark: org.apache.spark.sql.SparkSession,
                   path: String): DataFrame =
-    graft.Tables.cachedRead(spark, path) // schema-cached, mtime-keyed (r21)
+    graft.Tables.cachedRead(spark, path) // schema-cached, listing-keyed
 
   /** Load persisted PQ codebooks (inverse of [[savePqCodebooks]]). */
   def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
                       path: String): Array[Array[Array[Double]]] =
-    graft.Tables.cachedRead(spark, path) // schema-cached, mtime-keyed (r21)
+    graft.Tables.cachedRead(spark, path) // schema-cached, listing-keyed
       .orderBy(col("sub"), col("code")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)

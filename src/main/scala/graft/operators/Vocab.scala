@@ -63,14 +63,14 @@ object Vocab {
     * rationale), and the merge loop below is INCREMENTAL — a full
     * recount per round (the reference shape, kept as
     * [[bpeTrainMergesNaive]] and pinned bit-identical by VocabSpec +
-    * the ScaleProbe `bpe` block) costs O(types · wordLen) PER MERGE,
+    * the 10⁵-type measurement) costs O(types · wordLen) PER MERGE,
     * which at a production vocabulary (10⁵ word types × 32k merges) is
     * hours on one core. This loop instead maintains pair counts and a
     * pair → word-occurrence index, touching only the words that CONTAIN
     * the merged pair each round (Zipf corpora: a vanishing fraction past
     * the head merges), with a lazy max-heap for argmax selection —
-    * measured at 10⁵ word types (ScaleProbe `bpe`, figures in that
-    * block): the naive loop's per-merge wall makes 32k merges a
+    * measured at 10⁵ word types (figures in plans/MEASUREMENTS.md): the
+    * naive loop's per-merge wall makes 32k merges a
     * multi-hour job while the incremental one stays in driver
     * milliseconds-per-merge, the same published shape HF tokenizers /
     * subword-nmt's caching trainer use. Selection is EXACTLY the naive
@@ -181,7 +181,7 @@ object Vocab {
 
   /** REFERENCE implementation (the textbook full-recount loop) — kept,
     * like assignCellsLiteral, as the independent second implementation
-    * the parity spec and the ScaleProbe `bpe` block pin
+    * the parity spec and the 10⁵-type measurement pin
     * [[bpeTrainMerges]] bit-identical against. O(types · wordLen) per
     * merge: correct, and exactly the driver knee the incremental loop
     * removes. */

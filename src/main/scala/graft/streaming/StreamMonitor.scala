@@ -209,8 +209,8 @@ object StreamMonitor {
     val schema =
       // schema-cached read (Tables.cachedRead, r21): this inference runs
       // per drain invocation and cost ~80 ms of pure footer/DataSource
-      // re-resolution each time; the cache is (session, path, mtime)-keyed
-      // so a landed file that CHANGES the directory re-infers
+      // re-resolution each time; the cache is keyed by session, path and
+      // file listing, so a landed file that CHANGES the directory re-infers
       try graft.Tables.cachedRead(spark, dir).schema
       catch {
         case _: org.apache.spark.sql.AnalysisException => StructType(Seq(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted reproduction of the full-grid failure mode: one 200-round GBT
   * fit (the deepest boosting lineage the reference grid produces) +
   * transform + score. Before the `setCheckpointInterval(10)` fix this
@@ -10,15 +8,8 @@ import org.apache.spark.sql.SparkSession
   * `sbt "runMain graft.tools.GbtLineageCheck"` — expect one "ok" line. */
 object GbtLineageCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC") // normalizeTs/Date contract
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("gbt_ckpt").toString)
+    // the factory sets the checkpoint dir the interval-10 lineage cut needs
+    val spark = graft.GraftSession.local("graft-gbt-lineage-check")
     val raw = graft.ml.DataGen.generate(spark, 4000, 42L)
     val (featurized, _) = graft.ml.FeaturePipeline.fit(raw)
     val train = featurized.select("features", "label").cache()

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 
 /** Low-core scaling probe — the kernel-bound arm the r20 verdict asked
   * for (item 2): the driver's 8-vs-32-CPU bench comparison is flat at
@@ -37,22 +36,12 @@ object ScalingProbe {
     "d17_simhash_neardups", "d28_winnow_neardups", "d24_tfidf_top_terms",
     "d29_unigram_surprisal", "d5_quality_features")
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(s)
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val amp = args.lift(0).flatMap(_.toIntOption).getOrElse(8)
     val srcDir = "/root/testdata/sf0.1"
     val outDir = "/tmp/graft_scaling_fixture"
     locally { // phase 1: the multi-row-group amplified fixture
-      val spark = session(32)
+      val spark = GraftSession.local("graft-scaling-probe", 32)
       val docs = Tables.documents(spark, srcDir)
       val amped = (0 until amp).map { i =>
         docs.select(
@@ -72,7 +61,7 @@ object ScalingProbe {
     }
     val results = scala.collection.mutable.Map.empty[(String, Int), Double]
     for (cpus <- Seq(8, 32)) {
-      val spark = session(cpus)
+      val spark = GraftSession.local("graft-scaling-probe", cpus)
       queries.foreach { q =>
         SparkEntry.queries(q)(spark, outDir).count() // warm codegen/JIT
         val t0 = System.nanoTime(); SparkEntry.queries(q)(spark, outDir).count()

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan lint over EVERY declared query: builds each plan at sf0.001 and
@@ -173,11 +175,25 @@ class PlanLintSpec extends AnyFunSuite {
     assert(finalPlan.contains("BroadcastHashJoin"), finalPlan.take(500))
   }
 
-  /** Queries that legitimately scan the same table more than once — the
-    * full rationale lives in [[graft.tools.ScanAudit]]'s scaladoc
-    * (two-pass fit/transform contracts, id-pruned query-side reads,
-    * bounded self-pair joins, multi-branch semantics demos, two roles).
-    * Everything else must be single-scan per table. */
+  /** Queries that legitimately scan the same table more than once.
+    * Everything else must be single-scan per table: a repeated scan is
+    * either a deliberate two-pass algorithm or the no-CSE-across-reuse bug
+    * class (round 4 fixed two: d36 re-executed its entry chain per step,
+    * v2 ran a separate total-count pass). The justified cases:
+    *  - d13/d21: documented BOUNDED self-pair cross joins (both sides
+    *    id-capped);
+    *  - d14/d16: id-pruned query-side reads (PushedFilters: vec_id <
+    *    nQueries) plus ONE full bucket/verify pass each — re-fetching
+    *    embeddings by scan beats shuffling vectors through distinct;
+    *  - f5/m1/m2: fit + transform, the two-pass sklearn contract (fit
+    *    statistics, then apply);
+    *  - x21: scalar-subquery SQL surface (the subquery owns its scan);
+    *  - x24/x8: union and INTERSECT semantics demos, each set operand
+    *    owns its (filter-pushed) scan;
+    *  - x28: nation joined in two roles (cust-side + supp-side);
+    *  - x34: two-level bucketed as-of resolution (SURVEY §7.5);
+    *  - d44/d49/d62: one file read in two ROLES, each side from its own
+    *    filter-pushed scan. */
   private val multiScanAllowed: Map[String, Set[String]] = Map(
     "d13_jaccard_pairs" -> Set("documents"),
     "d14_cosine_topk" -> Set("embeddings"),
@@ -210,8 +226,8 @@ class PlanLintSpec extends AnyFunSuite {
     * fixed regression — removing a load-bearing checkpoint (the d36 bug's
     * shape) resurfaces the FileScan lines and fails here — but a NEW
     * query that multi-scans before its checkpoint passes silently; v10
-    * covers that case with a dedicated pre-checkpoint assertion above,
-    * and `graft.tools.ScanAudit` is the manual sweep for the rest. */
+    * covers that case with a dedicated pre-checkpoint assertion above;
+    * `tools.Profile plans all` dumps every plan for a manual read. */
   test("no declared query re-scans a table outside the documented multi-scan set") {
     val pathRe = "file:[^\\]\\s,]*?/(\\w+)\\.parquet".r
     val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
@@ -330,5 +346,20 @@ class PlanLintSpec extends AnyFunSuite {
     // CTE bodies must reference the catalog-qualified view so a shadow CTE
     // under WITH RECURSIVE is not a self-reference
     assert(SparkEntry.withCanon("SELECT 1").contains("FROM main.region"))
+  }
+
+  test("source lint: SparkSession.builder appears under src/main only in GraftSession") {
+    // one session factory: a second builder is how defaults drift (width,
+    // log level, time zone). The test fixture keeps its own builder for
+    // task retries; this lint covers src/main only.
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val walk = java.nio.file.Files.walk(root)
+    val builders =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .filter(f => java.nio.file.Files.readString(f).contains("SparkSession.builder"))
+        .map(_.getFileName.toString)
+      finally walk.close()
+    assert(builders == Seq("GraftSession.scala"), builders)
   }
 }

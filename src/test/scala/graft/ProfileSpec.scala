@@ -1,0 +1,54 @@
+package graft
+
+import java.nio.file.Files
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.tools.Profile
+
+/** The profiler's modes on the shared test session: `time` records, the
+  * `--ab` arm interleaving, and `plans` files. */
+class ProfileSpec extends AnyFunSuite {
+  import SparkFixture.{spark, sfDir}
+
+  private val quiet: String => Unit = _ => ()
+
+  test("time: one record per query, build + exec within wall, d43 runs more jobs than x1") {
+    val names = Seq("x1_revenue_by_nation", "d43_training_sequences")
+    val recs = Profile.time(spark, names, sfDir, reps = 1, log = quiet)
+    assert(recs.map(_.query) == names)
+    recs.foreach { r =>
+      assert(r.error.isEmpty, r.error)
+      assert(r.rows > 0, r)
+      assert(r.buildS + r.execS <= r.wallS, r)
+      assert(r.jobs.nonEmpty && r.stages >= 1 && r.tasks >= r.stages, r)
+      assert(r.gapS >= 0.0, r)
+    }
+    val Seq(x1, d43) = recs
+    assert(d43.jobs.size > x1.jobs.size, (x1.jobs.size, d43.jobs.size))
+  }
+
+  test("time --ab: arm order alternates across reps, both arms return the same rows") {
+    val ab = Profile.Ab.parse("spark.graft.topkPrune=on,off")
+    val before = spark.conf.getOption(ab.key)
+    val recs = Profile.time(spark, Seq("d14_cosine_topk"), sfDir, reps = 2,
+      ab = Some(ab), log = quiet)
+    assert(recs.map(r => (r.rep, r.arm)) ==
+      Seq((1, Some("on")), (1, Some("off")), (2, Some("off")), (2, Some("on"))))
+    assert(recs.forall(_.error.isEmpty), recs.flatMap(_.error))
+    assert(recs.map(_.rows).distinct == Seq(recs.head.rows) && recs.head.rows > 0)
+    assert(spark.conf.getOption(ab.key) == before, "ab key not restored")
+    val (perQuery, median) = Profile.abRatios(recs, ab)
+    assert(perQuery.map(_._1) == Seq("d14_cosine_topk") && median > 0.0)
+  }
+
+  test("plans: one formatted-plan file per query") {
+    val out = Files.createTempDirectory("graft_plans")
+    val names = Seq("x1_revenue_by_nation", "d14_cosine_topk")
+    val files = Profile.plans(spark, names, sfDir, out, "t")
+    assert(files.map(_.getFileName.toString) == names.map(n => s"${n}_t.txt"))
+    val listed = Files.list(out)
+    try assert(listed.count() == names.size) finally listed.close()
+    files.foreach(f => assert(Files.readString(f).startsWith("== Physical Plan =="), f))
+  }
+}

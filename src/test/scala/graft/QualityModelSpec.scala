@@ -18,7 +18,7 @@ class QualityModelSpec extends AnyFunSuite {
   private def docs = Tables.documents(spark, sfDir)
 
   test("training aggregate plan: map-side partial aggregation, one " +
-      "label-keyed exchange, no window (covers the DumpPlans/PlanLint " +
+      "label-keyed exchange, no window (covers the Profile-plans/PlanLint " +
       "blind spot — the declared d50 entry trains eagerly at query " +
       "construction, so catalog-wide plan tooling only ever sees the " +
       "score projection, never this aggregate)") {

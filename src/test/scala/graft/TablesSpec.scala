@@ -367,4 +367,31 @@ class TablesSpec extends AnyFunSuite {
           s"$t.$c embedding")
     }
   }
+
+  test("schema cache: an in-place part-file overwrite re-infers the schema") {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("graft_schema_cache")
+    val target = root.resolve("t.parquet")
+    val other = root.resolve("other.parquet")
+    Seq(1L, 2L).toDF("x").coalesce(1).write.parquet(target.toString)
+    Seq("a", "b").toDF("y").coalesce(1).write.parquet(other.toString)
+    assert(Tables.load(spark, root.toString, "t").schema.fieldNames.toSeq == Seq("x"))
+    // the single part file and its checksum, overwritten IN PLACE (same
+    // names), so the table directory's own mtime never moves
+    def entry(dir: Path, crc: Boolean): Path = {
+      val l = Files.list(dir)
+      try l.toArray.map(_.asInstanceOf[Path]).filter { f =>
+        val n = f.getFileName.toString
+        n.endsWith(".parquet.crc") == crc && n.endsWith(".parquet") != crc
+      }.toSeq match { case Seq(f) => f }
+      finally l.close()
+    }
+    val dirMtime = Files.getLastModifiedTime(target)
+    for (crc <- Seq(false, true))
+      Files.write(entry(target, crc), Files.readAllBytes(entry(other, crc)))
+    Files.setLastModifiedTime(target, dirMtime)
+    val reloaded = Tables.load(spark, root.toString, "t")
+    assert(reloaded.schema.fieldNames.toSeq == Seq("y"))
+    assert(reloaded.as[String].collect().sorted.toSeq == Seq("a", "b"))
+  }
 }
