@@ -10,10 +10,13 @@ import org.apache.spark.sql.SparkSession
   *    re-label is correct only under UTC (their documented contract);
   *  - parquet timestamps written as TIMESTAMP_MICROS (not INT96), so a
   *    dumped schema matches DuckDB's TIMESTAMP in the oracle compare;
-  *  - log level ERROR: every localCheckpoint emits a lineage-truncation
-  *    WARN that sbt routes to stderr, flooding a captured output tail;
-  *  - a temp checkpoint dir, for `stageStorage=reliable` and the GBT
-  *    lineage cut;
+  *  - log level ERROR: every eager stage under the default `local`
+  *    strategy emits a lineage-truncation WARN that sbt routes to stderr,
+  *    flooding a captured output tail;
+  *  - a temp checkpoint dir, so `spark.graft.stageStorage=reliable` works
+  *    out of the box for every eager stage of every operator
+  *    ([[graft.Materialize]], the one module that applies the strategy)
+  *    and for the GBT lineage cut;
   *  - the graft SQL functions registered.
   * The test fixture keeps its own builder: it alone needs task retries. */
 object GraftSession {

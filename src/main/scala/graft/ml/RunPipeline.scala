@@ -44,10 +44,10 @@ object RunPipeline {
     // 7. explain — E1 dispatch (`explainability.py:15-39`): exact linear
     // SHAP for linear champions, exact TreeSHAP for tree ensembles
     championModel.foreach { case (c, model) =>
-      // checkpointed: the sample feeds means/TreeSHAP/row-count, and a
+      // pinned: the sample feeds means/TreeSHAP/row-count, and a
       // Bernoulli sample re-evaluated across jobs is not guaranteed stable
-      val sample = Shap.sampleRows(testC, config.shapSampleSize, config.randomState)
-        .localCheckpoint(true)
+      val sample = graft.Materialize.pin(
+        Shap.sampleRows(testC, config.shapSampleSize, config.randomState))
       val (shapLong, expectedValue) = model match {
         case lr: LogisticRegressionModel =>
           // ONE background-means pass shared by the expected value

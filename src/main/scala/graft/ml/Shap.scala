@@ -78,14 +78,13 @@ object Shap {
 
   /** E2 — reference shape (`explainability.py:64-83`): sample the relation,
     * use THAT sample as both the explained set and the background (the
-    * reference explainer does exactly this). The sample is checkpointed:
-    * it feeds the means aggregate and the attribution projection, and a
-    * Bernoulli sample re-evaluated across jobs is not guaranteed the same
-    * rows (and a `.cache()` here leaked — the returned DataFrame could
-    * never safely unpersist it; checkpoint blocks are reference-tracked). */
+    * reference explainer does exactly this). The sample is pinned
+    * ([[graft.Materialize.pin]]): it feeds the means aggregate and the
+    * attribution projection, and a Bernoulli sample re-evaluated across
+    * jobs is not guaranteed the same rows. */
   def linearShap(model: LogisticRegressionModel, df: DataFrame,
                  sampleSize: Int, seed: Long = 42L): DataFrame = {
-    val sample = sampleRows(df, sampleSize, seed).localCheckpoint(true)
+    val sample = graft.Materialize.pin(sampleRows(df, sampleSize, seed))
     linearShapOn(model, sample, backgroundMeans(sample, model.coefficients.size))
   }
 

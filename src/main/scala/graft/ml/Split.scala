@@ -29,17 +29,17 @@ object Split {
     * and `__sr_n` (the stratum's row count).
     *
     * Materialization is CORRECTNESS here, twice over (the r14 batch-6b
-    * contract): (1) the `rand(seed)` draw column is pinned by an eager
-    * localCheckpoint BEFORE the range shuffle — rand is seeded by
+    * contract): (1) the `rand(seed)` draw column is pinned
+    * ([[graft.Materialize.pin]]) BEFORE the range shuffle — rand is seeded by
     * per-partition row order, which is not stable across jobs, and the
     * range partitioner's sampling pass plus the shuffle itself are
     * separate jobs (unpinned, they could see different draws, and a
     * caller's `.cache()` would silently RECOMPUTE different draws on
     * eviction — train/test overlap, CV leakage); (2) the sorted layout is
-    * RDD-localCheckpointed so the counts pass and the rank-assign pass
-    * walk the SAME physical row order. Checkpoint-block loss fails loudly
-    * instead of recomputing. The pinned draw's blocks are RELEASED as soon
-    * as the sorted layout's own checkpoint materializes (the counts
+    * pinned too ([[graft.Materialize.pinRows]]) so the counts pass and the
+    * rank-assign pass walk the SAME physical row order. Block loss fails
+    * loudly instead of recomputing. The pinned draw's blocks are RELEASED
+    * as soon as the sorted layout's own pin materializes (the counts
     * collect below) — repeated calls (grid search) never accumulate
     * block-store footprint beyond one sorted layout per live result.
     *
@@ -52,33 +52,28 @@ object Split {
       "input already carries a __sr_* working column")
     val spark = df.sparkSession
     val labelIdx = df.schema.fieldIndex(labelCol)
-    val nParts =
-      if (partitions > 0) partitions
-      else math.max(spark.sessionState.conf.numShufflePartitions,
-                    df.rdd.getNumPartitions)
-    val pinned = df.withColumn("__sr_r", rand(seed)).localCheckpoint(true)
-    val rdd = pinned
+    val nParts = graft.operators.Metrics.derivedPartitions(df, partitions)
+    val pinned = graft.Materialize.pin(df.withColumn("__sr_r", rand(seed)))
+    val sorted = pinned
       .repartitionByRange(nParts, col(labelCol), col("__sr_r"))
       .sortWithinPartitions(col(labelCol), col("__sr_r"))
-      .rdd
-    rdd.localCheckpoint() // the two passes below share this sorted layout
     // tiny collect: one (stratum → count) map per partition. Option-wraps
     // the label value so a NULL-label stratum is a first-class key.
-    val counts: Array[(Int, Map[Option[Any], Long])] = rdd
-      .mapPartitionsWithIndex { (pid, it) =>
+    val (rdd, counts) = graft.Materialize.labelled(sorted) {
+      val rdd = graft.Materialize.pinRows(sorted)
+      (rdd, rdd.mapPartitionsWithIndex { (pid, it) =>
         val m = scala.collection.mutable.LinkedHashMap.empty[Option[Any], Long]
         it.foreach { r =>
           val k = Option(r.get(labelIdx))
           m.update(k, m.getOrElse(k, 0L) + 1L)
         }
         Iterator.single((pid, m.toMap))
-      }.collect()
-    // the collect above materialized the sorted layout's checkpoint, which
-    // truncated its lineage to `pinned` — release the pinned draw's blocks
-    // now instead of waiting for the ContextCleaner to GC the reference
-    pinned.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+      }.collect())
+    }
+    // the collect above filled the sorted layout's pin, which cut its
+    // lineage to `pinned` — release the pinned draw's blocks now instead of
+    // waiting for the ContextCleaner to GC the reference
+    graft.Materialize.release(pinned)
     val labels = counts.flatMap(_._2.keys).distinct
     val nPerLabel: Map[Option[Any], Long] = labels.map { l =>
       l -> counts.map(_._2.getOrElse(l, 0L)).sum

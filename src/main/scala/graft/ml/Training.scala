@@ -103,7 +103,7 @@ object Training {
                  parallelism: Int = 4): (TrainedModel, Seq[CvResult]) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    // foldAssign localCheckpoints internally (fold-id stability across the
+    // foldAssign pins its draws internally (fold-id stability across the
     // many grid×fold jobs — see its scaladoc); a .cache() on top would
     // just store a second copy
     val folded = Split.foldAssign(train.select("features", "label"), "label", cvFolds, seed)

@@ -22,11 +22,10 @@ import org.apache.spark.sql.functions._
   * token window — engine-portable, so the whole chain is SQL-checkable.
   *
   * Scale shape: quality filter is one codegen'd scan; the kept relation is
-  * materialized ONCE ([[Corpus.stageMaterialize]] — localCheckpoint by
-  * default, `persist(DISK_ONLY)` under `spark.graft.stageStorage=disk`
-  * for fault-tolerant cluster runs, reliable `checkpoint()` under
-  * `=reliable` for runs that must survive executor-host loss) and every
-  * later stage derives from it, so the base table is scanned exactly once. Shingling explodes O(tokens) rows, the df cap and
+  * materialized ONCE ([[graft.Materialize.stage]], under the module-wide
+  * `spark.graft.stageStorage` strategy that every eager stage of every
+  * operator follows) and every later stage derives from it, so the base
+  * table is scanned exactly once. Shingling explodes O(tokens) rows, the df cap and
   * the pair generation are ONE map-side-combined aggregate pass (a capped
   * per-shingle doc-list collect with bounded fan-out per key — see
   * [[exactShingleEdges]]), components shuffle one (id, comp) pair
@@ -80,20 +79,10 @@ object Corpus {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Thread-scoped stage-strategy override, set by the corpus pipeline's
-    * dense-corpus auto-selection ([[denseCorpusStrategy]]) for the
-    * duration of ONE pipeline construction. A DynamicVariable, not a
-    * session conf write: concurrent pipeline invocations on the same
-    * session (ConcurrencySpec's regime) must not see each other's
-    * decisions. All the pipeline's materializations are EAGER, so the
-    * `withValue` scope covers every storage decision of the run. */
-  private[graft] val stageStrategyOverride =
-    new scala.util.DynamicVariable[Option[String]](None)
-
   /** The measured dup-density knee (the 10×-amplified sf0.1 of
     * plans/MEASUREMENTS.md, SURVEY §7.5 item 5): past ~1 candidate edge
     * per kept doc the default
-    * localCheckpoint strategy holds the exploded evidence stages as
+    * `local` strategy holds the exploded evidence stages as
     * deserialized heap blocks and thrashes (d43 chain: 39 s local vs
     * 12.8 s reliable), while serialized/file blocks (`disk`/`reliable`)
     * are simultaneously FASTER and fault-tolerant. Normal corpora sit
@@ -142,13 +131,12 @@ object Corpus {
     * decision (and therefore every declared query's output) replays
     * identically under the invariance gate.
     *
-    * Scope note: the override covers every [[stageMaterialize]] call of
-    * the run — the kept relation, the exact path's exploded shingle
-    * stages, and the component loop's per-round labels. The winnowed
-    * path's interior `localCheckpoint`s ([[Dedup.winnowNearDups]]) stay
-    * in-memory by design: winnowing already ships ~2/(w+1) of the
-    * fingerprint density, and the measured knee that motivates the
-    * switch is the exact path's uncapped shingle stage.
+    * Scope note: the decision is installed as
+    * [[graft.Materialize.strategyOverride]] for the pipeline's
+    * construction, so it covers every eager stage the run builds — the
+    * kept relation, the component loop's per-round labels, and the
+    * stages inside whichever edge evidence `edgesOf` runs, exact or
+    * winnowed alike.
     *
     * Estimator bias, deliberate: the edge evidence runs with the
     * pipeline's own `maxDf` cap, but on the sample a df threshold of m
@@ -181,7 +169,7 @@ object Corpus {
   private[graft] def denseCorpusStrategy(
       docs0: DataFrame, edgesOf: DataFrame => DataFrame,
       probeKey: String = ""): Option[String] = {
-    val conf = docs0.sparkSession.conf.getOption("spark.graft.stageStorage")
+    val conf = graft.Materialize.configured(docs0.sparkSession)
     val explicitAuto = conf.contains("auto")
     if (conf.isDefined && !explicitAuto) return None
     val files = docs0.inputFiles
@@ -219,161 +207,10 @@ object Corpus {
           "this pipeline run (serialized DISK_ONLY stages: measured ~3x " +
           "faster than the in-memory default on dup-dense corpora AND " +
           "fault-tolerant; set spark.graft.stageStorage explicitly to " +
-          "override, and call Corpus.releaseStages when done)")
+          "override, and call Materialize.releaseStages when done)")
       Some("disk")
     } else if (explicitAuto) Some("local") else None
   }
-
-  /** Materializes a pipeline-stage intermediate that feeds 2+ consumers,
-    * so the work above it runs exactly once. Two strategies:
-    *
-    *  - default (`spark.graft.stageStorage` unset or `"local"`):
-    *    `localCheckpoint(eager = true)` — blocks live on executors with
-    *    the LINEAGE TRUNCATED. Fastest locally and what every plan
-    *    assertion in the test suite pins (downstream plans show zero file
-    *    scans). The cluster-scale caveats: (a) no fault tolerance — an
-    *    executor lost at hour N of a 100 TB run loses its partitions
-    *    irrecoverably and fails the job instead of recomputing; (b) the
-    *    stored relation here is the UNCAPPED exploded shingle/fingerprint
-    *    set (≈ corpus size × k before the df cap), so it must fit the
-    *    cluster's aggregate memory+disk block store.
-    *  - `spark.graft.stageStorage=disk`: `persist(DISK_ONLY)` — lineage
-    *    is KEPT (executor loss recomputes the lost partitions from the
-    *    scan) and blocks go to executor-local disk, trading re-read cost
-    *    for fault tolerance. This is the setting a long multi-hour
-    *    cluster run should use by default.
-    *  - `spark.graft.stageStorage=reliable`: `checkpoint(eager = true)` —
-    *    the stage is written to the context's checkpoint directory (HDFS /
-    *    object store on a cluster) and re-read from there, so it survives
-    *    even executor-HOST loss, which DISK_ONLY blocks do not (their
-    *    recovery path is recompute-from-lineage; fine for a lost executor,
-    *    wasteful at hour N of a 100 TB run when a whole host cycles).
-    *    Orchestration must have called `setCheckpointDir` first — the
-    *    operator deliberately does not invent a durable location; it fails
-    *    with a named error instead. Checkpoint files are NOT reclaimed by
-    *    [[releaseStages]] (they are files, not block-manager entries):
-    *    Spark deletes them only at context stop or, with
-    *    `spark.cleaner.referenceTracking.cleanCheckpoints=true`, at GC of
-    *    the RDD — directory lifecycle belongs to orchestration, same as
-    *    any job's scratch space. Scope of the guarantee: it covers the
-    *    STAGE relations this method materializes AND the interior
-    *    per-round materializations of the dedup component loop
-    *    ([[graft.operators.Dedup.connectedComponents]]), which dispatches
-    *    each round through the same strategy — under `reliable` the whole
-    *    pipeline, loop included, survives executor-host loss.
-    *
-    * Both strategies yield the same single-scan dataflow and BOTH are
-    * eager: under the disk strategy a `count()` materializes the blocks
-    * at plan-build time (matching `localCheckpoint(eager = true)`), so
-    * "computed exactly once" holds even when two downstream consumers
-    * fire their first actions concurrently — lazy persist would let both
-    * race to compute the stage.
-    *
-    * Strategy choice is a PERFORMANCE knob too, not only durability: on a
-    * dup-dense 50k-doc corpus (the 10×-amplified sf0.1) the d43
-    * chain measured ~39 s under the default `local` strategy vs 12.8 s
-    * under `reliable` — the default's localCheckpoint holds the exploded
-    * fingerprint stage as MEMORY_AND_DISK deserialized blocks, which
-    * thrash the heap once the candidate graph is dense, where
-    * disk/reliable hold serialized/file blocks. For large dup-dense
-    * corpora prefer `disk` or `reliable`: simultaneously fault-tolerant
-    * AND faster; the in-memory default is for interactive/small runs
-    * (where it wins on fixed cost — see the r13 parity figures).
-    *
-    * Unpersist contract (disk strategy): persisted stage blocks outlive
-    * the returned DataFrames — Spark only drops them at unpersist or
-    * session end — so repeated pipeline invocations in one long-lived
-    * session would accumulate DISK_ONLY copies of the uncapped exploded
-    * fingerprint sets. Orchestration must call [[releaseStages]] after
-    * materializing the pipeline output (Bench's per-query hygiene pass
-    * achieves the same blanket clear; the disk-strategy test asserts
-    * release empties the block store). The default local strategy needs
-    * no release beyond what the block manager reclaims. */
-  private[graft] def stageMaterialize(df: DataFrame): DataFrame = {
-    // label the materialization job by its output columns (guide §1.5 —
-    // a multi-job pipeline is unreadable in listeners/UI without it;
-    // thread-local, restored after the eager action)
-    val sc = df.sparkSession.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(
-      df.columns.take(6).mkString("mat[", ",", if (df.columns.length > 6) ",…]" else "]"))
-    try stageMaterializeImpl(df)
-    finally sc.setJobDescription(prev)
-  }
-
-  private def stageMaterializeImpl(df: DataFrame): DataFrame =
-    stageStrategyOverride.value
-      .orElse(df.sparkSession.conf.getOption("spark.graft.stageStorage"))
-      .getOrElse("local") match {
-      // bare `auto` outside a corpus-pipeline entry (an operator like
-      // connectedComponents invoked directly): no density probe ran, so
-      // no decision exists — fall back to the default. The pipeline
-      // entries always install a resolved override before their first
-      // materialization, so `auto` never reaches here from them.
-      case "auto" => df.localCheckpoint(true)
-      case "disk" =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        // register BEFORE the eager count: if the materialization job dies
-        // partway, the blocks its successful tasks already stored are still
-        // tracked, so releaseStages can reclaim them on the retry path.
-        // Loop consumers (the dedup component loop) ALSO unpersist their
-        // superseded rounds eagerly in-loop — double-unpersist is a no-op,
-        // and keeping every handle registered means the error path (loop
-        // raises mid-round) is still fully reclaimable via releaseStages.
-        persistedStages.synchronized {
-          persistedStages.getOrElseUpdate(df.sparkSession,
-            scala.collection.mutable.Buffer.empty) += p
-        }
-        p.count()
-        p
-      case "reliable" =>
-        // fail BEFORE the upstream work runs, with the fix in the message —
-        // checkpoint() itself would only throw when the first job is
-        // submitted, after the plan is built
-        if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-          throw new IllegalStateException(
-            "spark.graft.stageStorage=reliable requires a checkpoint " +
-              "directory: call spark.sparkContext.setCheckpointDir(<durable " +
-              "path>) before running the pipeline (on a cluster this must " +
-              "be HDFS / object storage, not a local path)")
-        // an unpersisted reliable checkpoint computes the stage TWICE:
-        // the eager count is one job, then RDD.doCheckpoint launches a
-        // second job that recomputes every partition from lineage to
-        // write the checkpoint files. For the uncapped exploded
-        // fingerprint stage that doubles the most expensive compute of
-        // the pipeline — so persist DISK_ONLY for the duration (count
-        // populates the blocks, the write job re-reads them) and drop
-        // the transient handle before returning, preserving the
-        // strategy's no-lingering-DISK_ONLY-handles contract
-        val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        try df.checkpoint(true)
-        finally p.unpersist(blocking = false)
-      case "local" => df.localCheckpoint(true)
-      case other =>
-        // fail loudly: a typo ('DISK', 'realiable') silently running the
-        // multi-hour job in the non-fault-tolerant default mode is exactly
-        // the class the reliable branch's early validation exists to stop
-        throw new IllegalArgumentException(
-          s"spark.graft.stageStorage='$other' is not a strategy: use " +
-            "'local' (default, executor-local checkpoint), 'disk' " +
-            "(DISK_ONLY persist, releaseStages reclaims), 'reliable' " +
-            "(durable checkpoint, requires setCheckpointDir), or 'auto' " +
-            "(corpus pipelines probe dup density and pick local vs disk)")
-    }
-
-  /** Disk-strategy stage handles per session, so [[releaseStages]] can
-    * unpersist exactly what this module persisted — never a caller's own
-    * cached relations. Entries live until released: the handles hold
-    * their session strongly (every Dataset does), so dropping a session
-    * WITHOUT calling releaseStages does not free anything — which is
-    * Spark's behavior anyway (cached relations live in the context-wide
-    * shared-state cache manager, not the session). [[releaseAllStages]]
-    * is the recovery hatch for orchestration that lost its session
-    * handles. */
-  private val persistedStages =
-    scala.collection.mutable.Map
-      .empty[org.apache.spark.sql.SparkSession,
-        scala.collection.mutable.Buffer[DataFrame]]
 
   /** Registry-independent construction of the native shingle expression —
     * same pattern as `Dedup.minhashSignature`: an `expr("shingle_md5s(…)")`
@@ -385,30 +222,6 @@ object Corpus {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.functions.ShingleMd5s(
       GraftColumnBridge.expression(textCol), k))
-  }
-
-  /** Unpersists every `stageStorage=disk` stage this module persisted for
-    * `spark` (see the contract on [[stageMaterialize]]). Call after the
-    * pipeline output is materialized; safe to call at any time — the
-    * stages' lineage is kept, so a still-running consumer recomputes from
-    * the scan rather than failing. */
-  def releaseStages(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val handles = persistedStages.synchronized {
-      persistedStages.remove(spark).getOrElse(Nil)
-    }
-    handles.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Releases the disk-strategy stages of EVERY session this module has
-    * persisted for — the recovery path when orchestration no longer holds
-    * the session that ran a pipeline. */
-  def releaseAllStages(): Unit = {
-    val handles = persistedStages.synchronized {
-      val all = persistedStages.values.flatten.toList
-      persistedStages.clear()
-      all
-    }
-    handles.foreach(_.unpersist(blocking = false))
   }
 
   /** The pipeline's stage intermediates — [[trainingSequences]] returns
@@ -506,43 +319,14 @@ object Corpus {
     // [[denseCorpusStrategy]]); every materialization below is eager,
     // hence inside the withValue scope
     val chosen = denseCorpusStrategy(docs0, edgesOf, probeKey)
-    stageStrategyOverride.withValue(chosen.orElse(stageStrategyOverride.value)) {
-    // audit-path raw observation (r21): the 00_raw (count, token-mass)
-    // pair rides the kept materialization's scan as an Observation, so
-    // the audit no longer RE-SCANS the base table — at cluster scale that
-    // re-scan is a full extra pass over the corpus, the only duplicated
-    // heavy work in the audit (stages 01–05 aggregate tiny checkpointed
-    // relations). Bit-identical: count and the integer token sum are
-    // order-independent and the coalesce matches the aggregate form.
-    // Only ONE observation on purpose — a full five-stage observation
-    // audit was implemented and measured ~0.7 s SLOWER at fixture scale
-    // (each Observation.get blocks on the async listener bus, which lags
-    // behind a ~20-job pipeline; 5 sequential waits beat the cheap
-    // checkpoint-scan aggregates they replaced) and was cut back to this.
-    // The CollectMetrics barrier below the quality filter costs that
-    // filter its scan pushdown ON THE AUDIT PATH ONLY — inherent:
-    // auditing raw mass requires reading every raw row anyway.
-    // Output-only callers (d43/d47) pass materializeForAudit = false and
-    // get the exact pre-r21 plans.
-    // r21 measured-and-REJECTED (the fan-out rule again): riding the
-    // audit's 00_raw (count, token-mass) pair on this scan as an observed
-    // metric — observe(name) + qe.observedMetrics, saving the audit's
-    // base-table re-scan — ran ~10% SLOWER on an interleaved same-host
-    // A/B (d45 min 2.51 s aggregate vs 2.78 s observed, two rounds each):
-    // the fixture's single-row-group scan is ONE task, so the observed
-    // tokenCount serializes onto the critical scan task, while the
-    // audit's 6-branch union job evaluates the same sum as a PARALLEL
-    // task against a small parquet. At cluster scale the trade reverses —
-    // the re-scan is a full extra corpus pass and scans are wide — so an
-    // at-100TB deployment should re-apply the observation form (finding
-    // in plans/MEASUREMENTS.md; beware: use observe(name)/
-    // qe.observedMetrics, NOT an Observation object, whose
-    // ObservationManager registration is non-serializable session state
-    // that breaks ML-summary closures).
+    graft.Materialize.strategyOverride.withValue(
+        chosen.orElse(graft.Materialize.strategyOverride.value)) {
+    // riding the audit's 00_raw pair on this scan as an observed metric
+    // was measured and rejected (plans/MEASUREMENTS.md, "Audit raw row")
     // one base-table scan, materialized: feeds the edge evidence, the
     // winner join, and chunking (three consumers — without this the scan
     // would re-run per consumer; plan-asserted in CorpusSpec)
-    val kept = stageMaterialize(docs0.filter(TextOps.qualityKeep)
+    val kept = graft.Materialize.stage(docs0.filter(TextOps.qualityKeep)
       .select(col("doc_id"), col("text"), col("source")))
     val edges = edgesOf(kept)
     val labels = Dedup.connectedComponents(
@@ -556,10 +340,10 @@ object Corpus {
     // suffix per branch (the dedup semi-join runs 4×, chunking 2×).
     // The two fan-out nodes (deduped: 4 consumers; chunks: 2) checkpoint
     // on the audit path only; the output-only path (d43) keeps its
-    // single-consumer chain un-barriered. stageMaterialize is
+    // single-consumer chain un-barriered. Materialization is
     // row-transparent, so the audit's counts are bit-identical either way.
     def auditStage(df: DataFrame): DataFrame =
-      if (materializeForAudit) stageMaterialize(df) else df
+      if (materializeForAudit) graft.Materialize.stage(df) else df
     val deduped = auditStage(kept
       .join(winners, kept("doc_id") === winners("id"), "left_semi"))
     val mixed = deduped
@@ -611,9 +395,8 @@ object Corpus {
   /** Pipeline output AND its audit from ONE stage construction — the
     * production pattern ("audit next to output") without paying the
     * pipeline twice: calling [[trainingSequences]] then [[pipelineAudit]]
-    * re-materializes every stage (the eager localCheckpoint/DISK_ONLY
-    * copies of the uncapped exploded shingle set, doubled block-store
-    * footprint) and re-runs the label-propagation driver loop. The audit
+    * re-materializes every stage (a second eager copy of each stage,
+    * doubled block-store footprint) and re-runs the label-propagation driver loop. The audit
     * rows here aggregate the SAME materialized stage relations the
     * returned output derives from. */
   def trainingSequencesWithAudit(docs0: DataFrame,
@@ -850,9 +633,8 @@ object Corpus {
     def fps(df: DataFrame): DataFrame = Dedup.winnowFingerprints(df, k, w)
       .select(col("doc_id"), explode(col("fps")).as("fp"))
     // materialized once: feeds the train-df aggregate AND both hit joins
-    // (see the checkpoint-strategy note on [[exactShingleEdges]] for the
-    // cluster-scale persist tradeoff)
-    val tf = stageMaterialize(fps(train))
+    // (storage strategy and its cluster-scale tradeoff: [[graft.Materialize]])
+    val tf = graft.Materialize.stage(fps(train))
     // TRAIN-side df per fp (groupBy → map-side partial combine on the hot
     // boilerplate keys); > maxDf = stop-fingerprints. MATERIALIZED: the
     // unmaterialized plan would re-run this full-corpus aggregate — the
@@ -870,7 +652,7 @@ object Corpus {
     val stopAgg = tf.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDf)
       .select(col("fp"))
-    val stop = if (materializeStop) stageMaterialize(stopAgg) else stopAgg
+    val stop = if (materializeStop) graft.Materialize.stage(stopAgg) else stopAgg
     // bfAll/bf stay LAZY (r20 optimization): the benchmark side is small
     // by contract and both relations derive from the MATERIALIZED tf/stop
     // stages, so re-deriving them inside a consumer's job is one cheap

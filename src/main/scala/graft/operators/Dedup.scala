@@ -83,26 +83,11 @@ object Dedup {
     * Jaccard verification instead of running the pipeline twice. */
   private def minhashCandidatesFromHashed(hashed: DataFrame, bands: Int,
                                           rowsPerBand: Int): DataFrame = {
-    // localCheckpoint: the banded signature relation feeds both sides of
-    // the self-equijoin — without materialization Spark recomputes the full
-    // signature pipeline per side (no CSE across self-joins). Checkpoint
-    // beats .persist() here: lineage is truncated, and the backing blocks
-    // are reference-tracked by the ContextCleaner instead of pinned in the
-    // cache manager until an unpersist that a lazily-returned DataFrame can
-    // never safely issue. At cluster scale this is a signature-table
-    // checkpoint.
-    //
-    // r21 measured-and-REJECTED: fusing this into one groupBy((band, bh))
-    // + collect_list + positional-pair explode (the d28/d43 capped-collect
-    // treatment) removed the checkpoint job but ran ~1.15× SLOWER on a
-    // same-host 5-rep A/B (min build+exec 1.45 s join vs 1.68 s fused;
-    // d17's struct variant 1.46 vs 2.15 s, ~1.5× slower) — WITHOUT a df
-    // cap the per-bucket array-of-pairs explode allocates C(bucket, 2)
-    // structs per group row, losing to the codegen'd streaming hash join
-    // that emits the same rows. The fusion only wins where it ALSO
-    // replaces the df-cap count shuffle + survivor join (d28/d43: lists
-    // capped at maxDf+1, two stage materializations eliminated).
-    val banded = bandedSignature(hashed, bands, rowsPerBand).localCheckpoint(true)
+    // materialized: the banded signature relation feeds both sides of the
+    // self-equijoin, and Spark does no CSE across self-joins. A grouped
+    // pair fusion was measured slower (plans/MEASUREMENTS.md, "Grouped
+    // pair fusion for the LSH self-joins")
+    val banded = graft.Materialize.stage(bandedSignature(hashed, bands, rowsPerBand))
     val a = banded.select(col("band"), col("bh"), col("doc_id").as("id_a"))
     val b = banded.select(col("band"), col("bh"), col("doc_id").as("id_b"))
     a.join(b, Seq("band", "bh"))
@@ -122,9 +107,8 @@ object Dedup {
     // one tokenize+shingle+hash scan for the whole pipeline: the
     // materialized (doc_id, hs) relation feeds signature/banding AND the
     // Jaccard verification
-    val sh = withShingles(docs, w)
-      .select(col("doc_id"), expr("array_distinct(transform(sh, s -> xxhash64(s)))").as("sh"))
-      .localCheckpoint(true)
+    val sh = graft.Materialize.stage(withShingles(docs, w)
+      .select(col("doc_id"), expr("array_distinct(transform(sh, s -> xxhash64(s)))").as("sh")))
     val cands = minhashCandidatesFromHashed(
       sh.select(col("doc_id"), col("sh").as("hs")), bands, rowsPerBand)
     cands
@@ -190,7 +174,7 @@ object Dedup {
     * with nothing before; > maxDf was dropped by the cap), an exploded
     * pair generation bounded at C(maxDf, 2) per fp — exactly the rows the
     * self-join used to emit — and the same pair-count aggregate. Replaces
-    * a localCheckpoint job + a df-count shuffle + a survivor join + a
+    * a materialization job + a df-count shuffle + a survivor join + a
     * two-exchange self-join with ONE aggregate exchange; never O(rows²),
     * and nothing buffers an uncapped group. */
   def winnowNearDups(docs: DataFrame, minShared: Int, k: Int = 8, w: Int = 4,
@@ -219,10 +203,10 @@ object Dedup {
 
   def minhashIndex(docs: DataFrame, w: Int = 3, bands: Int = 16,
                    rowsPerBand: Int = 4): MinhashIndex = {
-    val sh = withShingles(docs, w)
+    // materialized: feeds both tables; one tokenize+hash scan
+    val sh = graft.Materialize.stage(withShingles(docs, w)
       .select(col("doc_id"),
-        expr("array_distinct(transform(sh, s -> xxhash64(s)))").as("hs"))
-      .localCheckpoint(true) // feeds both tables; one tokenize+hash scan
+        expr("array_distinct(transform(sh, s -> xxhash64(s)))").as("hs")))
     MinhashIndex(bandedSignature(sh, bands, rowsPerBand), sh)
   }
 
@@ -275,19 +259,12 @@ object Dedup {
     * join) and one materialization per iteration. Typical near-dup
     * components are tiny dup-clusters where both forms take 2–3 rounds.
     *
-    * Per-round materializations go through [[Corpus.stageMaterialize]]
-    * and so honor `spark.graft.stageStorage`: `local` (default)
-    * localCheckpoints — fastest, executor-memory resident, not fault
-    * tolerant; `disk` persists DISK_ONLY with lineage KEPT — executor
-    * loss recomputes from upstream, each superseded round's blocks are
-    * dropped as soon as the next round lands (the loop holds ≤ 2 rounds
-    * of (id, comp) pairs plus the edge list; the FINAL labels stay
-    * persisted until [[Corpus.releaseStages]], where every round handle
-    * is registered); `reliable` checkpoints every round to the durable
-    * checkpoint dir — the loop itself survives executor-host loss
-    * (round files follow Spark's standard checkpoint lifecycle:
-    * reclaimed at context stop or by reference-tracked cleanup). All
-    * three strategies produce identical labels.
+    * Per-round materializations go through [[graft.Materialize.stage]]
+    * and so follow its strategy; each superseded round's blocks are
+    * released as soon as the next round lands, so the loop holds ≤ 2
+    * rounds of (id, comp) pairs plus the edge list (under `disk` the
+    * FINAL labels stay stored until [[graft.Materialize.releaseStages]]).
+    * All strategies produce identical labels.
     *
     * Raises if `maxIter` rounds don't reach the fixpoint. The default cap
     * is sized to the DOUBLING bound, not typical graphs: rounds ≈
@@ -298,12 +275,7 @@ object Dedup {
     * cliff at ~10⁶-node pathological chains (21 doubling rounds). */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 64): DataFrame = {
-    // same resolution order as stageMaterialize: a corpus-pipeline
-    // density decision (thread-scoped override) outranks the session conf
-    val strategy = Corpus.stageStrategyOverride.value
-      .orElse(nodes.sparkSession.conf.getOption("spark.graft.stageStorage"))
-      .getOrElse("local")
-    def mat(df: DataFrame): DataFrame = Corpus.stageMaterialize(df)
+    def mat(df: DataFrame): DataFrame = graft.Materialize.stage(df)
     val sym = mat(edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // Round 1 folded into initialization (r20 optimization): with the
@@ -341,7 +313,7 @@ object Dedup {
       // the changed-count rides the materialization job as an observed
       // metric (r21 — guide §1.2 "don't compute things you throw away"
       // applied to whole jobs): the eager materialization of every
-      // stageMaterialize strategy executes this dataset's OWN
+      // Materialize.stage strategy executes this dataset's OWN
       // QueryExecution, so the CollectMetrics accumulator is readable
       // synchronously afterwards (plans/MEASUREMENTS.md) and the
       // loop-control count no longer needs its own follow-up job — one
@@ -368,11 +340,10 @@ object Dedup {
       changed = observed.queryExecution.observedMetrics.get(metricName)
         .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
         .getOrElse(next.filter(col("__ch")).count())
-      // disk strategy: drop the superseded round's blocks now instead of
-      // waiting for releaseStages (the handle stays registered there, and
-      // double-unpersist is a no-op) — bounds the loop's disk footprint
-      // to two rounds of labels regardless of round count
-      if (strategy == "disk") retained.unpersist(blocking = false)
+      // drop the superseded round's blocks now (a disk handle stays
+      // registered for releaseStages; double release is a no-op) — bounds
+      // the loop's footprint to two rounds of labels
+      graft.Materialize.release(retained)
       retained = next
       labels = next.select(col("id"), col("comp"))
       it += 1
@@ -402,16 +373,12 @@ object Dedup {
     val sigs = simhash(docs)
     val chunks = (0 until 4).map(c =>
       s"named_struct('chunk', $c, 'v', shiftright(simhash, ${c * 16}) & 65535)")
-    // materialized for the same self-join reason as minhashCandidates: the
-    // banded relation feeds both sides, and Spark does no CSE across
-    // self-joins — unmaterialized, the whole signature pipeline runs twice.
-    // The grouped-collect pair fusion was measured and REJECTED here (r21,
-    // ~1.5× slower at 777k pairs — see minhashCandidatesFromHashed).
-    val banded = sigs.select(col("doc_id"), col("simhash"),
+    // materialized for the same self-join reason as minhashCandidates (the
+    // grouped pair fusion was measured ~1.5× slower here: same note)
+    val banded = graft.Materialize.stage(sigs.select(col("doc_id"), col("simhash"),
         explode(expr(chunks.mkString("array(", ", ", ")"))).as("cc"))
       .select(col("doc_id"), col("simhash"),
-        col("cc.chunk").as("chunk"), col("cc.v").as("v"))
-      .localCheckpoint(true)
+        col("cc.chunk").as("chunk"), col("cc.v").as("v")))
     val a = banded.select(col("chunk"), col("v"),
       col("doc_id").as("id_a"), col("simhash").as("sig_a"))
     val b = banded.select(col("chunk"), col("v"),

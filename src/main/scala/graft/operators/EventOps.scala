@@ -80,9 +80,8 @@ object EventOps {
     * compare exactly (micros), no float work. */
   def funnelSteps(eventsTs: DataFrame, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    val e = eventsTs.select(col("user_id"), col("event_type"), col("ts"))
-      .filter(col("event_type").isin(steps: _*))
-      .localCheckpoint(true)
+    val e = graft.Materialize.stage(eventsTs.select(col("user_id"), col("event_type"), col("ts"))
+      .filter(col("event_type").isin(steps: _*)))
     // entries carries CONVERTED users only (t reached): a user who missed
     // step k can never reach step k+1, so keeping their NULL-t row would
     // drag the full user population through every later checkpoint and
@@ -90,21 +89,19 @@ object EventOps {
     // magnitude smaller than the population, and the inner join below
     // makes dropping them output-identical (an absent user aggregates to
     // no row, exactly as a NULL t counted to nothing)
-    var entries = e.groupBy(col("user_id"))
+    var entries = graft.Materialize.stage(e.groupBy(col("user_id"))
       .agg(min(when(col("event_type") === steps.head, col("ts"))).as("t"))
-      .filter(col("t").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("t").isNotNull))
     val perStep = Seq.newBuilder[DataFrame]
     def stepCount(i: Int, name: String, df: DataFrame): DataFrame =
       df.agg(count(col("t")).as("n_users"))
         .select(lit(i.toLong).as("step"), lit(name).as("step_name"), col("n_users"))
     perStep += stepCount(0, steps.head, entries)
     steps.zipWithIndex.drop(1).foreach { case (step, i) =>
-      entries = e.join(entries, "user_id")
+      entries = graft.Materialize.stage(e.join(entries, "user_id")
         .groupBy(col("user_id"))
         .agg(min(when(col("event_type") === step && col("ts") > col("t"), col("ts"))).as("t"))
-        .filter(col("t").isNotNull)
-        .localCheckpoint(true)
+        .filter(col("t").isNotNull))
       perStep += stepCount(i, step, entries)
     }
     perStep.result().reduce(_ unionByName _).orderBy(col("step"))
@@ -160,10 +157,9 @@ object EventOps {
       col("event_type"),
       Features.qlong(col("value"), 100.0).as("cents"))
     // feeds the bounds aggregate AND the spine join — materialize once
-    val agg = e.groupBy(col("hour"), col("event_type"))
+    val agg = graft.Materialize.stage(e.groupBy(col("hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        (sum(col("cents")).cast("double") / 100.0).as("value_mass"))
-      .localCheckpoint(true)
+        (sum(col("cents")).cast("double") / 100.0).as("value_mass")))
     val bounds = agg.agg(min(col("hour")).as("lo"), max(col("hour")).as("hi"))
     val spine = bounds.select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("hour"))
     val grid = spine.crossJoin(agg.select(col("event_type")).distinct())

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -50,7 +50,6 @@ object Metrics {
     * `percentile` aggregate's convention on empty input). */
   def exactPercentiles(df: DataFrame, valueCol: String, qs: Seq[Double],
                        partitions: Int = 0): Option[Map[Double, Double]] = {
-    import org.apache.spark.sql.Row
     require(qs.nonEmpty, "exactPercentiles needs at least one q")
     qs.foreach(q => require(q >= 0.0 && q <= 1.0, s"percentile q out of [0,1]: $q"))
     // order statistics over OBSERVED values: NULL carries none, and a
@@ -59,28 +58,15 @@ object Metrics {
     // medians' `isfinite` guards
     val base = df.select(Features.finiteOrNull(col(valueCol).cast("double")).as("__v"))
       .filter(col("__v").isNotNull)
-    val nParts = derivedPartitions(base, partitions)
-    val vals = base
-      .repartitionByRange(nParts, col("__v"))
-      .sortWithinPartitions(col("__v"))
-    val rdd = vals.rdd
-    rdd.localCheckpoint() // two passes below share the sorted layout
-    val counts: Array[(Int, Long)] = rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        // Long accumulator, NOT Iterator.size: a >2^31-row partition would
-        // wrap the Int before any .toLong could save it
-        var c = 0L
-        while (it.hasNext) { it.next(); c += 1L }
-        Iterator.single((pid, c))
-      }.collect().sortBy(_._1)
-    val n = counts.map(_._2).sum
+    val ranked = rangeRanked(base, partitions, col("__v"))
+    val offsets = ranked.offsets
+    val n = offsets.last
     if (n == 0) return None
     // 0-based global position of each percentile and its two straddling
     // order statistics (Spark Percentile.getPercentile)
-    val offsets = counts.scanLeft(0L)(_ + _._2)
     def locate(rank: Long): (Int, Long) = {
       val pid = offsets.lastIndexWhere(_ <= rank) // offsets(pid) = first global rank in pid
-      (counts(pid)._1, rank - offsets(pid))
+      (pid, rank - offsets(pid))
     }
     val wantedRanks: Seq[Long] = qs.flatMap { q =>
       val pos = (n - 1) * q
@@ -88,7 +74,7 @@ object Metrics {
     }.distinct
     val targets: Map[Int, Seq[Long]] = wantedRanks.map(locate)
       .groupBy(_._1).map { case (p, rs) => p -> rs.map(_._2).distinct }
-    val byPart: Map[(Int, Long), Double] = rdd
+    val byPart: Map[(Int, Long), Double] = ranked.rows
       .mapPartitionsWithIndex { (pid, it) =>
         targets.get(pid) match {
           case None => Iterator.empty
@@ -100,7 +86,7 @@ object Metrics {
             val out = Seq.newBuilder[((Int, Long), Double)]
             var i = 0L
             while (it.hasNext && i <= last) {
-              val r = it.next().asInstanceOf[Row]
+              val r = it.next()
               if (want(i)) out += (((pid, i), r.getDouble(0)))
               i += 1L
             }
@@ -131,10 +117,41 @@ object Metrics {
     * constant would cram a 100 TB table into that many sort tasks. The
     * results of every consumer are partition-count invariant (order
     * statistics / rank offsets), so the derivation affects cost only. */
-  private[operators] def derivedPartitions(df: DataFrame, partitions: Int): Int =
+  private[graft] def derivedPartitions(df: DataFrame, partitions: Int): Int =
     if (partitions > 0) partitions
     else math.max(df.sparkSession.sessionState.conf.numShufflePartitions,
                   df.rdd.getNumPartitions)
+
+  /** `rows` sorted by `keys` across and within partitions, pinned so later
+    * passes walk the same layout ([[graft.Materialize.pinRows]]), with
+    * `offsets(pid)` = the global 0-based rank of partition pid's first row
+    * (`offsets.last` = row count). */
+  private[operators] final case class RangeRanked(rows: org.apache.spark.rdd.RDD[Row],
+                                                  offsets: Array[Long])
+
+  /** The partition-offset order-statistics pass shared by
+    * [[exactPercentiles]], `RelationalExt.priceQuartiles` and
+    * `TextOps.epochShuffle`: range-partition by `keys`, sort within
+    * partitions, materialize, and collect only the per-partition row
+    * counts. A global rank is then partition offset + local index, with no
+    * single-partition window. `partitions <= 0` derives the width
+    * ([[derivedPartitions]]). */
+  private[operators] def rangeRanked(df: DataFrame, partitions: Int,
+                                     keys: Column*): RangeRanked = {
+    val sorted = df.repartitionByRange(derivedPartitions(df, partitions), keys: _*)
+      .sortWithinPartitions(keys: _*)
+    graft.Materialize.labelled(sorted) {
+      val rows = graft.Materialize.pinRows(sorted)
+      val counts = rows.mapPartitionsWithIndex { (pid, it) =>
+        // Long accumulator, NOT Iterator.size: a >2^31-row partition would
+        // wrap the Int before any .toLong could save it
+        var c = 0L
+        while (it.hasNext) { it.next(); c += 1L }
+        Iterator.single((pid, c))
+      }.collect().sortBy(_._1).map(_._2)
+      RangeRanked(rows, counts.scanLeft(0L)(_ + _))
+    }
+  }
 
   /** Attach binary label + rule-based prediction to orders: y = (status='F'),
     * yhat = price > global median. The median comes from [[exactMedian]]

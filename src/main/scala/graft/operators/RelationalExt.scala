@@ -82,36 +82,19 @@ object RelationalExt {
     * `⌈N/4⌉` rows). Two scan-parallel passes, no stage with one task;
     * bit-identical to the windowed form (asserted in RelationalSpec). */
   def priceQuartiles(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint (not persist): materialized once for the two passes,
-    // lineage truncated, and the backing blocks are reference-tracked by the
-    // ContextCleaner — nothing left pinned in the cache manager afterwards
     // quartiles are over OBSERVED prices — a NULL o_totalprice carries no
     // rank (SQL aggregate semantics; the per-partition `getDouble` below
     // would otherwise throw ROW_VALUE_IS_NULL on it)
     val base = Tables.orders(s, dir)
       .select(col("o_totalprice"), col("o_orderkey"))
       .where(col("o_totalprice").isNotNull)
-    val sorted = base
-      // width derives from the data (max of shuffle width and scan width) —
-      // a fixed 32 would cram the table into 32 sort tasks at scale; the
-      // rank/ntile formula is global, so the result is width-invariant
-      .repartitionByRange(Metrics.derivedPartitions(base, 0),
-        col("o_totalprice"), col("o_orderkey"))
-      .sortWithinPartitions(col("o_totalprice"), col("o_orderkey"))
-      .localCheckpoint(true)
-    val counts = sorted.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        // Long accumulator, NOT Iterator.size: a >2^31-row partition would
-        // wrap the Int (same overflow class as Metrics.exactPercentiles)
-        var c = 0L
-        while (it.hasNext) { it.next(); c += 1L }
-        Iterator.single((pid, c))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
+    // width derives from the data; the rank/ntile formula is global, so
+    // the result is width-invariant
+    val sorted = Metrics.rangeRanked(base, 0, col("o_totalprice"), col("o_orderkey"))
+    val offsets = sorted.offsets
     val total = offsets.last
     val q = total / 4; val r = total % 4
-    val quartRdd = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val quartRdd = sorted.rows.mapPartitionsWithIndex { (pid, it) =>
       var rn = offsets(pid)
       it.map { row =>
         rn += 1

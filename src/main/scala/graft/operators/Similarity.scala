@@ -212,16 +212,15 @@ object Similarity {
       s"concat('$t:', CAST(shiftrightunsigned(__bits, ${t * nPlanes}) & ${mask}L AS STRING))")
     // slim (vec_id, bucket) relation — embeddings deliberately NOT carried
     // (verification re-fetches them by id; shuffling vectors through the
-    // candidate distinct would cost more than the re-scan). localCheckpoint:
+    // candidate distinct would cost more than the re-scan). Materialized:
     // the relation feeds both the query side and the corpus side of the
     // bucket join — unmaterialized, the HyperplaneBits dot products and the
     // explode would run twice (no CSE across self-joins, the Dedup rule).
-    // The checkpoint holds nTables small rows per vector, not vectors.
-    val bucketed = embeddings
+    // The stage holds nTables small rows per vector, not vectors.
+    val bucketed = graft.Materialize.stage(embeddings
       .withColumn("__bits", bitsCol)
       .select(col("vec_id"),
-        explode(expr(bucketCols.mkString("array(", ", ", ")"))).as("bucket"))
-      .localCheckpoint(true)
+        explode(expr(bucketCols.mkString("array(", ", ", ")"))).as("bucket")))
     val q = bucketed.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("bucket"))
     val candIds = bucketed
@@ -461,9 +460,8 @@ object Similarity {
     require(dimRows.nonEmpty, "kmeans training set is empty")
     val dim = dimRows.maxBy(r => (r.getAs[Long]("n"), r.getAs[Int]("d"))).getAs[Int]("d")
     // materialized once: scanned by the seed draw + every Lloyd iteration
-    val pts = pts0.where(size(col("embedding")) === dim)
-      .select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true)
+    val pts = graft.Materialize.stage(pts0.where(size(col("embedding")) === dim)
+      .select(col("vec_id"), col("embedding")))
     // Forgy seeding over DISTINCT vectors: seed draw keyed on the min
     // vec_id carrying each distinct embedding (deterministic under
     // layout and duplication). The distinct-vector dedup keys its
@@ -570,7 +568,7 @@ object Similarity {
     indexable(embeddings).where(!expr("exists(embedding, x -> isnan(x))"))
 
   /** Assign each vector its nearest centroid — ONE scan, no join, no
-    * shuffle, materialized (localCheckpoint) because every consumer scans
+    * shuffle, materialized ([[graft.Materialize.stage]]) because every consumer scans
     * the assigned relation more than once. Always the broadcast kernel
     * ([[assignCellsBroadcast]], the MLlib-KMeans shape): the plan is O(1)
     * in nClusters — which is what lets `nClusters ~ n / targetCellSize`
@@ -598,13 +596,12 @@ object Similarity {
       val arr = c.map(dlit).mkString("array(", ", ", ")")
       s"aggregate(zip_with(embedding, $arr, (x, w) -> (CAST(x AS DOUBLE) - w) * (CAST(x AS DOUBLE) - w)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)"
     }
-    corpus
+    graft.Materialize.stage(corpus
       .select(col("vec_id"), col("embedding"),
         expr(distExprs.mkString("array(", ", ", ")")).as("__dists"))
       .select(col("vec_id"), col("embedding"),
         (expr("array_position(__dists, array_min(__dists))") - 1L)
-          .cast("int").as("cell"))
-      .localCheckpoint(true)
+          .cast("int").as("cell")))
   }
 
   /** The large-quantizer assignment kernel. Semantics mirror the literal
@@ -657,7 +654,7 @@ object Similarity {
         Row(r.get(0), r.get(1), cell)
       }
     }
-    spark.createDataFrame(out, schema).localCheckpoint(true)
+    graft.Materialize.stage(spark.createDataFrame(out, schema))
   }
 
   /** Joint (bands L, bits b) selection for the hot-cell LSH sub-shard:
@@ -802,8 +799,8 @@ object Similarity {
       else {
         val cold = assigned.where(col("cell").isNotNull &&
           !col("cell").isInCollection(hotCells))
-        val hot = assigned.where(col("cell").isInCollection(hotCells))
-          .localCheckpoint(true)
+        val hot = graft.Materialize.stage(
+          assigned.where(col("cell").isInCollection(hotCells)))
         // one fused HyperplaneBits scan → L band ids per row (long-coded
         // band index << 32 | bucket bits); slim (cell, band, vec_id)
         // relation, candidates deduped BEFORE the exact cosine — the
@@ -821,11 +818,10 @@ object Similarity {
         val mask = (1L << bits) - 1L
         val bandCols = (0 until bands).map(t =>
           s"${t.toLong << 32}L + (shiftrightunsigned(__bits, ${t * bits}) & ${mask}L)")
-        val banded = hot
+        val banded = graft.Materialize.stage(hot
           .withColumn("__bits", bitsCol)
           .select(col("cell"), col("vec_id"),
-            explode(expr(bandCols.mkString("array(", ", ", ")"))).as("band"))
-          .localCheckpoint(true)
+            explode(expr(bandCols.mkString("array(", ", ", ")"))).as("band")))
         val candPairs = banded
           .select(col("cell"), col("band"), col("vec_id").as("id_a"))
           .join(banded.select(col("cell"), col("band"),
@@ -904,10 +900,9 @@ object Similarity {
       trainIvfCentroids(embeddings, nLists, seed))
     require(centroids.length == nLists,
       s"expected $nLists centroids, got ${centroids.length}")
-    // assignment: one codegen'd scan (see [[assignCells]]). localCheckpoint
-    // — the assigned relation is scanned three times below (query collect,
-    // query-embedding lookup, candidate join); materialize once, lineage
-    // truncated, blocks GC-tracked (no cache-manager leak)
+    // assignment: one codegen'd scan, materialized (see [[assignCells]]) —
+    // the assigned relation is scanned three times below (query collect,
+    // query-embedding lookup, candidate join)
     val assigned = assignCells(corpus, centroids)
     // queries probe their nProbe nearest centroids (tiny driver-side math
     // over nQueries × nLists — the centroid table is the "index")
@@ -1199,7 +1194,7 @@ object Similarity {
       }
     }
     val df = spark.createDataFrame(out, schema)
-    if (materialize) df.localCheckpoint(true) else df
+    if (materialize) graft.Materialize.stage(df) else df
   }
 
   /** D4 scale path #3 — PQ/ADC approximate top-k: the whole corpus is

@@ -112,17 +112,16 @@ object Temporal {
     // never satisfy rightT <= leftT; unfiltered it would ride the
     // NULLS-FIRST carry window as a phantom earliest update)
     val r = right.filter(col(key).isNotNull && col(rightT).isNotNull)
-    // localCheckpoint is CORRECTNESS here, not just cost: __lid comes from
+    // pinned, for CORRECTNESS, not just cost: __lid comes from
     // monotonically_increasing_id(), which depends on row order within
     // partitions — nondeterministic after a shuffle — and this relation is
     // referenced three times (probes, in-bucket join, final join). Without
-    // materialization each reference re-evaluates the id assignment and a
+    // the pin each reference re-evaluates the id assignment and a
     // shuffled-input left side could pair a row with another row's
-    // in-bucket winner. Checkpointing pins one id per physical row.
-    val lid = left
+    // in-bucket winner. The pin fixes one id per physical row.
+    val lid = graft.Materialize.pin(left
       .withColumn("__lid", monotonically_increasing_id())
-      .withColumn("__b", bucket(col(leftT)))
-      .localCheckpoint(true)
+      .withColumn("__b", bucket(col(leftT))))
     val rb = r.select(
       col(key).as("__k"), bucket(col(rightT)).as("__b"),
       col(rightT).as("__t"), col(rightTieBreak).as("__tie"),

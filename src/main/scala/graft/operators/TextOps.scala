@@ -327,17 +327,15 @@ object TextOps {
     * top-k window partitions by lang over the per-(lang, term) aggregate —
     * input already reduced to vocab size, bounded per language. */
   def tfidfTopTerms(docs: DataFrame, k: Int): DataFrame = {
-    // localCheckpoint: tf feeds BOTH the df relation and the per-(lang,
-    // term) score aggregate — without materialization the explode + first
-    // hash aggregate runs twice (no CSE across DataFrame reuse; same rule
-    // as the Dedup self-joins). Blocks are reference-tracked by the
-    // ContextCleaner, so nothing pins the cache manager.
-    val tf = docs
+    // materialized: tf feeds BOTH the df relation and the per-(lang, term)
+    // score aggregate — without it the explode + first hash aggregate runs
+    // twice (no CSE across DataFrame reuse; same rule as the Dedup
+    // self-joins)
+    val tf = graft.Materialize.stage(docs
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ", -1)).as("term"))
       .groupBy(col("doc_id"), col("lang"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")))
     val df_ = tf.groupBy(col("term"))
       .agg(count(lit(1)).as("df")) // tf rows are unique per (doc, term)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -384,11 +382,10 @@ object TextOps {
     * on the checkpoint, no extra scan), and a doc-keyed integer-sum
     * aggregate — shuffles O(doc-term pairs), never O(tokens). */
   def unigramSurprisal(docs: DataFrame): DataFrame = {
-    val tf = docs
+    val tf = graft.Materialize.stage(docs
       .select(col("doc_id"), explode(split(col("text"), " ", -1)).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")))
     // counts stays LAZY (the d49 rule): it feeds the broadcast total and
     // the re-join, but both re-derivations are one vocab-sized aggregate
     // over the materialized tf relation — cheaper than a checkpoint job
@@ -723,11 +720,11 @@ object TextOps {
   def temperatureMix(docs: DataFrame, temperature: Double = 0.7): DataFrame = {
     require(temperature > 0.0 && temperature <= 1.0,
       s"temperature must be in (0, 1], got $temperature")
-    val perSource = docs.groupBy(col("source"))
+    // materialized: feeds the driver totals AND the final projection
+    val perSource = graft.Materialize.stage(docs.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         // NULL n_chars (hostile row) contributes nothing — sum skips it
-        sum(col("n_chars")).as("char_mass"))
-      .localCheckpoint(true) // feeds the driver totals AND the final projection
+        sum(col("n_chars")).as("char_mass")))
     // totals folded on the driver in SORTED source order: an in-plan
     // sum(pow(...)) merges double partials in shuffle-arrival order
     // (layout-nondeterministic, the class the integer-sum discipline
@@ -858,8 +855,8 @@ object TextOps {
     * Scale shape: this is hash-keyed TeraSort, NOT a window —
     * range-repartition by the key, sort within partitions, then assign
     * global ranks as partition offset + local index (the
-    * [[Metrics.exactMedian]] / RelationalExt.priceQuartiles
-    * order-statistics pattern; a `row_number()` over a global ORDER BY
+    * [[Metrics.rangeRanked]] order-statistics pass, shared with
+    * exactMedian and priceQuartiles; a `row_number()` over a global ORDER BY
     * would put the whole corpus through one task, the plan shape
     * PlanLint bans). Only the tiny per-partition counts reach the
     * driver. A NULL doc_id has no identity in the permutation and is
@@ -870,20 +867,9 @@ object TextOps {
       .select(col("doc_id"),
         md5(concat_ws(":", lit(seed), col("doc_id")).cast("binary"))
           .as("shuffle_key"))
-    val sorted = keyed
-      .repartitionByRange(Metrics.derivedPartitions(keyed, 0),
-        col("shuffle_key"), col("doc_id"))
-      .sortWithinPartitions(col("shuffle_key"), col("doc_id"))
-      .localCheckpoint(true)
-    val counts = sorted.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var c = 0L // Long cursor: a >2^31-row partition must not wrap
-        while (it.hasNext) { it.next(); c += 1L }
-        Iterator.single((pid, c))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val ranked = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val sorted = Metrics.rangeRanked(keyed, 0, col("shuffle_key"), col("doc_id"))
+    val offsets = sorted.offsets
+    val ranked = sorted.rows.mapPartitionsWithIndex { (pid, it) =>
       var rn = offsets(pid)
       it.map { row => rn += 1L; (rn, row.getLong(0), row.getString(1)) }
     }

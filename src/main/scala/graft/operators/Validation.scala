@@ -158,11 +158,10 @@ object Validation {
   def psiByColumn(df: DataFrame, timeCol: String, splitValue: String,
                   binWidths: Map[String, Double],
                   nBins: Int = defaultPsiBins): DataFrame = {
-    // localCheckpoint: counts feeds BOTH the per-column totals and the final
+    // materialized: counts feeds BOTH the per-column totals and the final
     // join — materializing this ≤ nCols·nBins-row relation keeps the table
     // scan single-pass (no CSE across DataFrame reuse; plan-asserted)
-    val counts = psiCounts(df, timeCol, splitValue, binWidths, nBins)
-      .localCheckpoint(true)
+    val counts = graft.Materialize.stage(psiCounts(df, timeCol, splitValue, binWidths, nBins))
     val totals = counts.groupBy(col("column_name"))
       .agg(sum(col("n_a")).as("ta"), sum(col("n_b")).as("tb"))
     val p = (col("n_a") + 1L).cast("double") / (col("ta") + nBins.toLong).cast("double")

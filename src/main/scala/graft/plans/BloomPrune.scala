@@ -71,8 +71,9 @@ object BloomPrune {
         val thr = corpus.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
         thr < 0 || small.queryExecution.optimizedPlan.stats.sizeInBytes > thr
       case other => throw new IllegalArgumentException(
-        // loud like stageMaterialize: a typo ("On", "true") must not
-        // silently re-enter auto and change the plan the operator audited
+        // loud like graft.Materialize's strategy check: a typo ("On",
+        // "true") must not silently re-enter auto and change the plan the
+        // operator audited
         s"spark.graft.bloomPrune must be on|off|auto, got '$other'")
     }
     if (!inject) corpus

@@ -139,7 +139,7 @@ class ConcurrencySpec extends AnyFunSuite {
       }
     } finally {
       spark.conf.unset("spark.graft.stageStorage")
-      operators.Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
     }
   }
 }

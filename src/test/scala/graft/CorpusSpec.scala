@@ -301,11 +301,11 @@ class CorpusSpec extends AnyFunSuite {
       .filter(_.getStorageLevel ==
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
     def runAndCollectDisk(docs: org.apache.spark.sql.DataFrame): Int = {
-      Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
       val before = diskStages.size
       Corpus.trainingSequences(docs, Map.empty).count()
       val n = diskStages.size - before
-      Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
       n
     }
     spark.conf.set("spark.graft.stageStorage", "auto")
@@ -323,14 +323,14 @@ class CorpusSpec extends AnyFunSuite {
       spark.conf.set("spark.graft.stageStorage", "auto")
       val auto = Corpus.trainingSequences(dense, Map.empty)
         .collect().map(_.toString).sorted.toSeq
-      Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
       spark.conf.set("spark.graft.stageStorage", "local")
       val local = Corpus.trainingSequences(dense, Map.empty)
         .collect().map(_.toString).sorted.toSeq
       assert(auto == local)
     } finally {
       spark.conf.unset("spark.graft.stageStorage")
-      Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
     }
   }
 
@@ -360,7 +360,7 @@ class CorpusSpec extends AnyFunSuite {
       // the unpersist contract: releaseStages drops exactly the DISK_ONLY
       // stage blocks this module persisted (localCheckpoint blocks from
       // the default-strategy run are not its business)
-      Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
       assert(diskStages.isEmpty)
     } finally {
       spark.conf.unset("spark.graft.stageStorage")
@@ -395,7 +395,7 @@ class CorpusSpec extends AnyFunSuite {
     val beforeDirs = rddDirs
     // under reliable, every stage AND every component-loop round goes to
     // the checkpoint dir (the transient DISK_ONLY handle that feeds each
-    // checkpoint write is unpersisted before stageMaterialize returns), so
+    // checkpoint write is unpersisted before Materialize.stage returns), so
     // the discriminator for "stages went to the reliable store" is that no
     // DISK_ONLY handle remains — a remaining one is the disk strategy's
     // signature
@@ -433,7 +433,7 @@ class CorpusSpec extends AnyFunSuite {
     val before = diskHandles
     spark.conf.set("spark.graft.stageStorage", "reliable")
     try {
-      val out = Corpus.stageMaterialize(df)
+      val out = Materialize.stage(df)
       assert(acc.value == 100L,
         s"stage computed ${acc.value} row-evaluations for 100 rows — the " +
           "checkpoint write recomputed the stage instead of reading the blocks")

@@ -451,31 +451,49 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(labels.count() == n)
   }
 
-  test("connected components: stageStorage=disk and =reliable loop rounds " +
-      "produce identical labels, and releaseStages reclaims the disk handles") {
+  test("stage strategies: local, disk and reliable give identical rows at every " +
+      "routed site; release leaves no DISK_ONLY RDD; pins cut lineage under disk") {
     val nodes = (0L to 9L).map(Tuple1(_)).toDF("id")
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (7L, 8L))
       .toDF("id_a", "id_b")
-    def run() = Dedup.connectedComponents(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val base = run()
+    val books = Similarity.trainPqCodebooks(emb, 64)
+    val labelled = (0L until 40L).map(i => (i, (i % 3).toInt)).toDF("id", "label")
+    def query(q: String) = () => SparkEntry.queries(q)(spark, sfDir)
+    // (site, is a pin, build): every case reaches Materialize.stage / pin
+    val cases: Seq[(String, Boolean, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("connected components", false, () => Dedup.connectedComponents(nodes, edges)),
+      ("d15 minhash LSH candidates", false, query("d15_minhash_neardups")),
+      ("d17 simhash bands", false, query("d17_simhash_neardups")),
+      ("pqEncode", false, () => Similarity.pqEncode(emb.select(col("vec_id"), col("embedding")), books)),
+      ("d36 funnelSteps", false, query("d36_funnel_steps")),
+      ("v10 psiByColumn", false, query("v10_psi_by_column")),
+      ("x34 as-of pin", true, query("x34_asof_bucketed")),
+      ("stratified split pins", true, () => ml.Split.stratified(labelled, "label", 0.25, 7L)._2))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(r =>
+      r.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }.mkString("|")).sorted.toSeq
     def diskStages = spark.sparkContext.getPersistentRDDs.values
       .filter(_.getStorageLevel == org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    spark.conf.set("spark.graft.stageStorage", "disk")
-    try {
-      assert(run() == base)
-      // the loop materialized DISK_ONLY rounds (fault-tolerant lineage
-      // kept); superseded rounds were unpersisted in-loop, the final
-      // labels + edge list remain until the registry release
-      assert(diskStages.nonEmpty)
-      Corpus.releaseStages(spark)
-      assert(diskStages.isEmpty)
+    try cases.foreach { case (site, isPin, build) =>
+      Materialize.releaseStages(spark)
+      spark.conf.unset("spark.graft.stageStorage")
+      val base = rows(build())
+      assert(base.nonEmpty, site)
+      spark.conf.set("spark.graft.stageStorage", "disk")
+      val disk = build()
+      assert(rows(disk) == base, s"$site: disk rows differ")
+      assert(diskStages.nonEmpty, s"$site: disk strategy stored nothing DISK_ONLY")
+      val plan = disk.queryExecution.executedPlan.toString
+      if (isPin) assert(plan.contains("ExistingRDD") && !plan.contains("InMemoryTableScan"),
+        s"$site: a pin must cut lineage under disk\n$plan")
+      else assert(plan.contains("InMemoryTableScan"), s"$site: disk stage keeps lineage\n$plan")
+      Materialize.releaseStages(spark)
+      assert(diskStages.isEmpty, s"$site: release left DISK_ONLY RDDs")
       spark.conf.set("spark.graft.stageStorage", "reliable")
-      assert(run() == base) // rounds go to the durable checkpoint dir
-      assert(diskStages.isEmpty, "reliable rounds must not leave DISK_ONLY handles")
+      assert(rows(build()) == base, s"$site: reliable rows differ")
+      assert(diskStages.isEmpty, s"$site: reliable must not leave DISK_ONLY handles")
     } finally {
       spark.conf.unset("spark.graft.stageStorage")
-      Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
     }
   }
 

@@ -362,4 +362,23 @@ class PlanLintSpec extends AnyFunSuite {
       finally walk.close()
     assert(builders == Seq("GraftSession.scala"), builders)
   }
+
+  test("source lint: eager materialization and the stageStorage read live only in Materialize") {
+    // one materialization primitive: a raw checkpoint or persist elsewhere
+    // ignores the storage strategy and carries no mat[...] job label
+    val root = java.nio.file.Paths.get("src/main")
+    val walk = java.nio.file.Files.walk(root)
+    val files =
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toSeq
+      finally walk.close()
+    val raw = """localCheckpoint|\.checkpoint\(|\.persist\(""".r
+    val confRead = """conf\b[^\n]*stageStorage|"spark\.graft\.stageStorage"""".r
+    val offenders = files.filterNot(_.getFileName.toString == "Materialize.scala")
+      .flatMap { f =>
+        val text = java.nio.file.Files.readString(f)
+        (raw.findAllIn(text) ++ confRead.findAllIn(text)).map(m => s"${f.getFileName}: $m")
+      }
+    assert(files.exists(_.getFileName.toString == "Materialize.scala"))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

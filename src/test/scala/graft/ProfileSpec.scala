@@ -42,6 +42,12 @@ class ProfileSpec extends AnyFunSuite {
     assert(perQuery.map(_._1) == Seq("d14_cosine_topk") && median > 0.0)
   }
 
+  test("time: d17's simhash-band materialization job carries a mat[...] label") {
+    val Seq(rec) = Profile.time(spark, Seq("d17_simhash_neardups"), sfDir, reps = 1, log = quiet)
+    assert(rec.error.isEmpty, rec.error)
+    assert(rec.jobs.exists(_.description.startsWith("mat[")), rec.jobs)
+  }
+
   test("plans: one formatted-plan file per query") {
     val out = Files.createTempDirectory("graft_plans")
     val names = Seq("x1_revenue_by_nation", "d14_cosine_topk")

@@ -88,7 +88,7 @@ class TaskReplaySpec extends AnyFunSuite {
   test("corpus pipeline (d43 shape) is replay-safe under stageStorage=disk, " +
       "and the release contract holds after a planted failure") {
     // the one replay-relevant branch the default-strategy test never
-    // exercises: stageMaterialize's register-BEFORE-count path — the bomb
+    // exercises: Materialize.stage's register-BEFORE-count path — the bomb
     // fires inside the eager count() that materializes the DISK_ONLY
     // stage, so the persist handle must already be registered when the
     // failed attempt's partial blocks land, or releaseStages would leak
@@ -106,13 +106,13 @@ class TaskReplaySpec extends AnyFunSuite {
       // release must still drop every DISK_ONLY block this module stored
       assert(diskStages.nonEmpty,
         "disk strategy never persisted a stage — the test proved nothing")
-      operators.Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
       assert(diskStages.isEmpty,
         "releaseStages left DISK_ONLY stage blocks behind after a " +
           "planted task failure")
     } finally {
       spark.conf.unset("spark.graft.stageStorage")
-      operators.Corpus.releaseStages(spark)
+      Materialize.releaseStages(spark)
     }
   }
 

@@ -7,15 +7,19 @@
 #   1. sbt_test            unit/plan/property/robustness suites
 #   2. real_sf0.01         Verify + DuckDB selfcheck on the real fixture
 #                          at the graded SF (the driver's own gate)
-#   3. hostile_sf0.001     full replay against the poisoned fixture
+#   3. verify_disk         Verify + DuckDB selfcheck at sf0.001 with
+#                          spark.graft.stageStorage=disk, so every eager
+#                          stage of every operator (graft.Materialize)
+#                          runs on the fault-tolerant strategy
+#   4. hostile_sf0.001     full replay against the poisoned fixture
 #                          (tools/hostile_fixture.py: NULL/zero/junk/
 #                          exotic-unicode rows appended per table)
-#   4. retype_<arm> ×6     full replay against each single-drift re-typed
+#   5. retype_<arm> ×6     full replay against each single-drift re-typed
 #                          fixture (date|timestamp|nanos|embdouble|
 #                          decimal|intflip)
-#   5. chained_all_drifts  full replay against the composed
+#   6. chained_all_drifts  full replay against the composed
 #                          decimal→intflip→embdouble→nanos fixture
-#   6. mass_leak_sf0.001   full replay against the planted mass-leak
+#   7. mass_leak_sf0.001   full replay against the planted mass-leak
 #                          fixture (tools/mass_leak_fixture.py: one
 #                          benchmark passage in > maxDf train docs) PLUS
 #                          the d53 nonempty check — the audit view must
@@ -47,6 +51,17 @@ verify_against() { # verify_against <name> <fixtureDir>
 arm "sbt_test" bash -c "sbt -batch test >'$SCRATCH/sbt_test.log' 2>&1 || { tail -20 '$SCRATCH/sbt_test.log'; exit 1; }"
 
 verify_against "real_sf0.01" /root/testdata/sf0.01
+
+verify_disk() {
+  local src=/root/testdata/sf0.001 out="$SCRATCH/v_verify_disk"
+  SPARK_GRAFT_CPUS=$CPUS sbt -batch 'set javaOptions += "-Dspark.graft.stageStorage=disk"' \
+    "runMain graft.Verify $src $out" >"$SCRATCH/verify_disk.sbt.log" 2>&1 &&
+    python3 tools/selfcheck.py "$src" "$out" >"$SCRATCH/verify_disk.check.log" 2>&1
+  local rc=$?
+  tail -3 "$SCRATCH/verify_disk.check.log" 2>/dev/null
+  return $rc
+}
+arm "verify_disk" verify_disk
 
 if python3 tools/hostile_fixture.py /root/testdata/sf0.001 "$SCRATCH/hostile" >/dev/null; then
   verify_against "hostile_sf0.001" "$SCRATCH/hostile"
