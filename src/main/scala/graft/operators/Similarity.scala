@@ -7,27 +7,28 @@ import org.apache.spark.sql.functions._
 /** Similarity search over the `embeddings` table (SURVEY.md §2.7 D4) and
   * n-gram Jaccard similarity over `documents`.
   *
-  * Architecture (100 TB): the exact path broadcasts the (small) query set
-  * against the corpus — one scan, no corpus shuffle, per-query top-k via a
-  * window partitioned by query id. The scale path buckets vectors with
-  * random-hyperplane LSH so candidate generation is a bucket-equijoin
-  * (shuffle on bucket signature, not a cross join); exact cosine re-ranks
-  * only within buckets.
+  * Families, each a bounded query set (`vec_id < nQueries`) against the
+  * corpus, ranked by the salted two-phase [[topKPerQuery]]:
+  *  - exact ([[bruteForceTopK]]): broadcast queries, one corpus scan;
+  *  - LSH ([[lshTopK]]): random-hyperplane bucket equijoin, exact re-rank;
+  *  - IVF ([[ivfTopK]]): k-means cells, each query probes its nProbe
+  *    nearest, exact re-rank within them;
+  *  - PQ ([[pqTopK]] ADC, [[pqTopKSDC]] SDC): the corpus is scanned as
+  *    m-byte codes against per-query lookup tables;
+  *  - IVF-PQ ([[ivfPqTopK]], raw or residual codes): IVF probes, PQ codes;
+  *  - semantic dedup ([[semanticDedup]]) and streaming ingest
+  *    ([[incrementalVectorIngest]]) reuse the IVF and IVF-PQ pieces.
   *
-  * All dot products run as `aggregate(zip_with(...))` — sequential
-  * left-to-right double summation, bit-identical to any engine that sums
-  * sequentially (verified vs DuckDB `list_dot_product`).
+  * The inner loops exist once, as private kernels shared by every family:
+  * [[sqL2]] / [[nearest]] (squared L2 summed left to right; first-minimum
+  * argmin, NaN greatest), [[probeCells]], [[subspaceLut]] and
+  * [[codeDistance]], [[probedCodeDistances]], [[BoundedTopK]] under the
+  * [[outranks]] order, [[trainingSample]], [[hyperplaneBits]] and
+  * [[cosSim]]. Exact cosine is the native `cosine_sim` expression (or its
+  * composed `aggregate(zip_with(...))` form): sequential left-to-right
+  * double summation, bit-identical to DuckDB `list_dot_product`.
   */
 object Similarity {
-
-  /** Locale-independent double → SQL literal. `Double.toString` round-trips
-    * the exact bit pattern and never uses locale-sensitive separators (an
-    * `f"$v%.17g"` interpolation would emit `,` decimals under comma-decimal
-    * default locales and fail to parse). */
-  private def dlit(v: Double): String = {
-    require(!v.isNaN && !v.isInfinite, s"non-finite plan literal: $v")
-    s"CAST(${java.lang.Double.toString(v)} AS DOUBLE)"
-  }
 
   /** Cosine similarity between two ArrayType(Float) columns, computed in
     * double precision. Uses the native [[graft.functions.CosineSimilarity]]
@@ -56,6 +57,11 @@ object Similarity {
     }
   }
 
+  /** The exact-cosine score every re-ranking family emits:
+    * `cos_sim = pround(cosine(q_emb, n_emb), 6)`. */
+  private[graft] def cosSim(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.Column =
+    Features.pround(cosineExprIn(Some(spark), "q_emb", "n_emb"), 6).as("cos_sim")
+
   /** Salted two-phase per-query top-k over a scored candidate relation
     * (query_id, nbr_id, cos_sim). A single window partitioned by query_id
     * caps parallelism at nQueries tasks — with 20 queries and a large
@@ -78,15 +84,7 @@ object Similarity {
     // [[graft.functions.CosineSimilarity]]'s undefined cases) is not a
     // rankable candidate; without the filter it would fill top-k slots
     // whenever the candidate pool is smaller than k
-    val nonNull = scored.where(col(scoreCol).isNotNull)
-    // spark.graft.topkPrune=off bypasses the bounded pre-selection — an
-    // A/B lever (`tools.Profile time --ab spark.graft.topkPrune=on,off`)
-    // and the parity spec, never for production (the bloomPrune precedent)
-    val pruned =
-      if (scored.sparkSession.conf.get("spark.graft.topkPrune", "on") == "off")
-        nonNull
-      else partitionLocalTopK(nonNull, k, scoreCol, ascending)
-    pruned
+    partitionLocalTopK(scored.where(col(scoreCol).isNotNull), k, scoreCol, ascending)
       .withColumn("__salt", pmod(col("nbr_id"), lit(salts)))
       .withColumn("__r1", row_number().over(w1))
       .filter(col("__r1") <= k)
@@ -96,79 +94,73 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
+  /** The one selection order: true iff (sa, na) outranks (sb, nb) under
+    * (score [asc|desc], nbr_id asc). Scores compare with Spark's SQL
+    * double ordering (−0.0 == 0.0, NaN greatest — `SQLOrderingUtil`'s
+    * rule, `if (x == y) 0 else Double.compare`), so a candidate kept or
+    * dropped by a [[BoundedTopK]] is exactly the one the window rank would
+    * keep or drop. */
+  private def outranks(sa: Double, na: Long, sb: Double, nb: Long,
+                       ascending: Boolean): Boolean = {
+    val c = if (sa == sb) 0 else java.lang.Double.compare(sa, sb)
+    if (c != 0) { if (ascending) c < 0 else c > 0 } else na < nb
+  }
+
+  private final case class Candidate[P](score: Double, nbr: Long, payload: P)
+
+  /** Worst-at-head bounded heap keeping the best `k` (score, nbr)
+    * candidates under [[outranks]]: the root is the weakest kept
+    * candidate, so a better one replaces it in O(log k). `payload` rides
+    * along (the row, or the unrounded distance). */
+  private final class BoundedTopK[P](k: Int, ascending: Boolean) {
+    private val heap = new java.util.PriorityQueue[Candidate[P]](k + 1,
+      (a: Candidate[P], b: Candidate[P]) =>
+        if (outranks(a.score, a.nbr, b.score, b.nbr, ascending)) 1
+        else if (outranks(b.score, b.nbr, a.score, a.nbr, ascending)) -1
+        else 0)
+    def offer(score: Double, nbr: Long, payload: P): Unit =
+      if (heap.size < k) heap.add(Candidate(score, nbr, payload))
+      else {
+        val w = heap.peek()
+        if (outranks(score, nbr, w.score, w.nbr, ascending)) {
+          heap.poll(); heap.add(Candidate(score, nbr, payload))
+        }
+      }
+    def kept: Iterator[(Long, P)] =
+      scala.jdk.CollectionConverters.IteratorHasAsScala(heap.iterator()).asScala
+        .map(c => (c.nbr, c.payload))
+  }
+
   /** Partition-local bounded selection feeding [[topKPerQuery]]'s rank
     * exchange: keep the best `k` candidates per query WITHIN each input
     * partition (a narrow mapPartitions, no shuffle), so the exchange
-    * carries O(partitions · queries · k) rows. Note (r19, figures in
-    * plans/MEASUREMENTS.md):
-    * Spark's own WindowGroupLimit already pushes a map-side group limit
-    * below the rank exchange, so the raw shuffle-volume bound is NOT
-    * unique to this operator — the measured win is (a) replacing the
-    * per-partition SORT WindowGroupLimit does with an O(n·log k) bounded
-    * heap and (b) pruning BEFORE the `__salt` column multiplies the
-    * per-group survivors by `salts`.
-    * Bit-identical by the same containment argument the salted window
-    * makes for salts: the global top-k under the total order
-    * (score [asc|desc], nbr_id asc) is contained in the union of
-    * per-partition top-ks, and the downstream two-phase rank re-ranks
-    * the survivors globally. Scores compare with Spark's SQL double
-    * ordering (−0.0 == 0.0, NaN greatest — `SQLOrderingUtil`'s rule,
-    * reproduced here as `if (x == y) 0 else Double.compare`), so a
-    * candidate kept/dropped here is exactly the one the window rank
-    * would keep/drop. Selection is a worst-at-head bounded heap —
-    * O(log k) per replacement, q·k rows of state per partition (the
-    * query set is bounded by contract on every D4 path). */
+    * carries O(partitions · queries · k) rows. Why this beats Spark's own
+    * map-side WindowGroupLimit: plans/MEASUREMENTS.md "Partition-local
+    * top-k". Bit-identical by the same containment argument the salted
+    * window makes for salts: the global top-k under [[outranks]] is
+    * contained in the union of per-partition top-ks, and the downstream
+    * two-phase rank re-ranks the survivors globally. State is q·k rows
+    * per partition (the query set is bounded by contract on every D4
+    * path). */
   private def partitionLocalTopK(scored: DataFrame, k: Int,
                                  scoreCol: String,
                                  ascending: Boolean): DataFrame = {
-    val spark = scored.sparkSession
     val schema = scored.schema
     val qi = schema.fieldIndex("query_id")
     val ni = schema.fieldIndex("nbr_id")
     val si = schema.fieldIndex(scoreCol)
-    val asc = ascending
-    val kk = k
     val out = scored.rdd.mapPartitions { it =>
-      import org.apache.spark.sql.Row
-      // Spark SQL's double ordering: value-equal (-0.0 == 0.0) is a tie;
-      // otherwise Double.compare (NaN greater than everything)
-      def cmpScore(x: Double, y: Double): Int =
-        if (x == y) 0 else java.lang.Double.compare(x, y)
-      // true iff `a` outranks `b` under (score [asc|desc], nbr_id asc)
-      def better(sa: Double, na: Long, sb: Double, nb: Long): Boolean = {
-        val c = cmpScore(sa, sb)
-        if (c != 0) { if (asc) c < 0 else c > 0 }
-        else na < nb
-      }
-      final case class Cand(score: Double, nbr: Long, row: Row)
-      // worst-at-head: the heap root is the currently weakest kept
-      // candidate, so an incoming better row replaces it in O(log k)
-      val worstFirst = new java.util.Comparator[Cand] {
-        def compare(a: Cand, b: Cand): Int =
-          if (better(a.score, a.nbr, b.score, b.nbr)) 1
-          else if (better(b.score, b.nbr, a.score, a.nbr)) -1
-          else 0
-      }
       val heaps = scala.collection.mutable.LongMap
-        .empty[java.util.PriorityQueue[Cand]]
+        .empty[BoundedTopK[org.apache.spark.sql.Row]]
       it.foreach { r =>
-        val q = r.get(qi).asInstanceOf[Number].longValue()
-        val n = r.get(ni).asInstanceOf[Number].longValue()
-        val s = r.get(si).asInstanceOf[Number].doubleValue()
-        val h = heaps.getOrElseUpdate(q,
-          new java.util.PriorityQueue[Cand](kk + 1, worstFirst))
-        if (h.size < kk) h.add(Cand(s, n, r))
-        else {
-          val w = h.peek()
-          if (better(s, n, w.score, w.nbr)) { h.poll(); h.add(Cand(s, n, r)) }
-        }
+        heaps.getOrElseUpdate(r.get(qi).asInstanceOf[Number].longValue(),
+          new BoundedTopK(k, ascending)).offer(
+          r.get(si).asInstanceOf[Number].doubleValue(),
+          r.get(ni).asInstanceOf[Number].longValue(), r)
       }
-      heaps.valuesIterator.flatMap { h =>
-        scala.jdk.CollectionConverters.IteratorHasAsScala(h.iterator()).asScala
-          .map(_.row)
-      }
+      heaps.valuesIterator.flatMap(_.kept.map(_._2))
     }
-    spark.createDataFrame(out, schema)
+    scored.sparkSession.createDataFrame(out, schema)
   }
 
   /** D4 exact — brute-force top-k cosine neighbors for a bounded query set
@@ -183,10 +175,27 @@ object Similarity {
       .select(col("vec_id").as("nbr_id"), col("embedding").as("n_emb"))
       .crossJoin(broadcast(q))
       .filter(col("nbr_id") =!= col("query_id"))
-      .select(col("query_id"), col("nbr_id"),
-        Features.pround(cosineExprIn(Some(embeddings.sparkSession), "q_emb", "n_emb"), 6).as("cos_sim"))
+      .select(col("query_id"), col("nbr_id"), cosSim(embeddings.sparkSession))
     topKPerQuery(joined, k)
   }
+
+  /** `bands` × `bits` seeded Gaussian hyperplanes over `dim`, as one fused
+    * native sign-bit column over `embedding`
+    * ([[graft.functions.HyperplaneBits]]; band t's bits start at bit
+    * t·bits). Band t's planes draw from `Random(seedOf(t))`. */
+  private def hyperplaneBits(dim: Int, bands: Int, bits: Int,
+                             seedOf: Int => Long): org.apache.spark.sql.Column = {
+    val planes: Seq[Seq[Double]] = (0 until bands).flatMap { t =>
+      val rng = new scala.util.Random(seedOf(t))
+      Seq.fill(bits)(Seq.fill(dim)(rng.nextGaussian()))
+    }
+    org.apache.spark.sql.GraftColumnBridge.column(graft.functions.HyperplaneBits(
+      org.apache.spark.sql.GraftColumnBridge.expression(col("embedding")), planes))
+  }
+
+  /** SQL text of band t's `bits`-wide bucket id sliced from `__bits`. */
+  private def bandSlice(t: Int, bits: Int): String =
+    s"(shiftrightunsigned(__bits, ${t * bits}) & ${(1L << bits) - 1L}L)"
 
   /** LSH-bucketed approximate top-k with OR-amplification: `nTables`
     * independent hash tables of `nPlanes` bits each; a pair is a candidate
@@ -199,17 +208,8 @@ object Similarity {
     // per row (graft.functions.HyperplaneBits), then cheap bit-slicing into
     // per-table bucket ids and one explode
     require(nTables * nPlanes <= 64, "hyperplane signature limited to 64 bits")
-    val allPlanes: Seq[Seq[Double]] = (0 until nTables).flatMap { t =>
-      val rng = new scala.util.Random(42L + t)
-      Seq.fill(nPlanes)(Seq.fill(dim)(rng.nextGaussian()))
-    }
-    val bitsCol = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.HyperplaneBits(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("embedding")),
-        allPlanes))
-    val mask = (1L << nPlanes) - 1L
     val bucketCols = (0 until nTables).map(t =>
-      s"concat('$t:', CAST(shiftrightunsigned(__bits, ${t * nPlanes}) & ${mask}L AS STRING))")
+      s"concat('$t:', CAST(${bandSlice(t, nPlanes)} AS STRING))")
     // slim (vec_id, bucket) relation — embeddings deliberately NOT carried
     // (verification re-fetches them by id; shuffling vectors through the
     // candidate distinct would cost more than the re-scan). Materialized:
@@ -218,7 +218,7 @@ object Similarity {
     // explode would run twice (no CSE across self-joins, the Dedup rule).
     // The stage holds nTables small rows per vector, not vectors.
     val bucketed = graft.Materialize.stage(embeddings
-      .withColumn("__bits", bitsCol)
+      .withColumn("__bits", hyperplaneBits(dim, nTables, nPlanes, 42L + _))
       .select(col("vec_id"),
         explode(expr(bucketCols.mkString("array(", ", ", ")"))).as("bucket")))
     val q = bucketed.filter(col("vec_id") < nQueries)
@@ -233,9 +233,31 @@ object Similarity {
     val cands = candIds
       .join(embeddings.select(col("vec_id").as("nbr_id"), col("embedding").as("n_emb")), "nbr_id")
       .join(broadcast(qEmb), "query_id")
-      .select(col("query_id"), col("nbr_id"),
-        Features.pround(cosineExprIn(Some(embeddings.sparkSession), "q_emb", "n_emb"), 6).as("cos_sim"))
+      .select(col("query_id"), col("nbr_id"), cosSim(embeddings.sparkSession))
     topKPerQuery(cands, k)
+  }
+
+  /** Squared L2 distance Σ (a(off + j) − b(j))² over j < len, summed left
+    * to right — the one distance every quantizer, encoder, probe and
+    * lookup table here uses, so each sees the same IEEE sum. */
+  private def sqL2(a: Array[Double], off: Int, b: Array[Double], len: Int): Double = {
+    var d = 0.0; var j = 0
+    while (j < len) { val t = a(off + j) - b(j); d += t * t; j += 1 }
+    d
+  }
+
+  /** Index of the centroid in `cs` nearest to a(off until off + len):
+    * the FIRST minimum, with NaN distances ordered greatest
+    * (`Double.compare`) — Spark's `array_position(d, array_min(d))`. */
+  private def nearest(a: Array[Double], off: Int, cs: Array[Array[Double]],
+                      len: Int): Int = {
+    var best = 0; var bestD = sqL2(a, off, cs(0), len); var ci = 1
+    while (ci < cs.length) {
+      val d = sqL2(a, off, cs(ci), len)
+      if (java.lang.Double.compare(d, bestD) < 0) { best = ci; bestD = d }
+      ci += 1
+    }
+    best
   }
 
   /** Seeded k-means++ init + Lloyd iterations over a bounded in-memory
@@ -253,7 +275,7 @@ object Similarity {
     // fix the quantizer dimension to the sample's MODAL vector length and
     // drop the stragglers: one truncated embedding in the sample (a
     // partial encoder failure — the same hostile class CosineSimilarity
-    // returns NULL for) would otherwise either crash sqDist's fixed-dim
+    // returns NULL for) would otherwise either crash sqL2's fixed-dim
     // loop (AIOOBE) or, if it happened to be points(0), silently truncate
     // every distance to its prefix — wrong centroids with no error
     val dim = rawPoints.map(_.length).groupBy(identity)
@@ -264,15 +286,10 @@ object Similarity {
         s"for k=$k clusters — the D² seeding would degenerate into duplicate " +
         s"centroids; raise samplesPerCentroid / the corpus, or lower nClusters")
     val rng = new scala.util.Random(seed)
-    def sqDist(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var j = 0
-      while (j < dim) { val t = a(j) - b(j); d += t * t; j += 1 }
-      d
-    }
     // k-means++ seeding: first centroid uniform, next ∝ D²(x)
     val centroids = Array.ofDim[Array[Double]](k)
     centroids(0) = points(rng.nextInt(points.length)).clone()
-    val d2 = points.map(sqDist(_, centroids(0)))
+    val d2 = points.map(sqL2(_, 0, centroids(0), dim))
     var c = 1
     while (c < k) {
       val total = d2.sum
@@ -283,7 +300,7 @@ object Similarity {
       centroids(c) = points(pick).clone()
       var j = 0
       while (j < points.length) {
-        val d = sqDist(points(j), centroids(c))
+        val d = sqL2(points(j), 0, centroids(c), dim)
         if (d < d2(j)) d2(j) = d
         j += 1
       }
@@ -297,13 +314,7 @@ object Similarity {
       java.util.Arrays.fill(counts, 0L)
       sums.foreach(java.util.Arrays.fill(_, 0.0))
       points.foreach { p =>
-        var best = 0; var bestD = sqDist(p, centroids(0))
-        var ci = 1
-        while (ci < k) {
-          val d = sqDist(p, centroids(ci))
-          if (d < bestD) { bestD = d; best = ci }
-          ci += 1
-        }
+        val best = nearest(p, 0, centroids, dim)
         counts(best) += 1
         var j = 0
         while (j < dim) { sums(best)(j) += p(j); j += 1 }
@@ -357,19 +368,8 @@ object Similarity {
 
   /** Train the IVF coarse quantizer once (capped-sample k-means) so
     * repeated [[ivfTopK]] calls amortize the index build — the production
-    * shape: build at ingest, probe at query time.
-    *
-    * The training sample is the top-[[trainSampleTarget]] by a SEEDED
-    * HASH of `vec_id` (a distributed TakeOrdered: each task keeps its
-    * local top-N, the driver merges) — a uniform draw over the whole
-    * corpus that is deterministic under any partition count or arrival
-    * order. The obvious alternatives both fail at scale: `limit(n)`
-    * returns whatever partitions answer first, so a range-partitioned or
-    * time-ordered corpus trains every centroid on one shard of the
-    * distribution; Bernoulli `sample(fraction, seed)` derives its stream
-    * from the partition index, so the drawn set — and therefore the
-    * centroids and every downstream cell assignment — changes when the
-    * layout does, breaking replay-identical verification.
+    * shape: build at ingest, probe at query time. The sample is
+    * [[trainingSample]]'s seeded-hash draw of [[trainSampleTarget]] rows.
     *
     * Past the [[trainsOnDriver]] knee (k ≳ 1000 at the default 20
     * samples/centroid) the hand-off is [[kmeansDistributedLloyd]].
@@ -383,20 +383,34 @@ object Similarity {
                         seed: Long = 42L,
                         samplesPerCentroid: Int = 20): Array[Array[Double]] = {
     require(nLists >= 1, s"nLists must be >= 1, got $nLists")
+    val target = trainSampleTarget(nLists, samplesPerCentroid)
     if (!trainsOnDriver(nLists, samplesPerCentroid))
-      return kmeansDistributedLloyd(embeddings, nLists,
-        trainSampleTarget(nLists, samplesPerCentroid), iters = 5, seed)
-    val sample: Array[Array[Double]] = trainable(embeddings)
-      .select(col("embedding"),
-        xxhash64(col("vec_id"), lit(seed)).as("__draw"))
+      kmeansDistributedLloyd(embeddings, nLists, target, iters = 5, seed)
+    else kmeansLloyd(trainingSample(embeddings, target, seed), nLists, iters = 5, seed)
+  }
+
+  /** A quantizer's driver-side training sample: the `n` [[trainable]]
+    * rows (of length `dim`, when given) with the smallest SEEDED HASH of
+    * `vec_id` (a distributed TakeOrdered: each task keeps its local top-n,
+    * the driver merges) — a uniform draw over the whole corpus that is
+    * deterministic under any partition count or arrival order. The
+    * obvious alternatives both fail at scale: `limit(n)` returns whatever
+    * partitions answer first, so a range-partitioned or time-ordered
+    * corpus trains every centroid on one shard of the distribution;
+    * Bernoulli `sample(fraction, seed)` derives its stream from the
+    * partition index, so the drawn set — and therefore the centroids and
+    * every downstream cell assignment — changes when the layout does. */
+  private def trainingSample(embeddings: DataFrame, n: Long, seed: Long,
+                             dim: Option[Int] = None): Array[Array[Double]] = {
+    val rows = trainable(embeddings)
+    dim.fold(rows)(d => rows.where(size(col("embedding")) === d))
+      .select(col("embedding"), xxhash64(col("vec_id"), lit(seed)).as("__draw"))
       // vec_id tiebreaker: a hash tie exactly at the cap boundary would
       // otherwise leave the chosen row layout-dependent
       .orderBy(col("__draw"), col("vec_id"))
-      .limit(trainSampleTarget(nLists, samplesPerCentroid).toInt)
-      .select(col("embedding"))
-      .collect()
+      .limit(n.toInt)
+      .select(col("embedding")).collect()
       .map(r => toDoubleArray(r.getSeq[Any](0)))
-    kmeansLloyd(sample, nLists, iters = 5, seed)
   }
 
   /** Number-safe element read: the canonical embedding type is
@@ -506,23 +520,11 @@ object Similarity {
         val sums = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
         val counts = scala.collection.mutable.HashMap.empty[Int, Long]
         rows.foreach { r =>
-          val e = r.getSeq[Any](0)
-          val x = new Array[Double](dim)
-          var j = 0
-          while (j < dim) { x(j) = e(j).asInstanceOf[Number].doubleValue(); j += 1 }
-          var best = 0
-          var bestD = { var d = 0.0; var j2 = 0
-            while (j2 < dim) { val t = x(j2) - cs(0)(j2); d += t * t; j2 += 1 }; d }
-          var ci = 1
-          while (ci < cs.length) {
-            var d = 0.0; var j2 = 0
-            while (j2 < dim) { val t = x(j2) - cs(ci)(j2); d += t * t; j2 += 1 }
-            if (java.lang.Double.compare(d, bestD) < 0) { best = ci; bestD = d }
-            ci += 1
-          }
+          val x = toDoubleArray(r.getSeq[Any](0))
+          val best = nearest(x, 0, cs, dim)
           val s = sums.getOrElseUpdate(best, new Array[Long](dim))
-          var j3 = 0
-          while (j3 < dim) { s(j3) += math.round(x(j3) * scale); j3 += 1 }
+          var j = 0
+          while (j < dim) { s(j) += math.round(x(j) * scale); j += 1 }
           counts.update(best, counts.getOrElse(best, 0L) + 1L)
         }
         sums.iterator.map { case (c, s) => (c, (s, counts(c))) }
@@ -555,68 +557,37 @@ object Similarity {
     embeddings.where(col("embedding").isNotNull && size(col("embedding")) > 0 &&
       !expr("exists(embedding, x -> x IS NULL)"))
 
-  /** Rows a quantizer can TRAIN on: [[indexable]] minus NaN-bearing
-    * vectors. A NaN element is harmless at assignment time (all
-    * distances compare NaN-greatest, the row lands in cell 0, and every
-    * exact verification against it yields NULL cosine — it can never
-    * emit a pair), but inside Lloyd's it poisons training:
-    * `round(NaN·2^24) = 0` adds zero to every element sum while still
-    * incrementing the count, silently dragging the first centroid
-    * toward the origin. Poisoned rows are quarantine material for the
-    * caller's validation pass, not training mass. */
+  /** Rows a quantizer can TRAIN on: [[indexable]] minus vectors with a
+    * non-finite element. A NaN or ±Inf element is harmless at assignment
+    * time (all its distances are NaN or +Inf, the row lands in one cell,
+    * and every exact verification against it yields NULL cosine — it can
+    * never emit a pair), but inside Lloyd's it poisons training: on the
+    * driver an Inf drags its centroid to Inf/NaN; in the distributed
+    * trainer `round(NaN·2^24) = 0` adds zero to every element sum while
+    * still counting the row, and `round(Inf·2^24)` saturates at
+    * `Long.MaxValue` and overflows the cell sum. Poisoned rows are
+    * quarantine material for the caller's validation pass, not training
+    * mass. */
   private def trainable(embeddings: DataFrame): DataFrame =
-    indexable(embeddings).where(!expr("exists(embedding, x -> isnan(x))"))
+    indexable(embeddings).where(forall(col("embedding"),
+      x => abs(x.cast("double")) < lit(Double.PositiveInfinity)))
 
   /** Assign each vector its nearest centroid — ONE scan, no join, no
-    * shuffle, materialized ([[graft.Materialize.stage]]) because every consumer scans
-    * the assigned relation more than once. Always the broadcast kernel
-    * ([[assignCellsBroadcast]], the MLlib-KMeans shape): the plan is O(1)
-    * in nClusters — which is what lets `nClusters ~ n / targetCellSize`
-    * scale to the 50k-cluster SemDeDup regime — AND it is the faster
-    * form at every non-trivial size. The previous knee routed
-    * ≤ 64 centroids through [[assignCellsLiteral]] on a "fully codegen'd,
-    * zero per-row overhead" theory that measurement falsified (r18,
-    * 250k × 64-dim rows, k=16: literal 9.6 s vs kernel 0.47 s — the
-    * aggregate/zip_with higher-order functions allocate per ELEMENT, so
-    * the literal plan pays ~k·dim allocations/row where the kernel pays
-    * one primitive loop); at fixture sizes the two are within the same
-    * ~0.1 s fixed cost, so retiring the knee is bench-neutral at small n
-    * and 20× at probe scale. The literal form remains as the
-    * SQL-expressible REFERENCE implementation — the parity spec pins the
-    * kernel bit-identical to it (same IEEE sum order, first-minimum
-    * argmin, NaN-greatest, NULL cell on dim mismatch), which is exactly
-    * the role an independent second implementation should play. */
-  private[graft] def assignCells(corpus: DataFrame,
-                                     centroids: Array[Array[Double]]): DataFrame =
-    assignCellsBroadcast(corpus, centroids)
-
-  private[graft] def assignCellsLiteral(corpus: DataFrame,
-                                            centroids: Array[Array[Double]]): DataFrame = {
-    val distExprs = centroids.map { c =>
-      val arr = c.map(dlit).mkString("array(", ", ", ")")
-      s"aggregate(zip_with(embedding, $arr, (x, w) -> (CAST(x AS DOUBLE) - w) * (CAST(x AS DOUBLE) - w)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)"
-    }
-    graft.Materialize.stage(corpus
-      .select(col("vec_id"), col("embedding"),
-        expr(distExprs.mkString("array(", ", ", ")")).as("__dists"))
-      .select(col("vec_id"), col("embedding"),
-        (expr("array_position(__dists, array_min(__dists))") - 1L)
-          .cast("int").as("cell")))
-  }
-
-  /** The large-quantizer assignment kernel. Semantics mirror the literal
-    * path EXACTLY, including its degenerate edges, so the knee never
-    * changes a result:
-    *  - distances accumulate in index order with the same
-    *    `(double(x) − w)²` terms → the same IEEE-754 sum;
-    *  - argmin keeps the FIRST minimum (array_position returns the first
-    *    match) and orders NaN greatest (Spark's array_min ordering —
-    *    `Double.compare` gives both);
+    * shuffle, materialized ([[graft.Materialize.stage]]) because every
+    * consumer scans the assigned relation more than once. A broadcast
+    * kernel (the MLlib-KMeans shape): the plan is O(1) in nClusters,
+    * which is what lets `nClusters ~ n / targetCellSize` scale to the
+    * 50k-cluster SemDeDup regime (why not a literal-expression plan:
+    * plans/MEASUREMENTS.md "IVF cell assignment"). Semantics are those of
+    * the SQL form `array_position(d, array_min(d)) - 1` over the distance
+    * array, which the parity spec keeps as an independent reference:
+    *  - distances are [[sqL2]] over `(double(x) − w)` terms in index order;
+    *  - argmin is [[nearest]] (first minimum, NaN greatest);
     *  - a vector whose length differs from the quantizer dim gets a NULL
-    *    cell (zip_with pads the shorter side with nulls, nulling every
-    *    distance, so array_min and the position are NULL there). */
-  private[graft] def assignCellsBroadcast(corpus: DataFrame,
-                                              centroids: Array[Array[Double]]): DataFrame = {
+    *    cell. Elements are read as Numbers, so a double-typed embedding
+    *    column works like the canonical float one. */
+  private[graft] def assignCells(corpus: DataFrame,
+                                 centroids: Array[Array[Double]]): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val spark = corpus.sparkSession
@@ -628,29 +599,10 @@ object Similarity {
       val cs = bc.value
       val dim = if (cs.isEmpty) -1 else cs(0).length
       it.map { r =>
-        // Number read, not getSeq[Float]: the literal path CASTs any
-        // numeric array, so a double-typed embedding column must take
-        // the same knee without a ClassCastException at k=65
-        val emb = r.getSeq[Number](1)
+        val emb = r.getSeq[Any](1)
         val cell: Any =
           if (emb == null || emb.length != dim) null
-          else {
-            val x = new Array[Double](dim)
-            var j = 0
-            while (j < dim) { x(j) = emb(j).doubleValue(); j += 1 }
-            def dist(c: Array[Double]): Double = {
-              var d = 0.0; var k = 0
-              while (k < dim) { val t = x(k) - c(k); d += t * t; k += 1 }
-              d
-            }
-            var best = 0; var bestD = dist(cs(0)); var ci = 1
-            while (ci < cs.length) {
-              val d = dist(cs(ci))
-              if (java.lang.Double.compare(d, bestD) < 0) { best = ci; bestD = d }
-              ci += 1
-            }
-            best
-          }
+          else nearest(toDoubleArray(emb), 0, cs, dim)
         Row(r.get(0), r.get(1), cell)
       }
     }
@@ -791,9 +743,7 @@ object Similarity {
         .join(rel.select(col("cell"), col("vec_id").as("id_b"),
           col("embedding").as("n_emb")), "cell")
         .filter(col("id_a") < col("id_b"))
-        .select(col("cell"), col("id_a"), col("id_b"),
-          Features.pround(cosineExprIn(Some(spark), "q_emb", "n_emb"), 6)
-            .as("cos_sim"))
+        .select(col("cell"), col("id_a"), col("id_b"), cosSim(spark))
     val pairs =
       if (hotCells.isEmpty) exactPairs(assigned)
       else {
@@ -806,20 +756,10 @@ object Similarity {
         // relation, candidates deduped BEFORE the exact cosine — the
         // lshTopK shape. Checkpointed: it feeds both sides of the
         // band-keyed self-join (no CSE across self-joins).
-        val dim = centroids(0).length
-        val allPlanes: Seq[Seq[Double]] = (0 until bands).flatMap { t =>
-          val rng = new scala.util.Random(seed + 1000003L * (t + 1))
-          Seq.fill(bits)(Seq.fill(dim)(rng.nextGaussian()))
-        }
-        val bitsCol = org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.HyperplaneBits(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("embedding")),
-            allPlanes))
-        val mask = (1L << bits) - 1L
-        val bandCols = (0 until bands).map(t =>
-          s"${t.toLong << 32}L + (shiftrightunsigned(__bits, ${t * bits}) & ${mask}L)")
+        val bandCols = (0 until bands).map(t => s"${t.toLong << 32}L + ${bandSlice(t, bits)}")
         val banded = graft.Materialize.stage(hot
-          .withColumn("__bits", bitsCol)
+          .withColumn("__bits", hyperplaneBits(centroids(0).length, bands, bits,
+            t => seed + 1000003L * (t + 1)))
           .select(col("cell"), col("vec_id"),
             explode(expr(bandCols.mkString("array(", ", ", ")"))).as("band")))
         val candPairs = banded
@@ -831,9 +771,7 @@ object Similarity {
         val hotPairs = candPairs
           .join(hot.select(col("vec_id").as("id_a"), col("embedding").as("q_emb")), "id_a")
           .join(hot.select(col("vec_id").as("id_b"), col("embedding").as("n_emb")), "id_b")
-          .select(col("cell"), col("id_a"), col("id_b"),
-            Features.pround(cosineExprIn(Some(spark), "q_emb", "n_emb"), 6)
-              .as("cos_sim"))
+          .select(col("cell"), col("id_a"), col("id_b"), cosSim(spark))
         exactPairs(cold).unionByName(hotPairs)
       }
     pairs
@@ -872,6 +810,25 @@ object Similarity {
       .orderBy(col("cell")).collect()
       .map(_.getSeq[Double](1).toArray)
 
+  /** The bounded query side of an IVF probe: (vec_id, vector) of every
+    * row of `rel` whose length is `dim`, collected to the driver. A
+    * wrong-length query has no cell, no lookup table and no defined
+    * cosine, so it never probes. */
+  private def collectVectors(rel: DataFrame, dim: Int): Array[(Long, Array[Double])] =
+    rel.where(size(col("embedding")) === dim).select(col("vec_id"), col("embedding"))
+      .collect().map(r => r.getLong(0) -> toDoubleArray(r.getSeq[Any](1)))
+
+  /** Each query's `nProbe` nearest cells by [[sqL2]] (stable sort, so
+    * ties go to the lower cell), as (query id, cell) pairs. */
+  private def probeCells(queries: Array[(Long, Array[Double])],
+                         centroids: Array[Array[Double]],
+                         nProbe: Int): Array[(Long, Int)] =
+    queries.flatMap { case (qid, q) =>
+      centroids.zipWithIndex
+        .map { case (c, i) => (i, sqL2(q, 0, c, math.min(q.length, c.length))) }
+        .sortBy(_._2).take(nProbe).map(p => (qid, p._1))
+    }
+
   /** D4 scale path #2 — IVF (inverted-file) approximate nearest neighbors:
     * a k-means coarse quantizer partitions the corpus into `nLists`
     * cells; a query probes its `nProbe` nearest centroids and re-ranks
@@ -907,27 +864,16 @@ object Similarity {
     // queries probe their nProbe nearest centroids (tiny driver-side math
     // over nQueries × nLists — the centroid table is the "index")
     val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .collect()
     import spark.implicits._
-    val probes = queries.flatMap { r =>
-      val q = toDoubleArray(r.getSeq[Any](1))
-      val byDist = centroids.zipWithIndex.map { case (c, i) =>
-        var d = 0.0; var j = 0
-        while (j < math.min(q.length, c.length)) { val t = q(j) - c(j); d += t * t; j += 1 }
-        (i, d)
-      }.sortBy(_._2).take(nProbe).map(_._1)
-      byDist.map(cell => (r.getLong(0), cell))
-    }.toSeq.toDF("query_id", "cell")
-    val qEmb = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val probes = probeCells(collectVectors(queries, centroids(0).length),
+      centroids, nProbe).toSeq.toDF("query_id", "cell")
+    val qEmb = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val cands = assigned
       .select(col("vec_id").as("nbr_id"), col("embedding").as("n_emb"), col("cell"))
       .join(broadcast(probes), "cell")
       .filter(col("nbr_id") =!= col("query_id"))
       .join(broadcast(qEmb), "query_id")
-      .select(col("query_id"), col("nbr_id"),
-        Features.pround(cosineExprIn(Some(spark), "q_emb", "n_emb"), 6).as("cos_sim"))
+      .select(col("query_id"), col("nbr_id"), cosSim(spark))
     topKPerQuery(cands, k)
   }
 
@@ -960,8 +906,7 @@ object Similarity {
     val b = sub.select(col("vec_id").as("id_b"), col("embedding").as("n_emb"))
     a.crossJoin(broadcast(b))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        Features.pround(cosineExprIn(Some(embeddings.sparkSession), "q_emb", "n_emb"), 6).as("cos_sim"))
+      .select(col("id_a"), col("id_b"), cosSim(embeddings.sparkSession))
       .filter(col("cos_sim") >= minSim)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -983,11 +928,16 @@ object Similarity {
   // ------------------------------------------------------------------
 
   /** Train PQ codebooks: the vector is split into `m` equal subspaces
-    * and each gets its own `ksub`-centroid k-means codebook (trained on
-    * the same seeded-hash layout-invariant draw as
-    * [[trainIvfCentroids]], one sample shared by all subspaces; seeds
-    * differ per subspace so codebooks are independent). `ksub` ≤ 256 so
-    * a code is one byte. Returns codebooks(sub)(code) = centroid.
+    * and each gets its own `ksub`-centroid k-means codebook, trained on
+    * one [[trainingSample]] draw shared by all subspaces (seeds differ
+    * per subspace so codebooks are independent). `ksub` ≤ 256 so a code
+    * is one byte. Returns codebooks(sub)(code) = centroid.
+    *
+    * `residualOf = Some(coarse)` trains RESIDUAL codebooks (the IVFADC
+    * `by_residual=true` form): each sample vector is first assigned its
+    * [[nearest]] coarse centroid — the same argmin [[assignCells]] uses,
+    * so a vector's training-time cell is its encode-time cell — and the
+    * codebooks train on (x − coarse(cell)).
     *
     * Parameter note (measured on the real fixture, round 18): the
     * declared m=16 / ksub=64 (16 bytes/vector, 16× compression at
@@ -1001,35 +951,35 @@ object Similarity {
     * production uses ksub=256 with the sample auto-scaling to 20·ksub —
     * same code path. */
   def trainPqCodebooks(embeddings: DataFrame, dim: Int, m: Int = 16,
-                       ksub: Int = 64,
-                       seed: Long = 42L): Array[Array[Array[Double]]] = {
+                       ksub: Int = 64, seed: Long = 42L,
+                       residualOf: Option[Array[Array[Double]]] = None)
+      : Array[Array[Array[Double]]] = {
     require(m >= 1 && ksub >= 2 && ksub <= 256,
       s"need 1 <= m and 2 <= ksub <= 256 (byte codes), got m=$m ksub=$ksub")
     require(dim % m == 0, s"PQ subspaces must tile the vector: dim=$dim, m=$m")
+    residualOf.foreach(coarse => require(coarse.nonEmpty && coarse.forall(_.length == dim),
+      s"coarse centroids must match dim=$dim for residual training"))
     val subDim = dim / m
-    val sample: Array[Array[Double]] = trainable(embeddings)
-      .where(size(col("embedding")) === dim) // codes are dim-fixed by contract
-      .select(col("embedding"), xxhash64(col("vec_id"), lit(seed)).as("__draw"))
-      .orderBy(col("__draw"), col("vec_id"))
-      .limit(trainSampleTarget(ksub).toInt)
-      .select(col("embedding")).collect()
-      .map(r => toDoubleArray(r.getSeq[Any](0)))
+    // codes are dim-fixed by contract
+    val sample = trainingSample(embeddings, trainSampleTarget(ksub), seed, Some(dim))
+      .map(x => residualOf.fold(x)(coarse => minus(x, coarse(nearest(x, 0, coarse, dim)))))
     trainSubspacesParallel(embeddings.sparkSession, m, s => {
       val pts = sample.map(v => java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
       kmeansLloyd(pts, ksub, iters = 5, seed + s)
     })
   }
 
+  /** Element-wise x − c over x's length. */
+  private def minus(x: Array[Double], c: Array[Double]): Array[Double] =
+    Array.tabulate(x.length)(j => x(j) - c(j))
+
   /** Runs the m INDEPENDENT per-subspace k-means trainings concurrently
-    * (r20 optimization; guide §1.2 "per-task work"): the driver-knee
-    * codebook build was the dominant fixed cost of every self-training
-    * PQ query — m=16 sequential kmeansLloyd calls ≈ m·sample·ksub·subDim
-    * ·iters distance ops on ONE core while the whole worker pool idles
-    * between Spark jobs. Each subspace trains on its own slice with its
-    * own seed and writes its own output slot, so the result is
-    * bit-identical to the sequential loop under any interleaving. Plain
-    * threads, not an execution context: bounded by m (≤ 16 at every
-    * declared call), no shared pool to starve Spark's own machinery. */
+    * (why: plans/MEASUREMENTS.md "Parallel PQ codebook training"). Each
+    * subspace trains on its own slice with its own seed and writes its
+    * own output slot, so the result is bit-identical to the sequential
+    * loop under any interleaving. Plain threads, not an execution
+    * context: bounded by m (≤ 16 at every declared call), no shared pool
+    * to starve Spark's own machinery. */
   private def trainSubspacesParallel(spark: org.apache.spark.sql.SparkSession,
       m: Int,
       train: Int => Array[Array[Double]]): Array[Array[Array[Double]]] = {
@@ -1058,7 +1008,7 @@ object Similarity {
   /** Fail fast on a persisted codebook that does not tile the caller's
     * vector dimension — without this, a mismatched artifact silently
     * NULL-quarantines EVERY vector (empty result, no error) when the
-    * implied dim is smaller, and [[adcLuts]] indexes query subvectors
+    * implied dim is smaller, and [[subspaceLut]] indexes query subvectors
     * out of bounds when it is larger. Mirrors [[trainPqCodebooks]]'
     * `dim % m == 0` require on the training side. */
   private def requireBooksTile(books: Array[Array[Array[Double]]],
@@ -1083,11 +1033,8 @@ object Similarity {
     * waiting to happen. Loud-failure contract mirrors
     * [[requireBooksTile]]: a codes relation without the expected
     * columns/types is a wrong or corrupt index artifact, never a silent
-    * quarantine. Code WIDTH (the one encoding-compatibility signal the
-    * bytes carry — codes must have exactly m = books.length entries) is
-    * checked per row inside each scoring kernel (a closure-local check —
-    * codes encoded with m' ≠ m codebooks would otherwise AIOOBE or
-    * silently sum a prefix); codebook-VALUE compatibility is the
+    * quarantine. Code WIDTH is checked per row inside each scoring
+    * kernel ([[checkWidth]]); codebook-VALUE compatibility is the
     * caller's artifact-management contract (load books and codes from
     * the same build). */
   private def requireCodesRelation(codes: DataFrame,
@@ -1109,11 +1056,10 @@ object Similarity {
 
   /** Encode each vector as its m nearest-codebook-centroid bytes — the
     * persisted PQ index relation (vec_id, [carry...,] codes BINARY).
-    * One broadcast-codebook scan (the [[assignCellsBroadcast]] kernel
-    * shape — O(1) plan size in m·ksub); argmin keeps the first minimum
-    * with NaN ordered greatest (Double.compare), matching every other
-    * assignment kernel here. A vector whose length differs from the
-    * codebook dim gets NULL codes (quarantine, the [[semanticDedup]]
+    * One broadcast-codebook scan (the [[assignCells]] kernel shape —
+    * O(1) plan size in m·ksub); each subspace code is [[nearest]], the
+    * argmin every assignment here uses. A vector whose length differs
+    * from the codebook dim gets NULL codes (quarantine, the [[semanticDedup]]
     * malformed-vector contract). `carry` propagates extra columns
     * (e.g. the IVF cell) through the one scan instead of re-joining.
     *
@@ -1158,37 +1104,15 @@ object Similarity {
       val (books, coarseOpt) = bc.value
       it.map { r =>
         val embIdx = r.length - 1
-        val emb = r.getSeq[Number](embIdx)
+        val emb = r.getSeq[Any](embIdx)
         val cellOk = cellIdx.forall(ci => !r.isNullAt(ci))
         val codes: Any =
           if (emb == null || emb.length != dim || !cellOk) null
           else {
-            val x = new Array[Double](dim)
-            var j = 0
-            while (j < dim) { x(j) = emb(j).doubleValue(); j += 1 }
-            cellIdx.foreach { ci =>
-              val c = coarseOpt.get(r.get(ci).asInstanceOf[Number].intValue())
-              var j2 = 0
-              while (j2 < dim) { x(j2) -= c(j2); j2 += 1 }
-            }
-            val cs = new Array[Byte](m)
-            var s = 0
-            while (s < m) {
-              val book = books(s)
-              val off = s * subDim
-              var best = 0
-              var bestD = Double.MaxValue
-              var c = 0
-              while (c < book.length) {
-                var d = 0.0; var j2 = 0
-                while (j2 < subDim) { val t = x(off + j2) - book(c)(j2); d += t * t; j2 += 1 }
-                if (java.lang.Double.compare(d, bestD) < 0) { best = c; bestD = d }
-                c += 1
-              }
-              cs(s) = best.toByte
-              s += 1
-            }
-            cs
+            val raw = toDoubleArray(emb)
+            val x = cellIdx.fold(raw)(ci =>
+              minus(raw, coarseOpt.get(r.get(ci).asInstanceOf[Number].intValue())))
+            Array.tabulate[Byte](m)(s => nearest(x, s * subDim, books(s), subDim).toByte)
           }
         Row.fromSeq(Seq.tabulate(embIdx)(r.get) :+ codes)
       }
@@ -1208,7 +1132,6 @@ object Similarity {
              m: Int = 16, ksub: Int = 64, seed: Long = 42L,
              precomputedCodebooks: Option[Array[Array[Array[Double]]]] = None,
              precomputedCodes: Option[DataFrame] = None): DataFrame = {
-    val spark = embeddings.sparkSession
     val books = precomputedCodebooks.getOrElse(
       trainPqCodebooks(embeddings, dim, m, ksub, seed))
     requireBooksTile(books, dim)
@@ -1220,162 +1143,184 @@ object Similarity {
     // remains for the declared query
     val encoded = requireCodesRelation(precomputedCodes.getOrElse(
       pqEncode(indexable(embeddings), books, materialize = false)))
-    val luts = adcLuts(embeddings, dim, nQueries, books)
-    lutScanTopK(spark, encoded, luts, k, books.length, "adc_dist")
+    val luts = collectVectors(indexable(embeddings).filter(col("vec_id") < nQueries), dim)
+      .map { case (qid, q) => qid -> subspaceLut(q, books) }
+    lutScanTopK(encoded, luts, k, books.length, "adc_dist")
   }
 
   /** D4 scale path #3b — PQ/SDC (symmetric distance computation, Jégou
     * et al. 2011 §III.B): the QUERY is represented by its m-byte codes
     * too, and distance is the sum of m codebook-to-codebook subspace
     * distances — d(q, x) ≈ Σ_s ‖c(qcode_s) − c(xcode_s)‖². The per-query
-    * lookup table is a ROW of the precomputed m × ksub × ksub
-    * codeword-pair distance tables (driver-built once from the
-    * codebooks alone — m·ksub²·subDim flops, ~1M at the defaults), so
-    * query time needs NO raw vectors at all: the published SDC
-    * trade-off — one extra quantization error on the query side (lower
-    * accuracy than ADC at the same byte budget, pinned by the spec's
-    * SDC-vs-ADC comparison) in exchange for querying straight from the
-    * persisted codes artifact (index-to-index joins, raw-vector-free
-    * re-ranking). Same heap-inside-the-scan kernel, same salted
-    * two-phase rank; output column `sdc_dist`. */
+    * lookup table is therefore the [[subspaceLut]] of the query's
+    * decoded codewords, built from the codebooks alone, so query time
+    * needs NO raw vectors at all: the published SDC trade-off — one
+    * extra quantization error on the query side (lower accuracy than ADC
+    * at the same byte budget, pinned by the spec's SDC-vs-ADC
+    * comparison) in exchange for querying straight from the persisted
+    * codes artifact (index-to-index joins, raw-vector-free re-ranking).
+    * Same heap-inside-the-scan kernel, same salted two-phase rank;
+    * output column `sdc_dist`. */
   def pqTopKSDC(embeddings: DataFrame, dim: Int, nQueries: Int, k: Int,
                 m: Int = 16, ksub: Int = 64, seed: Long = 42L,
                 precomputedCodebooks: Option[Array[Array[Array[Double]]]] = None,
                 precomputedCodes: Option[DataFrame] = None): DataFrame = {
-    val spark = embeddings.sparkSession
     val books = precomputedCodebooks.getOrElse(
       trainPqCodebooks(embeddings, dim, m, ksub, seed))
     requireBooksTile(books, dim)
-    val mBooks = books.length
-    val subDim = books(0)(0).length
     val encoded = requireCodesRelation(precomputedCodes.getOrElse(
       pqEncode(indexable(embeddings), books, materialize = false)))
-    // m × ksub × ksub codeword-pair tables — from the codebooks alone
-    val pairTables: Array[Array[Array[Double]]] = books.map { book =>
-      Array.tabulate(book.length) { i =>
-        Array.tabulate(book.length) { j =>
-          var d = 0.0; var t = 0
-          while (t < subDim) { val x = book(i)(t) - book(j)(t); d += x * x; t += 1 }
-          d
-        }
-      }
-    }
-    // bounded query side: the queries' CODES (nQueries × m bytes); their
-    // per-query LUT is the qcode-indexed row of each pair table.
-    // r20 optimization (guide §1.2): on the self-encode path this collect
-    // previously read `encoded` — whose RDD-kernel boundary blocks the
-    // vec_id filter from reaching the scan — so the WHOLE corpus was
-    // encoded twice per query (once here, once in the scan). Encoding
-    // the bounded query slice directly is per-row identical (pqEncode is
-    // deterministic per row) and O(nQueries); a supplied codes artifact
-    // is still read as-is — its codes ARE the index, not re-derivable.
+    // bounded query side: the queries' CODES (nQueries × m bytes). On the
+    // self-encode path only the query slice is encoded (per-row identical,
+    // O(nQueries); plans/MEASUREMENTS.md "SDC query side"); a supplied
+    // codes artifact is read as-is — its codes ARE the index
     val qSide = precomputedCodes.map(_ => encoded).getOrElse(
       requireCodesRelation(pqEncode(
         indexable(embeddings).where(col("vec_id") < nQueries),
         books, materialize = false)))
-    val qCodes: Array[(Long, Array[Byte])] = qSide
+    val luts = qSide
       .where(col("vec_id") < nQueries && col("codes").isNotNull)
-      .orderBy(col("vec_id"))
       .collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("codes"))
-    val luts: Array[(Long, Array[Array[Double]])] = qCodes.map { case (qid, qc) =>
-      if (qc.length != mBooks) throw new IllegalArgumentException(
-        s"PQ codes row has ${qc.length} bytes but the supplied codebooks " +
-          s"have m=$mBooks subspaces — codes encoded with different codebooks")
-      qid -> Array.tabulate(mBooks)(s => pairTables(s)(qc(s) & 0xff))
-    }
-    lutScanTopK(spark, encoded, luts, k, mBooks, "sdc_dist")
+      .map { r =>
+        val qc = checkWidth(r.getAs[Array[Byte]]("codes"), books.length)
+        r.getLong(0) -> subspaceLut(
+          Array.concat(books.indices.map(s => books(s)(qc(s) & 0xff)): _*), books)
+      }
+    lutScanTopK(encoded, luts, k, books.length, "sdc_dist")
   }
 
-  /** Shared scoring kernel for the codes-scan top-k family ([[pqTopK]],
-    * [[pqTopKSDC]]): one pass over the persisted m-byte codes with the
-    * bounded per-query LUTs broadcast and the top-k heap INSIDE the
-    * kernel. */
-  private def lutScanTopK(spark: org.apache.spark.sql.SparkSession,
-                          encoded: DataFrame,
-                          luts: Array[(Long, Array[Array[Double]])],
-                          k: Int, mWidth: Int, scoreCol: String): DataFrame = {
-    val bc = spark.sparkContext.broadcast(luts)
-    import org.apache.spark.sql.Row
+  /** lut(s)(code) = [[sqL2]] between x's s-th subvector and codeword
+    * `code` of book s — the m × ksub table a code row is scored
+    * against. */
+  private def subspaceLut(x: Array[Double],
+                          books: Array[Array[Array[Double]]]): Array[Array[Double]] = {
+    val subDim = books(0)(0).length
+    Array.tabulate(books.length)(s => books(s).map(cw => sqL2(x, s * subDim, cw, subDim)))
+  }
+
+  /** A code row's ADC/SDC distance: Σ_s lut(s)(code_s), in subspace
+    * order. */
+  private def codeDistance(lut: Array[Array[Double]], codes: Array[Byte]): Double = {
+    var d = 0.0; var s = 0
+    while (s < lut.length) { d += lut(s)(codes(s) & 0xff); s += 1 }
+    d
+  }
+
+  /** Code WIDTH is the one encoding-compatibility signal the bytes
+    * carry: codes encoded with m' ≠ m codebooks would otherwise AIOOBE
+    * or silently sum a prefix. */
+  private def checkWidth(codes: Array[Byte], m: Int): Array[Byte] = {
+    if (codes.length != m) throw new IllegalArgumentException(
+      s"PQ codes row has ${codes.length} bytes but the supplied codebooks " +
+        s"have m=$m subspaces — codes encoded with different codebooks")
+    codes
+  }
+
+  /** The code-scoring kernels' (query_id, nbr_id, unrounded distance)
+    * rows as (query_id, nbr_id, `scoreCol` = pround(distance, 6)). */
+  private def roundedDistances(spark: org.apache.spark.sql.SparkSession,
+                               rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
+                               scoreCol: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val schema = StructType(Seq(StructField("query_id", LongType, nullable = false),
       StructField("nbr_id", LongType, nullable = false),
       StructField("__d", DoubleType, nullable = false)))
-    // the bounded selection lives INSIDE the scoring kernel: a flatMap
-    // emitting one Row per (corpus row, query) materializes
-    // |corpus|·|queries| Row objects (50M at the 250k×200 probe) of
-    // which only partitions·q·k survive the rank — measured r19, that
-    // allocation dominated the whole query (25 s vs 5 s for this form).
-    // Selection order is (pround(d, 6) asc, nbr_id asc) — the EXACT
-    // total order the downstream rank uses (pr6 reproduces
-    // Features.pround's IEEE sequence: mult, add, floor, divide; NaN/Inf
-    // pass through identically), so the global top-k is contained in
-    // the per-partition survivors and the result is bit-identical.
-    val kk = k
+    spark.createDataFrame(rows, schema)
+      .select(col("query_id"), col("nbr_id"), Features.pround(col("__d"), 6).as(scoreCol))
+  }
+
+  /** Scoring kernel for the codes-scan top-k family ([[pqTopK]],
+    * [[pqTopKSDC]]): one pass over the persisted m-byte codes with the
+    * bounded per-query LUTs broadcast and a [[BoundedTopK]] per query
+    * INSIDE the kernel (why inside: plans/MEASUREMENTS.md "Partition-local
+    * top-k"). Selection keys on pr6(d) — `Features.pround`'s IEEE
+    * sequence (mult, add, floor, divide; NaN/Inf pass through), the exact
+    * score the downstream rank orders by — so the global top-k is
+    * contained in the per-partition survivors and the result is
+    * bit-identical. */
+  private def lutScanTopK(encoded: DataFrame,
+                          luts: Array[(Long, Array[Array[Double]])],
+                          k: Int, mWidth: Int, scoreCol: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    val spark = encoded.sparkSession
+    val bc = spark.sparkContext.broadcast(luts)
     val scored = encoded.where(col("codes").isNotNull).rdd.mapPartitions { it =>
-      val qsArr = bc.value
-      val nq = qsArr.length
-      def checkWidth(c: Array[Byte]): Array[Byte] = {
-        if (c.length != mWidth) throw new IllegalArgumentException(
-          s"PQ codes row has ${c.length} bytes but the supplied codebooks " +
-            s"have m=$mWidth subspaces — codes encoded with different codebooks")
-        c
-      }
+      val qs = bc.value
+      val heaps = Array.fill(qs.length)(new BoundedTopK[Double](k, ascending = true))
       def pr6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-      def better(da: Double, ia: Long, db: Double, ib: Long): Boolean = {
-        val pa = pr6(da); val pb = pr6(db)
-        val c = if (pa == pb) 0 else java.lang.Double.compare(pa, pb)
-        if (c != 0) c < 0 else ia < ib
-      }
-      final case class Cand(d: Double, id: Long)
-      val worstFirst = new java.util.Comparator[Cand] {
-        def compare(a: Cand, b: Cand): Int =
-          if (better(a.d, a.id, b.d, b.id)) 1
-          else if (better(b.d, b.id, a.d, a.id)) -1
-          else 0
-      }
-      val heaps = Array.fill(nq)(
-        new java.util.PriorityQueue[Cand](kk + 1, worstFirst))
       it.foreach { r =>
         // positions fixed by requireCodesRelation's named projection
         val id = r.getLong(0)
-        val codes = checkWidth(r.getAs[Array[Byte]](1))
+        val codes = checkWidth(r.getAs[Array[Byte]](1), mWidth)
         var qi = 0
-        while (qi < nq) {
-          if (qsArr(qi)._1 != id) {
-            val lut = qsArr(qi)._2
-            var d = 0.0; var s = 0
-            while (s < lut.length) { d += lut(s)(codes(s) & 0xff); s += 1 }
-            val h = heaps(qi)
-            if (h.size < kk) h.add(Cand(d, id))
-            else {
-              val w = h.peek()
-              if (better(d, id, w.d, w.id)) { h.poll(); h.add(Cand(d, id)) }
-            }
+        while (qi < qs.length) {
+          if (qs(qi)._1 != id) {
+            val d = codeDistance(qs(qi)._2, codes)
+            heaps(qi).offer(pr6(d), id, d)
           }
           qi += 1
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        val qid = qsArr(qi)._1
-        scala.jdk.CollectionConverters.IteratorHasAsScala(h.iterator()).asScala
-          .map(c => Row(qid, c.id, c.d))
+      heaps.iterator.zip(qs.iterator).flatMap { case (h, (qid, _)) =>
+        h.kept.map { case (id, d) => Row(qid, id, d) }
       }
     }
-    topKPerQuery(
-      spark.createDataFrame(scored, schema)
-        .select(col("query_id"), col("nbr_id"),
-          Features.pround(col("__d"), 6).as(scoreCol)),
-      k, scoreCol = scoreCol, ascending = true)
+    topKPerQuery(roundedDistances(spark, scored, scoreCol), k,
+      scoreCol = scoreCol, ascending = true)
   }
 
-  /** D4 scale path #4 — IVF-PQ (IVFADC, `by_residual=false` — the
-    * documented FAISS simplification where codes quantize the raw
-    * vector, not the cell residual): the coarse quantizer shrinks the
-    * ROWS a query touches (nProbe/nLists of the corpus), PQ shrinks
+  /** Probe-join code scorer shared by [[ivfPqTopK]] and
+    * [[incrementalVectorIngest]]: each query probes its [[probeCells]],
+    * the probed cells' code rows join the (query, cell) pairs, and each
+    * candidate is scored by [[codeDistance]] against the LUT of its
+    * (query, cell) pair. Raw coding maps every probed cell to the query's
+    * one [[subspaceLut]]; residual coding (`byResidual`, IVFADC proper —
+    * Jégou et al. 2011 §IV: codes quantize x − coarse(cell)) builds each
+    * pair's LUT from the query RESIDUAL q − coarse(cell), so the distance
+    * is ‖(q−c) − r̂‖² — queries × nProbe tables, still driver-bounded.
+    * `dropSelf` removes the query's own row (same relation on both sides).
+    * Output (query_id, nbr_id, adc_dist = pround(distance, 6)). */
+  private def probedCodeDistances(encoded: DataFrame,
+                                  queries: Array[(Long, Array[Double])],
+                                  coarse: Array[Array[Double]], nProbe: Int,
+                                  books: Array[Array[Array[Double]]],
+                                  byResidual: Boolean,
+                                  dropSelf: Boolean): DataFrame = {
+    import org.apache.spark.sql.Row
+    val spark = encoded.sparkSession
+    import spark.implicits._
+    val probes = probeCells(queries, coarse, nProbe)
+    val vecs = queries.toMap
+    val luts: Map[(Long, Int), Array[Array[Double]]] =
+      if (byResidual) probes.map { case p @ (qid, cell) =>
+        p -> subspaceLut(minus(vecs(qid), coarse(cell)), books) }.toMap
+      else {
+        val byQuery = vecs.map { case (qid, q) => qid -> subspaceLut(q, books) }
+        probes.map(p => p -> byQuery(p._1)).toMap
+      }
+    val joined = encoded.where(col("codes").isNotNull)
+      .join(broadcast(probes.toSeq.toDF("query_id", "cell")), "cell")
+    val cands = if (dropSelf) joined.filter(col("vec_id") =!= col("query_id")) else joined
+    val bc = spark.sparkContext.broadcast(luts)
+    val m = books.length
+    val scored = cands.select(col("query_id"), col("vec_id"), col("codes"), col("cell"))
+      .rdd.mapPartitions { it =>
+        val qs = bc.value
+        it.map { r =>
+          val codes = checkWidth(r.getAs[Array[Byte]](2), m)
+          Row(r.getLong(0), r.getLong(1), codeDistance(qs((r.getLong(0), r.getInt(3))), codes))
+        }
+      }
+    roundedDistances(spark, scored, "adc_dist")
+  }
+
+  /** D4 scale path #4 — IVF-PQ (IVFADC): the coarse quantizer shrinks
+    * the ROWS a query touches (nProbe/nLists of the corpus), PQ shrinks
     * the BYTES per touched row to m codes. One scan builds the index —
     * [[assignCells]] for the cell, [[pqEncode]] carrying it through —
-    * and the probe join is cell-keyed exactly like [[ivfTopK]]. */
+    * and [[probedCodeDistances]] scores the probed cells. Codes quantize
+    * the raw vector by default (`by_residual=false`, the documented FAISS
+    * simplification) or, with `byResidual`, the cell residual. */
   def ivfPqTopK(embeddings: DataFrame, dim: Int, nQueries: Int, k: Int,
                 nLists: Int = 16, nProbe: Int = 4, m: Int = 16, ksub: Int = 64,
                 seed: Long = 42L,
@@ -1383,7 +1328,6 @@ object Similarity {
                 precomputedCodebooks: Option[Array[Array[Array[Double]]]] = None,
                 precomputedCodes: Option[DataFrame] = None,
                 byResidual: Boolean = false): DataFrame = {
-    val spark = embeddings.sparkSession
     val corpus = indexable(embeddings)
     // production shape: quantizers AND codes are built ONCE at ingest
     // (saveIvfIndex/savePqCodebooks/savePqCodes) and passed in; the
@@ -1394,159 +1338,17 @@ object Similarity {
       trainIvfCentroids(embeddings, nLists, seed))
     require(coarse.length == nLists,
       s"expected $nLists coarse centroids, got ${coarse.length}")
+    val residualOf = if (byResidual) Some(coarse) else None
     val books = precomputedCodebooks.getOrElse(
-      if (byResidual) trainPqCodebooksResidual(embeddings, coarse, dim, m, ksub, seed)
-      else trainPqCodebooks(embeddings, dim, m, ksub, seed))
+      trainPqCodebooks(embeddings, dim, m, ksub, seed, residualOf))
     requireBooksTile(books, dim)
     val encoded = requireCodesRelation(precomputedCodes.getOrElse(
       pqEncode(assignCells(corpus, coarse), books, carry = Seq("cell"),
-        materialize = false,
-        residualOf = if (byResidual) Some(("cell", coarse)) else None)), "cell")
-    // each query probes its nProbe nearest coarse centroids (driver-side
-    // math over nQueries × nLists, same as ivfTopK). The dim filter
-    // matches adcLuts': a wrong-length query has no lookup table, so it
-    // must not reach the probe join either
-    val qEmbRows = corpus.filter(col("vec_id") < nQueries && size(col("embedding")) === dim)
-      .select(col("vec_id"), col("embedding")).collect()
-    val probePairs: Array[(Long, Int)] = qEmbRows.flatMap { r =>
-      val q = toDoubleArray(r.getSeq[Any](1))
-      coarse.zipWithIndex.map { case (c, i) =>
-        var d = 0.0; var j = 0
-        while (j < math.min(q.length, c.length)) { val t = q(j) - c(j); d += t * t; j += 1 }
-        (i, d)
-      }.sortBy(_._2).take(nProbe).map(_._1).map(cell => (r.getLong(0), cell))
-    }
-    import spark.implicits._
-    val probes = probePairs.toSeq.toDF("query_id", "cell")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("query_id", LongType, nullable = false),
-      StructField("nbr_id", LongType, nullable = false),
-      StructField("__d", DoubleType, nullable = false)))
-    val scored =
-      if (!byResidual) {
-        val lutMap = adcLuts(embeddings, dim, nQueries, books).toMap
-        val bc = spark.sparkContext.broadcast(lutMap)
-        val cands = encoded.where(col("codes").isNotNull)
-          .join(broadcast(probes), "cell")
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("nbr_id"), col("codes"))
-        val mWidth = books.length
-        cands.rdd.mapPartitions { it =>
-          val qs = bc.value
-          it.map { r =>
-            val lut = qs(r.getLong(0))
-            val codes = r.getAs[Array[Byte]](2)
-            if (codes.length != mWidth) throw new IllegalArgumentException(
-              s"PQ codes row has ${codes.length} bytes but m=$mWidth — codes " +
-                "encoded with different codebooks")
-            var d = 0.0; var s = 0
-            while (s < lut.length) { d += lut(s)(codes(s) & 0xff); s += 1 }
-            Row(r.getLong(0), r.getLong(1), d)
-          }
-        }
-      } else {
-        // by_residual=true (IVFADC proper, Jégou et al. 2011 §IV): codes
-        // quantize (x − coarse(cell)), so the LUT for a (query, probed
-        // cell) pair is built from the query RESIDUAL (q − coarse(cell))
-        // — nQueries × nProbe tables instead of nQueries, still
-        // driver-bounded; the distance is ‖(q−c) − r̂‖², a tighter
-        // approximation of ‖q−x‖² because residual variance is
-        // cell-local (smaller than raw-vector variance at the same
-        // 16-byte code budget)
-        // geometry from the BOOKS actually in use (precomputed artifacts
-        // may differ from the m training parameter)
-        val mBooks = books.length
-        val subDim = books(0)(0).length
-        val qVecs = qEmbRows.map(r =>
-          r.getLong(0) -> toDoubleArray(r.getSeq[Any](1))).toMap
-        val lutMap: Map[(Long, Int), Array[Array[Double]]] =
-          probePairs.iterator.map { case (qid, cell) =>
-            val q = qVecs(qid); val c = coarse(cell)
-            val res = new Array[Double](dim)
-            var j = 0
-            while (j < dim) { res(j) = q(j) - c(j); j += 1 }
-            val lut = Array.tabulate(mBooks) { s =>
-              val off = s * subDim
-              books(s).map { cw =>
-                var d = 0.0; var j2 = 0
-                while (j2 < subDim) { val t = res(off + j2) - cw(j2); d += t * t; j2 += 1 }
-                d
-              }
-            }
-            (qid, cell) -> lut
-          }.toMap
-        val bc = spark.sparkContext.broadcast(lutMap)
-        val cands = encoded.where(col("codes").isNotNull)
-          .join(broadcast(probes), "cell")
-          .filter(col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("nbr_id"), col("codes"),
-            col("cell"))
-        cands.rdd.mapPartitions { it =>
-          val qs = bc.value
-          it.map { r =>
-            val lut = qs((r.getLong(0), r.getInt(3)))
-            val codes = r.getAs[Array[Byte]](2)
-            if (codes.length != mBooks) throw new IllegalArgumentException(
-              s"PQ codes row has ${codes.length} bytes but m=$mBooks — codes " +
-                "encoded with different codebooks")
-            var d = 0.0; var s = 0
-            while (s < lut.length) { d += lut(s)(codes(s) & 0xff); s += 1 }
-            Row(r.getLong(0), r.getLong(1), d)
-          }
-        }
-      }
+        materialize = false, residualOf = residualOf.map(("cell", _)))), "cell")
+    val queries = collectVectors(corpus.filter(col("vec_id") < nQueries), dim)
     topKPerQuery(
-      spark.createDataFrame(scored, schema)
-        .select(col("query_id"), col("nbr_id"),
-          Features.pround(col("__d"), 6).as("adc_dist")),
+      probedCodeDistances(encoded, queries, coarse, nProbe, books, byResidual, dropSelf = true),
       k, scoreCol = "adc_dist", ascending = true)
-  }
-
-  /** Train RESIDUAL PQ codebooks (the IVFADC `by_residual=true` form):
-    * the same seeded-hash layout-invariant draw as [[trainPqCodebooks]],
-    * but each sample vector is first assigned its nearest coarse
-    * centroid (driver-side — the sample is bounded at max(10k, 20·ksub)
-    * rows × nLists distances) and the codebooks train on the residuals
-    * (x − coarse(cell)). Assignment uses the same first-minimum argmin
-    * as every kernel here, so a sample vector's training-time cell
-    * matches its encode-time cell exactly. */
-  def trainPqCodebooksResidual(embeddings: DataFrame,
-                               coarse: Array[Array[Double]],
-                               dim: Int, m: Int = 16, ksub: Int = 64,
-                               seed: Long = 42L): Array[Array[Array[Double]]] = {
-    require(m >= 1 && ksub >= 2 && ksub <= 256,
-      s"need 1 <= m and 2 <= ksub <= 256 (byte codes), got m=$m ksub=$ksub")
-    require(dim % m == 0, s"PQ subspaces must tile the vector: dim=$dim, m=$m")
-    require(coarse.nonEmpty && coarse.forall(_.length == dim),
-      s"coarse centroids must match dim=$dim for residual training")
-    val subDim = dim / m
-    val sample: Array[Array[Double]] = trainable(embeddings)
-      .where(size(col("embedding")) === dim)
-      .select(col("embedding"), xxhash64(col("vec_id"), lit(seed)).as("__draw"))
-      .orderBy(col("__draw"), col("vec_id"))
-      .limit(trainSampleTarget(ksub).toInt)
-      .select(col("embedding")).collect()
-      .map(r => toDoubleArray(r.getSeq[Any](0)))
-    val residuals = sample.map { x =>
-      var best = 0; var bestD = Double.MaxValue
-      var ci = 0
-      while (ci < coarse.length) {
-        var d = 0.0; var j = 0
-        while (j < dim) { val t = x(j) - coarse(ci)(j); d += t * t; j += 1 }
-        if (java.lang.Double.compare(d, bestD) < 0) { best = ci; bestD = d }
-        ci += 1
-      }
-      val r = new Array[Double](dim)
-      var j = 0
-      while (j < dim) { r(j) = x(j) - coarse(best)(j); j += 1 }
-      r
-    }
-    trainSubspacesParallel(embeddings.sparkSession, m, s => {
-      val pts = residuals.map(v =>
-        java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
-      kmeansLloyd(pts, ksub, iters = 5, seed + s)
-    })
   }
 
   /** Streaming-ingest arm of the ANN index lifecycle (the d38
@@ -1556,7 +1358,7 @@ object Similarity {
     * each new vector's near-duplicates in the prior corpus by cell-keyed
     * ADC distance. Designed as the body of a `foreachBatch` sink: the
     * micro-batch is the bounded "query set" (its vectors and LUTs are
-    * driver-built, exactly like [[adcLuts]]' bounded-queries contract),
+    * driver-built, exactly like [[pqTopK]]'s bounded-queries contract),
     * the corpus side is scanned as 16-byte code rows narrowed by the
     * probe join, and nothing corpus-side is ever re-encoded.
     *
@@ -1575,18 +1377,16 @@ object Similarity {
     *    the same vector (surfaces at the quantization floor) or an id
     *    collision with CHANGED content (surfaces at a larger distance) —
     *    both are exactly the events an ingest dedup exists to catch, and
-    *    a cross-relation id filter would silently hide them (r19 advice).
+    *    a cross-relation id filter would silently hide them.
     *
     * `corpusCodes` must be coded with the SAME books and coarse
     * quantizer — and with the SAME coding axis as the `byResidual` flag:
     * raw-coded corpus ↔ `byResidual=false`, residual-coded corpus
     * (pqEncode `residualOf`) ↔ `byResidual=true`. Same
     * artifact-compatibility contract as [[ivfPqTopK]]'s
-    * precomputedCodes; with `byResidual` the per-(vector, probed-cell)
-    * residual LUTs mirror [[ivfPqTopK]]'s IVFADC branch (d67), and the
-    * exact-replay invariant still holds — identical content encodes to
-    * identical residual codes in the same cell, so it surfaces at the
-    * quantization floor. */
+    * precomputedCodes, and the exact-replay invariant holds on both
+    * axes — identical content encodes to identical codes in the same
+    * cell, so it surfaces at the quantization floor. */
   def incrementalVectorIngest(newVecs: DataFrame, dim: Int,
                               coarse: Array[Array[Double]],
                               books: Array[Array[Array[Double]]],
@@ -1597,132 +1397,16 @@ object Similarity {
     requireBooksTile(books, dim)
     require(coarse.nonEmpty && coarse.forall(_.length == dim),
       s"coarse centroids must match dim=$dim")
-    val spark = newVecs.sparkSession
-    val m = books.length
-    val subDim = books(0)(0).length
     val newAssigned = assignCells(indexable(newVecs), coarse)
     val newCodes = pqEncode(newAssigned, books, carry = Seq("cell"),
       residualOf = if (byResidual) Some(("cell", coarse)) else None)
-    // the batch is the bounded query side: probes + LUTs driver-built
-    val batchRows = newAssigned.where(size(col("embedding")) === dim)
-      .select(col("vec_id"), col("embedding")).collect()
-    val probePairs: Array[(Long, Int)] = batchRows.flatMap { r =>
-      val q = toDoubleArray(r.getSeq[Any](1))
-      coarse.zipWithIndex.map { case (c, i) =>
-        var d = 0.0; var j = 0
-        while (j < dim) { val t = q(j) - c(j); d += t * t; j += 1 }
-        (i, d)
-      }.sortBy(_._2).take(nProbe).map(_._1).map(cell => (r.getLong(0), cell))
-    }
-    import spark.implicits._
-    val probes = probePairs.toSeq.toDF("new_id", "cell")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("new_id", LongType, nullable = false),
-      StructField("corpus_id", LongType, nullable = false),
-      StructField("__d", DoubleType, nullable = false)))
-    val mWidth = m
-    def lutFor(vec: Array[Double]): Array[Array[Double]] =
-      Array.tabulate(m) { s =>
-        val off = s * subDim
-        books(s).map { cw =>
-          var d = 0.0; var j = 0
-          while (j < subDim) { val t = vec(off + j) - cw(j); d += t * t; j += 1 }
-          d
-        }
-      }
-    val candidates = requireCodesRelation(corpusCodes, "cell")
-      .where(col("codes").isNotNull)
-      .join(broadcast(probes), "cell")
-    val scored =
-      if (!byResidual) {
-        val lutMap: Map[Long, Array[Array[Double]]] = batchRows.map { r =>
-          r.getLong(0) -> lutFor(toDoubleArray(r.getSeq[Any](1)))
-        }.toMap
-        val bc = spark.sparkContext.broadcast(lutMap)
-        candidates
-          .select(col("new_id"), col("vec_id").as("corpus_id"), col("codes"))
-          .rdd.mapPartitions { it =>
-            val qs = bc.value
-            it.map { r =>
-              val lut = qs(r.getLong(0))
-              val codes = r.getAs[Array[Byte]](2)
-              if (codes.length != mWidth) throw new IllegalArgumentException(
-                s"PQ codes row has ${codes.length} bytes but m=$mWidth — codes " +
-                  "encoded with different codebooks")
-              var d = 0.0; var s = 0
-              while (s < lut.length) { d += lut(s)(codes(s) & 0xff); s += 1 }
-              Row(r.getLong(0), r.getLong(1), d)
-            }
-          }
-      } else {
-        // residual arm (mirrors ivfPqTopK's by_residual branch): corpus
-        // codes quantize (x − coarse(cell)), so each (new vector, probed
-        // cell) pair gets a LUT built from the new vector's RESIDUAL
-        // against that cell — batch·nProbe tables, still driver-bounded
-        // by the micro-batch contract
-        val batchVecs = batchRows.map(r =>
-          r.getLong(0) -> toDoubleArray(r.getSeq[Any](1))).toMap
-        val lutMap: Map[(Long, Int), Array[Array[Double]]] =
-          probePairs.iterator.map { case (nid, cell) =>
-            val q = batchVecs(nid); val c = coarse(cell)
-            val res = new Array[Double](dim)
-            var j = 0
-            while (j < dim) { res(j) = q(j) - c(j); j += 1 }
-            (nid, cell) -> lutFor(res)
-          }.toMap
-        val bc = spark.sparkContext.broadcast(lutMap)
-        candidates
-          .select(col("new_id"), col("vec_id").as("corpus_id"), col("codes"),
-            col("cell"))
-          .rdd.mapPartitions { it =>
-            val qs = bc.value
-            it.map { r =>
-              val lut = qs((r.getLong(0), r.getInt(3)))
-              val codes = r.getAs[Array[Byte]](2)
-              if (codes.length != mWidth) throw new IllegalArgumentException(
-                s"PQ codes row has ${codes.length} bytes but m=$mWidth — codes " +
-                  "encoded with different codebooks")
-              var d = 0.0; var s = 0
-              while (s < lut.length) { d += lut(s)(codes(s) & 0xff); s += 1 }
-              Row(r.getLong(0), r.getLong(1), d)
-            }
-          }
-      }
-    val dups = spark.createDataFrame(scored, schema)
-      .select(col("new_id"), col("corpus_id"),
-        Features.pround(col("__d"), 6).as("adc_dist"))
+    val dups = probedCodeDistances(requireCodesRelation(corpusCodes, "cell"),
+        collectVectors(newAssigned, dim), coarse, nProbe, books, byResidual,
+        dropSelf = false)
+      .select(col("query_id").as("new_id"), col("nbr_id").as("corpus_id"), col("adc_dist"))
       .filter(col("adc_dist") <= maxAdcDist)
       .orderBy(col("new_id"), col("adc_dist"), col("corpus_id"))
     (newCodes, dups)
-  }
-
-  /** ADC lookup tables for the bounded query set: luts(q)(sub)(code) =
-    * squared L2 between the query's subvector and that codebook entry —
-    * nQueries × m × ksub doubles, driver-built, broadcast. Queries
-    * whose length differs from the codebook dim are excluded (no table
-    * to build — the same quarantine as NULL codes). */
-  private def adcLuts(embeddings: DataFrame, dim: Int, nQueries: Int,
-                      books: Array[Array[Array[Double]]]): Array[(Long, Array[Array[Double]])] = {
-    val m = books.length
-    val subDim = books(0)(0).length
-    indexable(embeddings)
-      .filter(col("vec_id") < nQueries && size(col("embedding")) === dim)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id"))
-      .collect()
-      .map { r =>
-        val q = toDoubleArray(r.getSeq[Any](1))
-        val lut = Array.tabulate(m) { s =>
-          val off = s * subDim
-          books(s).map { c =>
-            var d = 0.0; var j = 0
-            while (j < subDim) { val t = q(off + j) - c(j); d += t * t; j += 1 }
-            d
-          }
-        }
-        r.getLong(0) -> lut
-      }
   }
 
   /** Persist PQ codebooks as a (sub, code, centroid) parquet table —

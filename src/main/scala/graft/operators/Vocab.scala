@@ -180,9 +180,9 @@ object Vocab {
   }
 
   /** REFERENCE implementation (the textbook full-recount loop) — kept,
-    * like assignCellsLiteral, as the independent second implementation
-    * the parity spec and the 10⁵-type measurement pin
-    * [[bpeTrainMerges]] bit-identical against. O(types · wordLen) per
+    * like the literal-expression cell assignment, as the independent
+    * second implementation the parity spec and the 10⁵-type measurement
+    * pin [[bpeTrainMerges]] bit-identical against. O(types · wordLen) per
     * merge: correct, and exactly the driver knee the incremental loop
     * removes. */
   private[graft] def bpeTrainMergesNaive(docs: DataFrame, numMerges: Int,

@@ -57,16 +57,15 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("the similarity operators pick up the native function when registered") {
     assert(spark.catalog.functionExists("cosine_sim"))
-    // topkPrune=off: the partition-local pre-selection (r19) puts an RDD
-    // boundary above the scored relation, so the final optimizedPlan
-    // string no longer shows the scoring expression; the unpruned plan
-    // is the same scored relation without the boundary — what this test
-    // actually pins is that the SCORING picked the native expression
-    spark.conf.set("spark.graft.topkPrune", "off")
-    try {
-      val res = Similarity.bruteForceTopK(emb, 3, 2)
-      val plan = res.queryExecution.optimizedPlan.toString
-      assert(plan.contains("cosine_sim"), "bruteForceTopK should use the native expression")
-    } finally spark.conf.unset("spark.graft.topkPrune")
+    // every exact re-rank scores through the one shared cos_sim column;
+    // d21's plan has no RDD boundary above the scoring, so the native
+    // expression must also show in a declared query's optimized plan
+    val scored = emb.select(col("embedding").as("q_emb"), col("embedding").as("n_emb"))
+      .select(Similarity.cosSim(spark))
+    assert(scored.queryExecution.optimizedPlan.toString.contains("cosine_sim"),
+      "the shared cosine score should use the native expression")
+    val plan = SparkEntry.queries("d21_embedding_neardups")(spark, sfDir)
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("cosine_sim"), "embeddingNearDups should use the native expression")
   }
 }

@@ -719,6 +719,33 @@ class DedupSimilaritySpec extends AnyFunSuite {
         missed.take(3).mkString(", "))
   }
 
+  /** Locale-independent double → SQL literal. `Double.toString` round-trips
+    * the exact bit pattern and never uses locale-sensitive separators (an
+    * `f"$v%.17g"` interpolation would emit `,` decimals under comma-decimal
+    * default locales and fail to parse). */
+  private def dlit(v: Double): String = {
+    require(!v.isNaN && !v.isInfinite, s"non-finite plan literal: $v")
+    s"CAST(${java.lang.Double.toString(v)} AS DOUBLE)"
+  }
+
+  /** The SQL-expressible REFERENCE for `Similarity.assignCells`: one
+    * literal squared-distance expression per centroid and
+    * `array_position(d, array_min(d)) - 1` — zip_with pads a wrong-length
+    * vector with nulls, so its distances, min and cell are NULL. */
+  private def assignCellsLiteral(corpus: org.apache.spark.sql.DataFrame,
+                                 centroids: Array[Array[Double]]): org.apache.spark.sql.DataFrame = {
+    val distExprs = centroids.map { c =>
+      val arr = c.map(dlit).mkString("array(", ", ", ")")
+      s"aggregate(zip_with(embedding, $arr, (x, w) -> (CAST(x AS DOUBLE) - w) * (CAST(x AS DOUBLE) - w)), CAST(0.0 AS DOUBLE), (a, v) -> a + v)"
+    }
+    corpus
+      .select(col("vec_id"), col("embedding"),
+        expr(distExprs.mkString("array(", ", ", ")")).as("__dists"))
+      .select(col("vec_id"), col("embedding"),
+        (expr("array_position(__dists, array_min(__dists))") - 1L)
+          .cast("int").as("cell"))
+  }
+
   test("assignCells: broadcast kernel is bit-identical to the literal-expression plan, length-mismatch rows NULL in both") {
     // the literal form is the SQL-expressible REFERENCE implementation;
     // the kernel (the only production path since r18 retired the knee —
@@ -731,8 +758,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def cells(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Int]] =
       df.collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(2)) None else Some(r.getInt(2)))).toMap
-    val viaLiteral = cells(Similarity.assignCellsLiteral(corpus, centroids))
-    val viaKernel = cells(Similarity.assignCellsBroadcast(corpus, centroids))
+    val viaLiteral = cells(assignCellsLiteral(corpus, centroids))
+    val viaKernel = cells(Similarity.assignCells(corpus, centroids))
     assert(viaLiteral == viaKernel)
     assert(viaKernel(9999L).isEmpty, "dim-mismatch row must get a NULL cell")
     assert(viaKernel.count(_._2.nonEmpty) == emb.count(),
@@ -913,8 +940,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def cells(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Int]] =
       df.collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(2)) None else Some(r.getInt(2)))).toMap
-    val viaLiteral = cells(Similarity.assignCellsLiteral(dEmb, centroids))
-    val viaKernel = cells(Similarity.assignCellsBroadcast(dEmb, centroids))
+    val viaLiteral = cells(assignCellsLiteral(dEmb, centroids))
+    val viaKernel = cells(Similarity.assignCells(dEmb, centroids))
     assert(viaLiteral == viaKernel)
     assert(viaKernel.nonEmpty && viaKernel.values.forall(_.nonEmpty))
   }
@@ -932,9 +959,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .crossJoin(emb.filter(col("vec_id") === 0L).select(col("embedding")))
     val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(dup)
     val coarse = Similarity.trainIvfCentroids(corpus, 16)
-    val books = Similarity.trainPqCodebooksResidual(corpus, coarse, 64)
+    val books = Similarity.trainPqCodebooks(corpus, 64, residualOf = Some(coarse))
     val enc = Similarity.pqEncode(
-      Similarity.assignCellsBroadcast(corpus, coarse), books,
+      Similarity.assignCells(corpus, coarse), books,
       carry = Seq("cell"), residualOf = Some(("cell", coarse))).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]]("codes")).toMap
     assert(enc(9000L).sameElements(enc(0L)), "dup must share residual codes")
@@ -1007,7 +1034,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // IVF-PQ: cell-carrying codes relation, same contract
     val coarse = Similarity.trainIvfCentroids(emb, 16)
     val cellCodes = Similarity.pqEncode(
-      Similarity.assignCellsBroadcast(Similarity.indexable(emb), coarse),
+      Similarity.assignCells(Similarity.indexable(emb), coarse),
       books, carry = Seq("cell"))
     val dir2 = java.nio.file.Files.createTempDirectory("ivfpq_codes").toString + "/codes"
     Similarity.savePqCodes(cellCodes, dir2)
@@ -1067,7 +1094,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val books = Similarity.trainPqCodebooks(emb, 64)
     val coarse = Similarity.trainIvfCentroids(emb, 16)
     val cellCodes = Similarity.pqEncode(
-      Similarity.assignCellsBroadcast(Similarity.indexable(emb), coarse),
+      Similarity.assignCells(Similarity.indexable(emb), coarse),
       books, carry = Seq("cell"))
     val self = Similarity.pqTopK(emb, 64, 20, 5).collect()
     val viaCell = Similarity.pqTopK(emb, 64, 20, 5,
@@ -1114,23 +1141,26 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(e2.getMessage.contains("do not tile"), e2.getMessage)
   }
 
-  test("quantizer training quarantines NaN-bearing vectors instead of letting them drag centroid sums") {
+  test("quantizer training quarantines non-finite vectors instead of letting them drag centroid sums") {
     // a NaN element contributes round(NaN·2^24) = 0 to every sum while
     // still counting the row — silently biasing centroid 0 toward the
-    // origin; trainable() must exclude such rows from BOTH trainer paths
+    // origin; an Inf element saturates round(Inf·2^24) at Long.MaxValue
+    // (overflowing the cell sum) and drags a driver-trained centroid to
+    // Inf/NaN; trainable() must exclude such rows from BOTH trainer paths
     val poison = Seq((9100L, Seq.fill(64)(Float.NaN).toSeq),
-      (9101L, (Seq.fill(32)(1.0f) ++ Seq(Float.NaN) ++ Seq.fill(31)(1.0f)).toSeq))
+      (9101L, (Seq.fill(32)(1.0f) ++ Seq(Float.NaN) ++ Seq.fill(31)(1.0f)).toSeq),
+      (9102L, (Seq.fill(16)(0.5f) ++ Seq(Float.PositiveInfinity) ++ Seq.fill(47)(0.5f)).toSeq))
       .toDF("vec_id", "embedding")
     val corpus = emb.select(col("vec_id"), col("embedding")).unionByName(poison)
     val clean = Similarity.trainIvfCentroids(emb, 8)
-    val withNaN = Similarity.trainIvfCentroids(corpus, 8)
-    assert(clean.zip(withNaN).forall { case (a, b) => a.sameElements(b) },
-      "NaN vectors leaked into driver-path quantizer training")
+    val poisoned = Similarity.trainIvfCentroids(corpus, 8)
+    assert(clean.zip(poisoned).forall { case (a, b) => a.sameElements(b) },
+      "non-finite vectors leaked into driver-path quantizer training")
     val cleanD = Similarity.kmeansDistributedLloyd(emb, 8, 500L, 3, 42L)
-    val withNaND = Similarity.kmeansDistributedLloyd(corpus, 8, 500L, 3, 42L)
-    assert(cleanD.zip(withNaND).forall { case (a, b) => a.sameElements(b) },
-      "NaN vectors leaked into distributed quantizer training")
-    assert(cleanD.forall(_.forall(v => !v.isNaN)))
+    val poisonedD = Similarity.kmeansDistributedLloyd(corpus, 8, 500L, 3, 42L)
+    assert(cleanD.zip(poisonedD).forall { case (a, b) => a.sameElements(b) },
+      "non-finite vectors leaked into distributed quantizer training")
+    assert(cleanD.forall(_.forall(v => !v.isNaN && !v.isInfinite)))
   }
 
   test("cross-family ANN recall audit: every approximate path holds its floor against the one exact relation (declared parameters)") {

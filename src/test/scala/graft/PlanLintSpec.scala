@@ -381,4 +381,23 @@ class PlanLintSpec extends AnyFunSuite {
     assert(files.exists(_.getFileName.toString == "Materialize.scala"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("source lint: spark.graft.* knobs are read only in Materialize and BloomPrune, and there are exactly two") {
+    // every knob is a second code path to keep green; a new one must
+    // earn its place here (a measured win), not appear in an operator
+    val root = java.nio.file.Paths.get("src/main")
+    val walk = java.nio.file.Files.walk(root)
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally walk.close()
+    val owners = Seq("graft/Materialize.scala", "graft/plans/BloomPrune.scala")
+    val key = """"spark\.graft\.(\w+)""".r
+    val reads = files.flatMap { f =>
+      key.findAllMatchIn(java.nio.file.Files.readString(f)).map(m => (f, m.group(1)))
+    }
+    val offenders = reads.filterNot { case (f, _) => owners.exists(o => f.endsWith(o)) }
+      .map { case (f, k) => s"${root.relativize(f)}: spark.graft.$k" }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    assert(reads.map(_._2).toSet == Set("stageStorage", "bloomPrune"), reads)
+  }
 }

@@ -29,12 +29,12 @@ class ProfileSpec extends AnyFunSuite {
   }
 
   test("time --ab: arm order alternates across reps, both arms return the same rows") {
-    val ab = Profile.Ab.parse("spark.graft.topkPrune=on,off")
+    val ab = Profile.Ab.parse("spark.graft.stageStorage=local,disk")
     val before = spark.conf.getOption(ab.key)
     val recs = Profile.time(spark, Seq("d14_cosine_topk"), sfDir, reps = 2,
       ab = Some(ab), log = quiet)
     assert(recs.map(r => (r.rep, r.arm)) ==
-      Seq((1, Some("on")), (1, Some("off")), (2, Some("off")), (2, Some("on"))))
+      Seq((1, Some("local")), (1, Some("disk")), (2, Some("disk")), (2, Some("local"))))
     assert(recs.forall(_.error.isEmpty), recs.flatMap(_.error))
     assert(recs.map(_.rows).distinct == Seq(recs.head.rows) && recs.head.rows > 0)
     assert(spark.conf.getOption(ab.key) == before, "ab key not restored")

@@ -571,7 +571,7 @@ class StreamingSpec extends AnyFunSuite {
     val coarse = Similarity.trainIvfCentroids(corpus, 4)
     val books = Similarity.trainPqCodebooks(corpus, 16, m = 4, ksub = 8)
     val corpusCodes = Similarity.pqEncode(
-      Similarity.assignCellsBroadcast(Similarity.indexable(corpus), coarse),
+      Similarity.assignCells(Similarity.indexable(corpus), coarse),
       books, carry = Seq("cell"))
     val dupHits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val codesSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
@@ -624,10 +624,10 @@ class StreamingSpec extends AnyFunSuite {
       (i, Seq.fill(16)(rng.nextFloat())))
     val corpus = corpusRows.toDF("vec_id", "embedding")
     val coarse = Similarity.trainIvfCentroids(corpus, 4)
-    val books = Similarity.trainPqCodebooksResidual(corpus, coarse, 16,
-      m = 4, ksub = 8)
+    val books = Similarity.trainPqCodebooks(corpus, 16, m = 4, ksub = 8,
+      residualOf = Some(coarse))
     val corpusCodes = Similarity.pqEncode(
-      Similarity.assignCellsBroadcast(Similarity.indexable(corpus), coarse),
+      Similarity.assignCells(Similarity.indexable(corpus), coarse),
       books, carry = Seq("cell"), residualOf = Some(("cell", coarse)))
     val dupHits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val codesSeen = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]

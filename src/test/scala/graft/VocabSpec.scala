@@ -25,8 +25,8 @@ class VocabSpec extends AnyFunSuite {
   test("incremental trainer is bit-identical to the naive full-recount reference on the real corpus") {
     // r20: bpeTrainMerges switched to incremental pair maintenance + a
     // lazy max-heap (the HF/subword-nmt shape); the retired full-recount
-    // loop stays as the REFERENCE implementation (assignCellsLiteral
-    // precedent) and must never diverge — same merges, same tie-breaks,
+    // loop stays as the REFERENCE implementation (the literal-expression
+    // cell assignment precedent) and must never diverge — same merges, same tie-breaks,
     // same early stop, same pair counts
     val docs = Tables.documents(spark, sfDir)
     val fast = Vocab.bpeTrainMerges(docs, numMerges = 200, maxWordTypes = 2000)
