@@ -134,13 +134,14 @@ object Materialize {
     }
   }
 
-  /** Runs `body` with the job description `mat[<df's columns>]`, restoring
-    * the thread's previous description afterwards. */
-  def labelled[T](df: DataFrame)(body: => T): T = {
+  /** Runs `body` with the job description `<kind>[<df's columns>]`
+    * (`mat[...]` for a materialization, `collect[...]` for a driver-side
+    * collect), restoring the thread's previous description afterwards. */
+  def labelled[T](df: DataFrame, kind: String = "mat")(body: => T): T = {
     val sc = df.sparkSession.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(df.columns.take(6)
-      .mkString("mat[", ",", if (df.columns.length > 6) ",…]" else "]"))
+      .mkString(s"$kind[", ",", if (df.columns.length > 6) ",…]" else "]"))
     try body finally sc.setJobDescription(prev)
   }
 

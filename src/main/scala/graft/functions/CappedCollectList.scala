@@ -31,9 +31,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType}
   * groups are complete (only ORDER varies — consumers `sort_array` before
   * deriving anything). Like `collect_list` this is a
   * [[org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate]]
-  * (runs under ObjectHashAggregate, partial + final merge; no sort-based
-  * fallback surprises), and like it the raw result is marked
-  * order-nondeterministic via the Collect base contract. */
+  * (runs under ObjectHashAggregate, partial + final merge), and like it
+  * the raw result is marked order-nondeterministic via the Collect base
+  * contract. Past `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+  * keys (default 128) per task the aggregate falls back to sort-based
+  * aggregation: d43's shingle aggregate, ~330k keys, falls back in every
+  * task of both phases (plans/MEASUREMENTS.md, "Connected components on
+  * the driver"). */
 case class CappedCollectList(child: Expression, cap: Int,
                              mutableAggBufferOffset: Int = 0,
                              inputAggBufferOffset: Int = 0)

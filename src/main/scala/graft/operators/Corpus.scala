@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * components (keep each component's min-id winner) → deterministic domain
   * mix → context-window chunking → fixed-budget sequence packing, composed
   * as ONE dataflow with no driver round-trips between stages (the only
-  * driver loop is connected components' label-propagation convergence,
-  * identical to the standalone d35 operator).
+  * driver step is connected components, identical to the standalone d35
+  * operator: a near-dup edge list of at most [[Dedup.DriverEdgeBound]]
+  * edges is collected and labelled by union-find on the driver, and only a
+  * larger one runs the label-propagation loop).
   *
   * Near-dup criterion (oracle-expressible, unlike MinHash): two documents
   * are near-dups iff they share at least one exact k-token shingle whose
@@ -28,8 +30,10 @@ import org.apache.spark.sql.functions._
   * table is scanned exactly once. Shingling explodes O(tokens) rows, the df cap and
   * the pair generation are ONE map-side-combined aggregate pass (a capped
   * per-shingle doc-list collect with bounded fan-out per key — see
-  * [[exactShingleEdges]]), components shuffle one (id, comp) pair
-  * per doc per round, and chunk+pack reuse the audited d33/d41 shapes.
+  * [[exactShingleEdges]]), components cost one collect of the edge list
+  * (or, above the driver bound, one (id, comp) shuffle per doc per round),
+  * the winner filter is a broadcast anti-join of `kept` against the
+  * non-root ids, and chunk+pack reuse the audited d33/d41 shapes.
   * At 100 TB replace the exact shingle set with winnowed fingerprints
   * (d28) for a ~1/w density reduction at the same join shape.
   */
@@ -324,28 +328,27 @@ object Corpus {
     // riding the audit's 00_raw pair on this scan as an observed metric
     // was measured and rejected (plans/MEASUREMENTS.md, "Audit raw row")
     // one base-table scan, materialized: feeds the edge evidence, the
-    // winner join, and chunking (three consumers — without this the scan
+    // winner anti-join, and chunking (three consumers — without this the scan
     // would re-run per consumer; plan-asserted in CorpusSpec)
     val kept = graft.Materialize.stage(docs0.filter(TextOps.qualityKeep)
       .select(col("doc_id"), col("text"), col("source")))
-    val edges = edgesOf(kept)
-    val labels = Dedup.connectedComponents(
-      kept.select(col("doc_id").as("id")), edges)
-    // min-label propagation labels each component with its min id, so the
-    // canonical winner is exactly the row whose id equals its label
-    val winners = labels.filter(col("id") === col("comp")).select(col("id"))
+    // every component is labelled with its min id, so the winners are the
+    // kept docs that are not a non-root of their component (a NULL id is
+    // never a winner)
+    val nonRoots = Dedup.components(kept.select(col("doc_id").as("id")),
+      edgesOf(kept)).nonRoots.select(col("id").as("__non_root"))
     // materializeForAudit (r19 audit-probe finding): the AUDIT consumes
     // every stage as its own aggregate branch, and the stages past `kept`
     // are lazy — without materialization the six branches re-derive the
-    // suffix per branch (the dedup semi-join runs 4×, chunking 2×).
+    // suffix per branch (the dedup anti-join runs 4×, chunking 2×).
     // The two fan-out nodes (deduped: 4 consumers; chunks: 2) checkpoint
     // on the audit path only; the output-only path (d43) keeps its
     // single-consumer chain un-barriered. Materialization is
     // row-transparent, so the audit's counts are bit-identical either way.
     def auditStage(df: DataFrame): DataFrame =
       if (materializeForAudit) graft.Materialize.stage(df) else df
-    val deduped = auditStage(kept
-      .join(winners, kept("doc_id") === winners("id"), "left_semi"))
+    val deduped = auditStage(kept.filter(col("doc_id").isNotNull)
+      .join(nonRoots, col("doc_id") === col("__non_root"), "left_anti"))
     val mixed = deduped
       .filter(TextOps.domainMixKeep(rates))
       .select(col("doc_id"), col("text"))
@@ -396,7 +399,7 @@ object Corpus {
     * production pattern ("audit next to output") without paying the
     * pipeline twice: calling [[trainingSequences]] then [[pipelineAudit]]
     * re-materializes every stage (a second eager copy of each stage,
-    * doubled block-store footprint) and re-runs the label-propagation driver loop. The audit
+    * doubled block-store footprint) and re-runs connected components. The audit
     * rows here aggregate the SAME materialized stage relations the
     * returned output derives from. */
   def trainingSequencesWithAudit(docs0: DataFrame,

@@ -238,12 +238,133 @@ object Dedup {
       .orderBy(col("new_id"), col("corpus_id"))
   }
 
-  /** Connected components over an undirected near-dup pair list by
-    * iterative min-label propagation WITH POINTER JUMPING — the step that
-    * turns pairwise near-dup evidence ([[minhashNearDups]],
+  /** Connected components over an undirected near-dup pair list — the
+    * step that turns pairwise near-dup evidence ([[minhashNearDups]],
     * [[simhashNearDups]], [[winnowNearDups]], [[Similarity.jaccardPairs]])
     * into a dedup DECISION: every doc gets its component's minimum id, and
     * the canonical representative is the row where `id = component`.
+    *
+    * One staged relation feeds two paths. The symmetric edge list is
+    * materialized once ([[graft.Materialize.stage]]) with every edge whose
+    * endpoint is NULL or missing from `nodes` dropped, so such an edge
+    * neither labels nor bridges anything on either path; the same job
+    * counts the staged rows as an observed metric. Then:
+    *  - at most [[DriverEdgeBound]] edges: the edges are collected (one
+    *    `collect[src,dst]` job) and labelled on the driver by union-find
+    *    with min-id roots over primitive arrays ([[unionFind]]). The
+    *    labels are `nodes` left-joined to a local relation of one
+    *    (id, comp) row per non-root node, `comp = id` for every other
+    *    node: no shuffle, no loop. Real corpora sit near 0.1 edges/doc
+    *    ([[Corpus.denseKneeEdgesPerDoc]]), so this is the common case.
+    *  - above the bound: iterative min-label propagation WITH POINTER
+    *    JUMPING over the same staged relation, the design that scales past
+    *    driver memory ([[propagatedLabels]]).
+    * Both paths give identical labels (DedupSimilaritySpec forces the
+    * loop with a bound of 0 and compares).
+    *
+    * Raises if the loop's `maxIter` rounds don't reach the fixpoint. The
+    * default cap is sized to the DOUBLING bound, not typical graphs:
+    * rounds ≈ ⌈log₂(diameter)⌉ + O(1), so 64 covers any graph addressable
+    * by a 64-bit id (a 2⁶⁰-node chain included) — and since the loop exits
+    * at the fixpoint, the generous cap costs nothing on the 2–3-round
+    * clusters real near-dup evidence produces. A cap of 20 would be a
+    * cliff at ~10⁶-node pathological chains (21 doubling rounds). */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame,
+                          maxIter: Int = 64): DataFrame =
+    components(nodes, edges, maxIter).labels
+
+  /** Undirected edges at or below which [[connectedComponents]] labels on
+    * the driver: 2²⁰ edges collect as 2²¹ longs (16 MB), the union-find
+    * adds one Long and one Int array over the distinct endpoints, and the
+    * local label relation holds at most 2²¹ (id, comp) rows. */
+  private[graft] val DriverEdgeBound: Long = 1L << 20
+
+  /** Component labels (id, comp) and the ids of the non-root nodes
+    * (`id <> comp`): what a dedup keeps is `nodes` anti-joined to
+    * `nonRoots`, which on the driver path is a small local relation. */
+  private[graft] case class Components(labels: DataFrame, nonRoots: DataFrame)
+
+  /** [[connectedComponents]] with the driver-path bound as a parameter
+    * (0 forces the distributed loop, even for an empty edge list). */
+  private[graft] def components(nodes: DataFrame, edges: DataFrame,
+                                maxIter: Int = 64,
+                                driverEdgeBound: Long = DriverEdgeBound): Components = {
+    val ids = nodes.select(col("id").as("__nid"))
+    def known(df: DataFrame, end: String): DataFrame =
+      df.join(ids, col(end) === col("__nid"), "left_semi")
+    val metricName = "graft_cc_edges"
+    val observed = known(known(
+      edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst"))),
+      "src"), "dst")
+      .observe(metricName, count(lit(1)).as("n"))
+    val sym = graft.Materialize.stage(observed)
+    // the count rides the staging job (see the changed-count below for why
+    // the metric can be absent and why the observe(name) form)
+    val directed = observed.queryExecution.observedMetrics.get(metricName)
+      .map(_.getLong(0)).getOrElse(sym.count())
+    if (driverEdgeBound > 0 && directed <= 2 * driverEdgeBound) driverLabels(nodes, sym)
+    else propagatedLabels(nodes, sym, maxIter)
+  }
+
+  private def driverLabels(nodes: DataFrame, sym: DataFrame): Components = {
+    // each undirected edge once (a self-loop joins nothing)
+    val half = sym.filter(col("src") < col("dst"))
+      .select(col("src").cast("long"), col("dst").cast("long"))
+    val parts = graft.Materialize.labelled(half, "collect") {
+      half.queryExecution.toRdd.mapPartitions { rows =>
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator(b.result())
+      }.collect()
+    }
+    graft.Materialize.release(sym)
+    val (child, root) = unionFind(Array.concat(parts.toIndexedSeq: _*))
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val local = nodes.sparkSession.createDataFrame(
+      java.util.Arrays.asList(child.indices.map(i => Row(child(i), root(i))): _*),
+      StructType(Seq(StructField("__cid", LongType, nullable = false),
+        StructField("__comp", LongType, nullable = false))))
+    val labels = nodes.join(local, nodes("id") === col("__cid"), "left")
+      .select(nodes("id"), coalesce(col("__comp"), nodes("id")).as("comp"))
+    Components(labels, local.select(col("__cid").as("id")))
+  }
+
+  /** Union-find with min-id roots over a flat (a₀, b₀, a₁, b₁, …) edge
+    * array: returns the non-root ids and their roots (component minima),
+    * in ascending id order. Ids are ranked into a sorted distinct array, so
+    * the forest is two Int arrays; every union hangs the larger root under
+    * the smaller, so a root is its component's minimum. */
+  private def unionFind(pairs: Array[Long]): (Array[Long], Array[Long]) = {
+    val sorted = pairs.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    var i = 0
+    while (i < sorted.length) {
+      if (n == 0 || sorted(i) != sorted(n - 1)) { sorted(n) = sorted(i); n += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < pairs.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, pairs(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, pairs(i + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    val nonRoot = (0 until n).filter(x => find(x) != x).toArray
+    (nonRoot.map(ids(_)), nonRoot.map(x => ids(find(x))))
+  }
+
+  /** The distributed path of [[connectedComponents]]: iterative min-label
+    * propagation WITH POINTER JUMPING over the staged symmetric edges.
     *
     * Each round propagates the minimum label over graph edges AND over
     * label-pointer edges (id ↔ comp, rebuilt from the previous round's
@@ -253,49 +374,28 @@ object Dedup {
     * the fixpoint arrives in O(log diameter) rounds, not O(diameter). A
     * pathological chain corpus (doc i near-dup of doc i+1, diameter n)
     * converges in ~log₂n rounds where plain propagation needs n — the
-    * chain-fixture test pins a 3000-node chain inside the default
-    * `maxIter`. The augmentation is one extra union into the same
-    * neighbor-min aggregate: still exactly one shuffle round (+ the label
-    * join) and one materialization per iteration. Typical near-dup
-    * components are tiny dup-clusters where both forms take 2–3 rounds.
+    * chain-fixture test pins a 3000-node chain inside `maxIter = 20`. The
+    * augmentation is one extra union into the same neighbor-min aggregate:
+    * still exactly one shuffle round (+ the label join) and one
+    * materialization per iteration.
     *
     * Per-round materializations go through [[graft.Materialize.stage]]
     * and so follow its strategy; each superseded round's blocks are
     * released as soon as the next round lands, so the loop holds ≤ 2
     * rounds of (id, comp) pairs plus the edge list (under `disk` the
     * FINAL labels stay stored until [[graft.Materialize.releaseStages]]).
-    * All strategies produce identical labels.
-    *
-    * Raises if `maxIter` rounds don't reach the fixpoint. The default cap
-    * is sized to the DOUBLING bound, not typical graphs: rounds ≈
-    * ⌈log₂(diameter)⌉ + O(1), so 64 covers any graph addressable by a
-    * 64-bit id (a 2⁶⁰-node chain included) — and since the loop exits at
-    * the fixpoint, the generous cap costs nothing on the 2–3-round
-    * clusters real near-dup evidence produces. A cap of 20 would be a
-    * cliff at ~10⁶-node pathological chains (21 doubling rounds). */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIter: Int = 64): DataFrame = {
+    * All strategies produce identical labels. */
+  private def propagatedLabels(nodes: DataFrame, sym: DataFrame,
+                               maxIter: Int): Components = {
     def mat(df: DataFrame): DataFrame = graft.Materialize.stage(df)
-    val sym = mat(edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    // Round 1 folded into initialization (r20 optimization): with the
-    // identity labeling (comp = id) the first round's pointer edges are
-    // id↔id no-ops and its neighbor-min is simply min(id, min of direct
-    // neighbor ids) — so start the loop FROM that state and skip one full
-    // mat+changed-count cycle per invocation. Bit-identical by
-    // construction (it IS the old round 1's aggregate, with the loop-
-    // control count dropped — the count only ever steered the loop); the
-    // fixture-profile motivation is that each round costs one
-    // materialization job plus one count job plus their driver planning,
-    // and typical near-dup graphs converge in 1–2 rounds past this fold.
-    // semi-join guard: the old round 1 joined edge SOURCES against the
-    // label table, so an edge whose src is not a declared node
-    // contributed nothing — keep exactly that semantics (a hostile edge
-    // list naming an unknown low id must not become a component label)
-    val knownSrc = sym.join(nodes.select(col("id").as("__nid")),
-      col("src") === col("__nid"), "left_semi")
+    // Round 1 folded into initialization: with the identity labeling
+    // (comp = id) the first round's pointer edges are id↔id no-ops and its
+    // neighbor-min is simply min(id, min of direct neighbor ids) — so
+    // start the loop FROM that state and skip one mat+changed-count cycle.
+    // Every staged edge has both endpoints in `nodes`, so the aggregate
+    // needs no guard against an unknown low id becoming a label.
     var labels = mat(nodes
-      .join(knownSrc.groupBy(col("dst")).agg(min(col("src")).as("__nbr")),
+      .join(sym.groupBy(col("dst")).agg(min(col("src")).as("__nbr")),
         nodes("id") === col("dst"), "left")
       .select(nodes("id"),
         least(nodes("id"), coalesce(col("__nbr"), nodes("id"))).as("comp")))
@@ -349,7 +449,7 @@ object Dedup {
       it += 1
     }
     require(changed == 0L, s"connectedComponents did not converge in $maxIter rounds")
-    labels
+    Components(labels, labels.filter(col("id") =!= col("comp")).select(col("id")))
   }
 
   /** SimHash (64-bit): per-bit majority vote over xxhash64'd distinct

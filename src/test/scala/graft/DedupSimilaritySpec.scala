@@ -446,9 +446,57 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val nodes = spark.range(n).select(col("id"))
     val edges = spark.range(n - 1)
       .select(col("id").as("id_a"), (col("id") + 1L).as("id_b"))
-    val labels = Dedup.connectedComponents(nodes, edges, maxIter = 20)
+    val labels = Dedup.components(nodes, edges, maxIter = 20, driverEdgeBound = 0).labels
     assert(labels.filter(col("comp") =!= 0L).count() == 0L)
     assert(labels.count() == n)
+    assert(ccRows(labels) == ccRows(Dedup.connectedComponents(nodes, edges)),
+      "the driver path labels the chain differently from the loop")
+  }
+
+  /** (id, comp) rows in a canonical order; NULLs print as "null". */
+  private def ccRows(labels: org.apache.spark.sql.DataFrame): Seq[String] =
+    labels.collect().map(r => s"${r.get(0)}|${r.get(1)}").sorted.toSeq
+
+  /** Labels from the default (driver, union-find) path and from the loop
+    * forced by a bound of 0, after checking each path really ran. */
+  private def bothPaths(nodes: org.apache.spark.sql.DataFrame,
+                        edges: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
+    val driver = Dedup.connectedComponents(nodes, edges)
+    val loop = Dedup.components(nodes, edges, driverEdgeBound = 0).labels
+    assert(driver.queryExecution.analyzed.toString.contains("__cid"),
+      "the default path should label on the driver")
+    assert(!loop.queryExecution.analyzed.toString.contains("__cid"),
+      "a bound of 0 should force the loop")
+    (ccRows(driver), ccRows(loop))
+  }
+
+  test("connected components: the driver path and the forced loop give identical " +
+      "labels (chains, triangle, isolated nodes, unknown ids, self-loops, " +
+      "duplicates, NULL endpoints, empty edge list)") {
+    val nodes = (0L to 9L).map(Tuple1(_)).toDF("id")
+    def edges(es: (Option[Long], Option[Long])*) = es.toDF("id_a", "id_b")
+    def some(es: (Long, Long)*) = edges(es.map { case (a, b) => (Some(a), Some(b)) }: _*)
+    val shapes = Seq(
+      "chains, triangle, isolated" -> some((0L, 1L), (1L, 2L), (2L, 3L),
+        (4L, 5L), (5L, 6L), (4L, 6L), (7L, 8L)),
+      "self-loops and duplicates" -> some((5L, 5L), (1L, 2L), (1L, 2L), (2L, 1L), (9L, 9L)),
+      "NULL endpoints" -> edges((None, Some(3L)), (Some(4L), None), (None, None),
+        (Some(6L), Some(7L))),
+      "empty edge list" -> edges())
+    shapes.foreach { case (name, es) =>
+      val (driver, loop) = bothPaths(nodes, es)
+      assert(driver == loop, s"$name: driver $driver, loop $loop")
+    }
+    // ids 10..14 are not nodes: the low unknown id 10 must neither become a
+    // label nor bridge 3 and 7; the unknown 12 must not bridge 1 and 2
+    val unknown = some((10L, 3L), (10L, 7L), (1L, 12L), (12L, 2L), (5L, 6L), (8L, 14L))
+    val (driver, loop) = bothPaths(nodes, unknown)
+    assert(driver == loop, s"unknown ids: driver $driver, loop $loop")
+    assert(driver == (0L to 9L).map(i => s"$i|${if (i == 6L) 5L else i}"))
+    // a NULL node id keeps a NULL label on both paths
+    val nullNode = Seq(Some(1L), None, Some(2L)).toDF("id")
+    val (dn, ln) = bothPaths(nullNode, some((1L, 2L)))
+    assert(dn == ln && dn == Seq("1|1", "2|1", "null|null"), s"driver $dn, loop $ln")
   }
 
   test("stage strategies: local, disk and reliable give identical rows at every " +
@@ -461,7 +509,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def query(q: String) = () => SparkEntry.queries(q)(spark, sfDir)
     // (site, is a pin, build): every case reaches Materialize.stage / pin
     val cases: Seq[(String, Boolean, () => org.apache.spark.sql.DataFrame)] = Seq(
-      ("connected components", false, () => Dedup.connectedComponents(nodes, edges)),
+      ("connected components (loop)", false,
+        () => Dedup.components(nodes, edges, driverEdgeBound = 0).labels),
+      ("d43 training sequences", false, query("d43_training_sequences")),
       ("d15 minhash LSH candidates", false, query("d15_minhash_neardups")),
       ("d17 simhash bands", false, query("d17_simhash_neardups")),
       ("pqEncode", false, () => Similarity.pqEncode(emb.select(col("vec_id"), col("embedding")), books)),
@@ -515,6 +565,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val got = Dedup.connectedComponents(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
+    val (driver, loop) = bothPaths(nodes, edges)
+    assert(driver == loop)
   }
 
   test("D1 exact dedup groups: total copies equals row count") {

@@ -202,8 +202,8 @@ class PlanLintSpec extends AnyFunSuite {
     "d44_decontaminate" -> Set("documents"),
     "d49_decontaminate_winnowed" -> Set("documents"),
     // two ROLES again: split members vs their representatives (the
-    // component evidence itself hides behind connectedComponents'
-    // checkpoints — see the blind-spot note below)
+    // component evidence itself hides behind connectedComponents' staged
+    // edge list — see the blind-spot note below)
     "d62_component_split" -> Set("documents"),
     "d16_lsh_topk" -> Set("embeddings"),
     "d21_embedding_neardups" -> Set("embeddings"),
