@@ -23,17 +23,20 @@ import org.apache.spark.sql.functions._
   * edge join scale-right. Shingle identity is md5 of the space-joined
   * token window — engine-portable, so the whole chain is SQL-checkable.
   *
-  * Scale shape: quality filter is one codegen'd scan; the kept relation is
+  * Scale shape: the quality filter is one byte pass per document
+  * ([[TextOps.qualityKeep]]) in a codegen'd scan; the kept relation is
   * materialized ONCE ([[graft.Materialize.stage]], under the module-wide
   * `spark.graft.stageStorage` strategy that every eager stage of every
   * operator follows) and every later stage derives from it, so the base
-  * table is scanned exactly once. Shingling explodes O(tokens) rows, the df cap and
-  * the pair generation are ONE map-side-combined aggregate pass (a capped
-  * per-shingle doc-list collect with bounded fan-out per key — see
-  * [[exactShingleEdges]]), components cost one collect of the edge list
-  * (or, above the driver bound, one (id, comp) shuffle per doc per round),
-  * the winner filter is a broadcast anti-join of `kept` against the
-  * non-root ids, and chunk+pack reuse the audited d33/d41 shapes.
+  * table is scanned exactly once. Shingling explodes O(tokens) rows, the
+  * df cap and the pair generation are one pass over sorted runs (at most
+  * maxDf + 1 rows per shingle per map partition cross the one shingle
+  * exchange, and one partition-local scan of each shingle's run emits its
+  * pairs — see [[exactShingleEdges]]), components cost one collect of the
+  * edge list (or, above the driver bound, one (id, comp) shuffle per doc
+  * per round), the winner filter is a broadcast anti-join of `kept`
+  * against the non-root ids, and chunk+pack reuse the audited d33/d41
+  * shapes.
   * At 100 TB replace the exact shingle set with winnowed fingerprints
   * (d28) for a ~1/w density reduction at the same join shape.
   */
@@ -259,6 +262,15 @@ object Corpus {
       probeKey = s"exact:k=$shingleK:maxDf=$maxDf:minShared=$minShared",
       materializeForAudit = materializeForAudit)
 
+  /** The (sh, doc_id) rows of [[exactShingleEdges]]: each doc's distinct
+    * k-token shingle hashes. The native shingle_md5s is bit-identical to
+    * the composed split/transform/slice/concat_ws/md5 chain (asserted in
+    * ShingleMd5sSpec) with zero per-window allocation beyond the hex
+    * output. */
+  private[graft] def shingleEvidence(kept: DataFrame, shingleK: Int): DataFrame =
+    kept.select(explode(array_distinct(shingleMd5s(col("text"), shingleK))).as("sh"),
+      col("doc_id"))
+
   /** Exact-shingle near-dup evidence (the oracle-expressible default):
     * k-token shingles, md5-hashed; `array_distinct` per doc so a phrase
     * repeated within one doc counts once toward df (a per-row projection —
@@ -266,44 +278,29 @@ object Corpus {
     * exploded relation for the same set, since `doc_id` is the caller's
     * primary key).
     *
-    * The df cap and the pair generation are FUSED into one aggregate pass
-    * (r21 — guide §2.3/§2.4, the r20 verdict's deferred experiment): group
-    * the exploded relation by shingle and collect the carrying doc ids
-    * with a CAPPED collect ([[graft.functions.CappedCollectList]],
-    * cap = maxDf + 1) — per-group state is O(maxDf) even for a boilerplate
-    * shingle shared by half the corpus, the same skew bound the previous
-    * map-side partial_count provided (and NOT a count-over-window: a
-    * window partition must be buffered by one task). `size ∈ [2, maxDf]`
-    * is then the exact df band test, and the ordered pairs explode
-    * directly from each surviving id list — C(maxDf, 2) per shingle,
-    * exactly the rows the old survivor-join + self-equijoin emitted.
-    * Replaces two stage materializations (the uncapped exploded set and
-    * the survivor-joined set), the df-count shuffle, and the two-exchange
-    * self-join with a single aggregate exchange feeding the pair-count
-    * aggregate: 2 exchanges end to end, zero checkpoint jobs, identical
-    * edge set (CorpusSpec pins equivalence fixtures; the d43/d45 oracles
-    * pin it end to end).
+    * The df cap and the pair generation are the sorted-run evidence of
+    * [[Dedup.runPairs]] over the exploded (sh, doc_id) relation: each map
+    * partition ships at most maxDf + 1 rows per shingle into the one
+    * `sh`-keyed exchange (a boilerplate shingle shared by half the corpus
+    * is capped before the exchange, and nothing buffers more than maxDf
+    * ids of one shingle), and each shingle whose df is in [2, maxDf]
+    * emits its C(df, 2) ordered pairs from one partition-local scan of its
+    * sorted run. The pair-count aggregate then counts shared shingles per
+    * pair: 2 exchanges end to end, no checkpoint job, and the same edge
+    * set as the survivor-join + self-equijoin shape (CorpusSpec pins
+    * equivalence fixtures; the d43/d45 oracles pin it end to end).
     *
     * `minShared` is the edge-evidence threshold (the precision knob the
     * winnowed path exposes as d28's n_shared): at 1 (default) a single
     * shared rare shingle is enough — a quoted sentence can merge two
     * otherwise-distinct docs; at ≥ 2 an edge needs independent evidence.
-    * The pair explode emits one row per shared surviving shingle, so the
+    * The run scan emits one row per shared surviving shingle, so the
     * threshold is a plain pair-count filter. */
   private[graft] def exactShingleEdges(kept: DataFrame, shingleK: Int,
                                        maxDf: Int, minShared: Int = 1): DataFrame = {
     require(shingleK >= 1 && maxDf >= 2 && minShared >= 1,
       "shingleK >= 1, maxDf >= 2, minShared >= 1")
-    // native shingle_md5s: bit-identical to the composed split/transform/
-    // slice/concat_ws/md5 chain (asserted in ShingleMd5sSpec) with zero
-    // per-window allocation beyond the hex output
-    val grouped = kept
-      .select(col("doc_id"),
-        explode(array_distinct(shingleMd5s(col("text"), shingleK))).as("sh"))
-      .groupBy(col("sh"))
-      .agg(Dedup.cappedCollect(col("doc_id"), maxDf + 1).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxDf))
-    Dedup.explodedIdPairs(grouped)
+    Dedup.runPairs(shingleEvidence(kept, shingleK), maxDf)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("__n_shared"))
       .filter(col("__n_shared") >= minShared)
@@ -365,10 +362,11 @@ object Corpus {
     * chunk and sequence token masses are equal by construction (packing
     * loses no chunk) — the audit makes that invariant visible.
     *
-    * Scale: each row is one aggregate over a relation the pipeline
-    * already materialized (the checkpointed stages); the raw row is the
-    * only base-table scan. Six 1-row aggregates unioned — negligible next
-    * to the pipeline itself. */
+    * Scale: each row counts a relation the pipeline already
+    * materialized (the checkpointed stages); the raw row is the
+    * only base-table scan. The six rows are one stage-keyed aggregate over
+    * the union of the stages, computed here in jobs labelled
+    * `audit[...]`, and returned as a local relation in stage order. */
   def pipelineAudit(docs0: DataFrame,
                     rates: Map[String, Double],
                     shingleK: Int = 12, maxDf: Int = 20,
@@ -381,18 +379,35 @@ object Corpus {
   }
 
   private[graft] def auditOf(docs0: DataFrame, s: Stages): DataFrame = {
-    def row(stage: String, df: DataFrame,
-            tok: org.apache.spark.sql.Column): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-          coalesce(sum(tok), lit(0L)).as("n_tokens"))
-        .select(lit(stage).as("stage"), col("n_rows"), col("n_tokens"))
-    row("00_raw", docs0, TextOps.tokenCount("text"))
-      .unionByName(row("01_quality", s.kept, TextOps.tokenCount("text")))
-      .unionByName(row("02_dedup", s.deduped, TextOps.tokenCount("text")))
-      .unionByName(row("03_mixed", s.mixed, TextOps.tokenCount("text")))
-      .unionByName(row("04_chunks", s.chunks, col("n_chunk_tokens")))
-      .unionByName(row("05_sequences", s.packed, col("total_tokens")))
-      .orderBy(col("stage"))
+    val stages = Seq(
+      "00_raw" -> (docs0, TextOps.tokenCount("text")),
+      "01_quality" -> (s.kept, TextOps.tokenCount("text")),
+      "02_dedup" -> (s.deduped, TextOps.tokenCount("text")),
+      "03_mixed" -> (s.mixed, TextOps.tokenCount("text")),
+      "04_chunks" -> (s.chunks, col("n_chunk_tokens")),
+      "05_sequences" -> (s.packed, col("total_tokens")))
+    // one stage-keyed aggregate over the union: one exchange for all six
+    // stages
+    val tokens = stages.map { case (stage, (df, tok)) =>
+      df.select(lit(stage).as("stage"), tok.cast("long").as("tok"))
+    }.reduce(_ unionByName _)
+      .groupBy(col("stage"))
+      .agg(count(lit(1)).as("n_rows"), sum(col("tok")).as("n_tokens"))
+    val counted = graft.Materialize.labelled(tokens, "audit")(tokens.collect())
+      .map(r => r.getString(0) -> r).toMap
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    // a stage with no rows has no group and reads (0, 0); a stage whose
+    // token counts are all NULL reads 0 tokens
+    val rows = stages.map { case (stage, _) =>
+      counted.get(stage).fold(Row(stage, 0L, 0L)) { r =>
+        Row(stage, r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
+      }
+    }
+    docs0.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("stage", StringType, nullable = false),
+        StructField("n_rows", LongType, nullable = false),
+        StructField("n_tokens", LongType, nullable = false))))
   }
 
   /** Pipeline output AND its audit from ONE stage construction — the

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Near-duplicate detection at scale (SURVEY.md §2.7 D2): MinHash + LSH
   * banding over word shingles, and SimHash with chunk-banded Hamming
@@ -134,57 +137,162 @@ object Dedup {
         GraftColumnBridge.expression(col("text")), k, w)).as("fps"))
   }
 
-  /** The capped per-key doc-id list aggregate (see
-    * [[graft.functions.CappedCollectList]]) — the fused form of "df cap +
-    * pair generation" shared by [[winnowNearDups]] and
-    * [[Corpus.exactShingleEdges]]. */
-  private[operators] def cappedCollect(c: org.apache.spark.sql.Column,
-                                       cap: Int): org.apache.spark.sql.Column = {
+  /** Near-dup evidence from sorted runs: every ordered `(id_a, id_b)` pair
+    * (`id_a <= id_b`) of the ids sharing one key, for each key whose row
+    * count (the key's df) is in [2, `maxDf`] — one row per key and pair,
+    * so a downstream pair count is the shared-key count. Shared by
+    * [[winnowNearDups]] (long fingerprint keys) and
+    * [[Corpus.exactShingleEdges]] (string shingle keys). `evidence` has
+    * two columns, the key then an integral doc id; a NULL id is skipped,
+    * and a duplicate `(key, id)` row counts toward df like any other row.
+    *
+    * Three steps, each bounded per key:
+    *  - map side: sort each partition by key and ship at most `maxDf + 1`
+    *    rows per key ([[sortedRuns]]), so a boilerplate key shared by half
+    *    the corpus ships `(maxDf + 1) × map partitions` rows, never its
+    *    whole row set;
+    *  - exchange: hash-partition by key, sort each partition by
+    *    `(key, id)`;
+    *  - scan: one partition-local pass over each key's run, buffering at
+    *    most `maxDf` ids; a run of more than `maxDf` rows is over the cap
+    *    and emits nothing, so the decision is the exact df band test.
+    * Ids ascend within a run, so the pairs come out value-ordered
+    * whatever the partition layout.
+    *
+    * The map stage of the exchange runs here, eagerly, as the job
+    * `runs[<key>,<id>]`: a partition-local scan over an exchange is
+    * planned, and under AQE executed, at RDD construction. The scan
+    * itself and every operator above it run lazily in the caller's job.
+    * Figures and the rejected routes (a df count with a survivor join,
+    * hashed keys, no map-side cap): plans/MEASUREMENTS.md, "Sorted-run
+    * evidence and the native quality gate". */
+  private[graft] def runPairs(evidence: DataFrame, maxDf: Int): DataFrame = {
+    require(maxDf >= 1, "maxDf >= 1")
     import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.CappedCollectList(
-      GraftColumnBridge.expression(c), cap).toAggregateExpression())
+    val idType = evidence.schema(1).dataType
+    val keyType = evidence.schema(0).dataType
+    val pairs = graft.Materialize.labelled(evidence, "runs") {
+      val runs = sortedRuns(evidence, maxDf)
+      runs.queryExecution.toRdd.mapPartitions(new RunPairs(_, keyType, maxDf))
+    }
+    GraftColumnBridge.fromInternalRows(evidence.sparkSession, pairs,
+        StructType(Seq(StructField("id_a", LongType, nullable = false),
+          StructField("id_b", LongType, nullable = false))))
+      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"))
   }
 
-  /** All ordered (id_a < id_b) pairs from a `__ids` array column: the
-    * array is sorted first, so positional i<j pairs are value-ordered AND
-    * independent of the partition order the capped collect saw. Fan-out
-    * per row is C(size, 2), bounded by the caller's df cap. */
-  private[operators] def explodedIdPairs(grouped: DataFrame): DataFrame =
-    grouped.select(sort_array(col("__ids")).as("__ids"))
-      .select(explode(expr(
-        "flatten(transform(__ids, (a, i) -> transform(" +
-          "slice(__ids, i + 2, size(__ids)), " +
-          "b -> named_struct('id_a', a, 'id_b', b))))")).as("__p"))
-      .select(col("__p.id_a").as("id_a"), col("__p.id_b").as("id_b"))
+  /** The first two steps of [[runPairs]]: `evidence` (key, id) with NULL
+    * ids dropped and ids widened to long, at most `maxDf + 1` rows per key
+    * per map partition, hash-partitioned by key and sorted by (key, id)
+    * within each partition. */
+  private[graft] def sortedRuns(evidence: DataFrame, maxDf: Int): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge
+    val Array(key, id) = evidence.columns
+    val ev = evidence.select(col(key), col(id).cast("long").as(id))
+      .filter(col(id).isNotNull)
+    val keyType = ev.schema(0).dataType
+    val cap = maxDf + 1
+    val capped = ev.sortWithinPartitions(col(key)).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val same = sameKey(keyType)
+        var run: Any = null
+        var n = 0
+        rows.filter { r =>
+          if (n > 0 && same(r, run)) n += 1
+          else { run = keyOf(r, keyType); n = 1 }
+          n <= cap
+        }
+      }
+    GraftColumnBridge.fromInternalRows(ev.sparkSession, capped, ev.schema)
+      .repartition(col(key))
+      .sortWithinPartitions(col(key), col(id))
+  }
+
+  /** A copy of row `r`'s key (field 0) that outlives the row buffer. */
+  private def keyOf(r: InternalRow, keyType: DataType): Any =
+    if (r.isNullAt(0)) null
+    else InternalRow.copyValue(r.get(0, keyType))
+
+  /** Whether row `r`'s key (field 0) equals `key` (a NULL key equals a
+    * NULL key, as a grouping does). */
+  private def sameKey(keyType: DataType): (InternalRow, Any) => Boolean =
+    keyType match {
+      case LongType => (r, key) =>
+        if (r.isNullAt(0)) key == null
+        else key != null && r.getLong(0) == key.asInstanceOf[Long]
+      case _ => (r, key) =>
+        if (r.isNullAt(0)) key == null else r.get(0, keyType) == key
+    }
+
+  /** The scan of [[runPairs]] over one partition of [[sortedRuns]]: reads
+    * each key's run into `ids` (at most `maxDf`; a longer run is dropped)
+    * and emits its i < j pairs. Holds at most one row of the input, the
+    * first row of the next run, between calls. */
+  private final class RunPairs(rows: Iterator[InternalRow], keyType: DataType,
+                               maxDf: Int) extends Iterator[InternalRow] {
+    private val same = sameKey(keyType)
+    private val ids = new Array[Long](maxDf)
+    private var runSize = 0 // ids of the run being emitted; 0 if none
+    private var a = 0
+    private var b = 0
+    private var peeked: InternalRow = null
+    private val out = new SpecificInternalRow(Seq(LongType, LongType))
+
+    /** Reads the next run; false when the partition is exhausted. */
+    private def nextRun(): Boolean = {
+      if (peeked == null) {
+        if (!rows.hasNext) return false
+        peeked = rows.next()
+      }
+      val key = keyOf(peeked, keyType)
+      var n = 0
+      var more = true
+      while (more) {
+        if (n < maxDf) ids(n) = peeked.getLong(1)
+        n += 1
+        if (rows.hasNext) { peeked = rows.next(); more = same(peeked, key) }
+        else { peeked = null; more = false }
+      }
+      runSize = if (n >= 2 && n <= maxDf) n else 0
+      a = 0
+      b = 1
+      true
+    }
+
+    override def hasNext: Boolean = {
+      while (b >= runSize) if (!nextRun()) return false
+      true
+    }
+
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException
+      out.setLong(0, ids(a))
+      out.setLong(1, ids(b))
+      b += 1
+      if (b == runSize) { a += 1; b = a + 1 }
+      out
+    }
+  }
 
   /** Substring-level near-dup candidates: documents sharing ≥ `minShared`
     * winnowed fingerprints. The winnowing guarantee makes any shared
     * substring of ≥ w+k−1 bytes produce ≥ 1 shared fingerprint, so this
     * catches copied passages exact dedup and whole-doc MinHash both miss.
     *
-    * Scale shape (fused, r21 — guide §2.3 "aggregate before you shuffle" /
-    * §2.4 "remove shuffles outright"): explode to (fp, doc) — O(rows ·
-    * fps/doc), distinct per (doc, fp) by construction (WinnowKernel dedups
-    * per doc; `doc_id` is the caller's primary key) — then ONE capped
-    * per-fp doc-list aggregate ([[graft.functions.CappedCollectList]],
-    * cap = maxDf + 1, so per-group state is O(maxDf) even for a
-    * boilerplate fp carried by half the corpus: the skew bound the old
-    * df-count + survivor-join + self-equijoin chain existed for), a size
-    * filter keeping the dup-signal band df ∈ [2, maxDf] (df = 1 paired
-    * with nothing before; > maxDf was dropped by the cap), an exploded
-    * pair generation bounded at C(maxDf, 2) per fp — exactly the rows the
-    * self-join used to emit — and the same pair-count aggregate. Replaces
-    * a materialization job + a df-count shuffle + a survivor join + a
-    * two-exchange self-join with ONE aggregate exchange; never O(rows²),
-    * and nothing buffers an uncapped group. */
+    * Scale shape: explode to (fp, doc) — O(rows · fps/doc), distinct per
+    * (doc, fp) by construction (WinnowKernel dedups per doc; `doc_id` is
+    * the caller's primary key) — then the sorted-run evidence of
+    * [[runPairs]]: at most maxDf + 1 rows per fp per map partition cross
+    * the one fp-keyed exchange, and each fp whose df is in the dup-signal
+    * band [2, maxDf] emits its C(df, 2) ordered pairs (df = 1 pairs with
+    * nothing; a boilerplate fp over the cap emits none). One pair-count
+    * aggregate then counts the shared fps per pair. Never O(rows²), and
+    * nothing buffers more than maxDf ids of one fp. */
   def winnowNearDups(docs: DataFrame, minShared: Int, k: Int = 8, w: Int = 4,
                      maxDf: Int = 50): DataFrame = {
-    val grouped = winnowFingerprints(docs, k, w)
-      .select(col("doc_id"), explode(col("fps")).as("fp"))
-      .groupBy(col("fp"))
-      .agg(cappedCollect(col("doc_id"), maxDf + 1).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxDf))
-    explodedIdPairs(grouped)
+    val evidence = winnowFingerprints(docs, k, w)
+      .select(explode(col("fps")).as("fp"), col("doc_id"))
+    runPairs(evidence, maxDf)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -321,7 +429,6 @@ object Dedup {
     graft.Materialize.release(sym)
     val (child, root) = unionFind(Array.concat(parts.toIndexedSeq: _*))
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val local = nodes.sparkSession.createDataFrame(
       java.util.Arrays.asList(child.indices.map(i => Row(child(i), root(i))): _*),
       StructType(Seq(StructField("__cid", LongType, nullable = false),

@@ -269,8 +269,8 @@ object Profile {
   )
 
   /** Writes PLANS.md: each flagship's simple-mode plan, plus the d43 edge
-    * evidence stage, whose fused shape the final d43 plan hides behind the
-    * component loop's checkpoints. */
+    * evidence stage, whose sorted-run shape the final d43 plan hides behind
+    * the component stage's checkpoint. */
   def flagshipPlans(spark: SparkSession, sfDir: String, out: Path): Unit = {
     val sf = Paths.get(sfDir).getFileName
     val sb = new StringBuilder
@@ -291,17 +291,25 @@ object Profile {
       val kept = Tables.documents(spark, sfDir)
         .filter(graft.operators.TextOps.qualityKeep)
         .select(col("doc_id"), col("text"), col("source"))
+      val runs = graft.operators.Dedup.sortedRuns(
+        graft.operators.Corpus.shingleEvidence(kept, shingleK = 12), maxDf = 20)
       val edges = graft.operators.Corpus.exactShingleEdges(
         kept, shingleK = 12, maxDf = 20, minShared = 1)
-      sb.append("\n## d43 edge-evidence stage — fused skew-safe df cap: " +
-        "capped_collect_list groupBy + ordered-pair explode, native shingle_md5s\n\n")
-      sb.append("What this view documents that the final d43 plan cannot: the " +
-        "df cap and the pair generation are ONE aggregate pass — a map-side " +
-        "partial `capped_collect_list` (per-group state O(maxDf) even on a " +
-        "boilerplate shingle) BELOW the `sh` exchange (not a content-keyed " +
-        "window, and no survivor join / self-join), the [2, maxDf] df band " +
-        "is a size filter on the collected list, and the pair-count " +
-        "aggregate carries the `__n_shared >= minShared` evidence filter.\n\n```\n")
+      sb.append("\n## d43 edge-evidence stage — skew-safe df cap from sorted " +
+        "runs, native shingle_md5s\n\n")
+      sb.append("What this view documents that the final d43 plan cannot. The " +
+        "runs: the `Scan ExistingRDD` below the `sh` exchange is the map " +
+        "side, each partition sorted by `sh` and cut to maxDf + 1 rows per " +
+        "shingle (the bound a boilerplate shingle ships per map partition), " +
+        "and the exchange output is sorted by (`sh`, `doc_id`). The edges: " +
+        "one partition-local scan of those runs emits the pairs of every " +
+        "shingle with df in [2, maxDf] (the `Scan ExistingRDD` below the " +
+        "pair-count aggregate; its exchange map stage ran as the `runs[...]` " +
+        "job when the edges were built), and the pair-count aggregate " +
+        "carries the `__n_shared >= minShared` evidence filter. No " +
+        "aggregate is keyed by `sh`, and no window or self-join appears.\n\n```\n")
+      sb.append(runs.queryExecution.explainString(SimpleMode).linesIterator.take(24).mkString("\n"))
+      sb.append("\n```\n\n```\n")
       sb.append(edges.queryExecution.explainString(SimpleMode).linesIterator.take(48).mkString("\n"))
       sb.append("\n```\n")
     }

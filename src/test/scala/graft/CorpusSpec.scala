@@ -91,18 +91,25 @@ class CorpusSpec extends AnyFunSuite {
     // winnowed path (the 100 TB pipeline's evidence): same cap, same result
     assert(operators.Dedup.winnowNearDups(docs, minShared = 2, maxDf = 20)
       .collect().isEmpty)
-    // the fused df-cap aggregate combines the hot key map-side: a partial
-    // capped_collect_list BELOW the sh exchange (per-group state O(maxDf)
-    // even for the boilerplate shingle — where a count-over-window would
-    // buffer the hot shingle's whole row set in one unsplittable task,
-    // and an uncapped collect_list would buffer its whole doc-id set)
-    val plan = Corpus.exactShingleEdges(docs, 12, 20, 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("partial_capped_collect_list"), plan)
+    // the skew guard: the cap cuts each map partition's run of the hot
+    // shingle to maxDf + 1 rows BELOW the sh exchange, so the hot key
+    // ships at most (maxDf + 1) × map partitions rows, never its whole row
+    // set (a content-keyed window would buffer that set in one task). One
+    // map partition holds all 30 boilerplate rows here, so the cap engages.
+    val evidence = Corpus.shingleEvidence(docs.coalesce(1), 12)
+    val runs = operators.Dedup.sortedRuns(evidence, maxDf = 20)
+    val plan = runs.queryExecution.executedPlan.toString
     assert(!plan.contains("windowspecdefinition"), plan)
     val ex = plan.indexOf("Exchange hashpartitioning(sh")
-    assert(ex >= 0 && plan.indexOf("partial_capped_collect_list", ex) > ex,
-      s"partial_capped_collect_list not upstream of the sh exchange:\n$plan")
+    assert(ex >= 0 && plan.indexOf("Scan ExistingRDD", ex) > ex,
+      s"the capped map side is not the input of the sh exchange:\n$plan")
+    val hot = java.security.MessageDigest.getInstance("MD5")
+      .digest(boiler.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(evidence.filter(col("sh") === hot).count() == 30L)
+    val mapPartitions = evidence.rdd.getNumPartitions
+    val shipped = runs.filter(col("sh") === hot).count()
+    assert(shipped <= 21L * mapPartitions && shipped < 30L,
+      s"hot shingle shipped $shipped rows from $mapPartitions map partitions")
   }
 
   test("decontaminate: planted benchmark overlap flagged with exact hit count, clean docs absent") {

@@ -400,4 +400,59 @@ class PlanLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
     assert(reads.map(_._2).toSet == Set("stageStorage", "bloomPrune"), reads)
   }
+
+  test("no ObjectHashAggregate keyed by a shingle or fingerprint in the near-dup evidence of d28, d43, d45 and d47") {
+    // the near-dup evidence is sorted runs (Dedup.runPairs): a per-key
+    // collect runs under ObjectHashAggregate, which falls back to
+    // sort-based aggregation past 128 keys per task. The evidence of
+    // d43/d45/d47 runs inside their eager stages, so the lint reads every
+    // plan the query executes (the SQL execution events), not only the
+    // final one.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    // the node in a plan's tree string and in the formatted explain of
+    // the SQL execution events ("Input [n]: [...]" then "Keys [n]: [...]")
+    val keyedRe = ("ObjectHashAggregate(?:\\(keys=\\[|\\nInput \\[\\d+\\]: [^\\n]*" +
+      "\\nKeys \\[\\d+\\]: \\[)(?:sh|fp)#").r
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    def executedPlans(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
+      drain()
+      plans.clear()
+      val df = build
+      df.collect()
+      drain()
+      df.queryExecution.executedPlan.toString +: plans.asScala.toSeq
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val queries = Seq("d28_winnow_neardups", "d43_training_sequences",
+        "d45_pipeline_audit", "d47_training_sequences_winnowed")
+      val violations = queries.flatMap { name =>
+        val seen = executedPlans(SparkEntry.queries(name)(spark, sfDir))
+        seen.flatMap(p => keyedRe.findFirstIn(p)).distinct
+          .map(m => s"$name: ${m.replace('\n', ' ')}")
+      }
+      assert(violations.isEmpty, violations.mkString("\n"))
+      // the lint sees the banned shape (guards a plan-string change
+      // silently blinding it)
+      import org.apache.spark.sql.functions.{col, collect_list}
+      import spark.implicits._
+      val banned = executedPlans(Seq(("x", 1L)).toDF("sh", "doc_id")
+        .groupBy(col("sh")).agg(collect_list(col("doc_id"))))
+      assert(banned.count(p => keyedRe.findFirstIn(p).isDefined) >= 2, banned.mkString("\n"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
