@@ -97,6 +97,23 @@ object Materialize {
     }
   }
 
+  /** [[stage]], plus the metrics of `df`'s own `observe(name, ...)` nodes
+    * read from the staging job. They are returned only under `local`,
+    * whose eager job runs `df`'s own plan once, in its result stage. `disk`
+    * and `reliable` run the plan inside another execution (under `disk`,
+    * in the shuffle map stage of the eager count), so the map is empty and
+    * the caller falls back to a count or an aggregate. Observe only above
+    * the last exchange of `df`: a re-executed shuffle map stage can merge
+    * its accumulator updates twice (plans/MEASUREMENTS.md, "Observed
+    * metrics on an eager materialization"). */
+  def stageObserved(df: DataFrame): (DataFrame, Map[String, Row]) = {
+    val staged = stage(df)
+    val metrics =
+      if (strategy(df.sparkSession) == "local") df.queryExecution.observedMetrics
+      else Map.empty[String, Row]
+    (staged, metrics)
+  }
+
   /** Materializes a relation whose values must never be recomputed: a
     * `rand` draw, a `monotonically_increasing_id`, a Bernoulli sample. A
     * recompute would produce DIFFERENT values, so the lineage is cut under

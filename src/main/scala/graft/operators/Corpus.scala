@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus pipeline — the "documents in, training sequences out"
@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * components (keep each component's min-id winner) → deterministic domain
   * mix → context-window chunking → fixed-budget sequence packing, composed
   * as ONE dataflow with no driver round-trips between stages (the only
-  * driver step is connected components, identical to the standalone d35
-  * operator: a near-dup edge list of at most [[Dedup.DriverEdgeBound]]
-  * edges is collected and labelled by union-find on the driver, and only a
-  * larger one runs the label-propagation loop).
+  * driver step is connected components: the near-dup pairs are counted in
+  * one job and labelled by union-find on the driver when there are at most
+  * [[Dedup.DriverEdgeBound]] of them, and only a larger edge list takes
+  * the staged path and label-propagation loop of the d35 operator).
   *
   * Near-dup criterion (oracle-expressible, unlike MinHash): two documents
   * are near-dups iff they share at least one exact k-token shingle whose
@@ -32,11 +32,14 @@ import org.apache.spark.sql.functions._
   * df cap and the pair generation are one pass over sorted runs (at most
   * maxDf + 1 rows per shingle per map partition cross the one shingle
   * exchange, and one partition-local scan of each shingle's run emits its
-  * pairs — see [[exactShingleEdges]]), components cost one collect of the
-  * edge list (or, above the driver bound, one (id, comp) shuffle per doc
-  * per round), the winner filter is a broadcast anti-join of `kept`
-  * against the non-root ids, and chunk+pack reuse the audited d33/d41
-  * shapes.
+  * pairs — see [[exactShingleEdges]]). Components cost one job that counts
+  * those pairs per partition and collects the counts
+  * ([[Dedup.evidenceNonRoots]]; above the driver bound, one (id, comp)
+  * shuffle per doc per round instead). The winner filter is a broadcast
+  * anti-join of `kept` against the non-root ids, and chunk+pack reuse the
+  * audited d33/d41 shapes. Three jobs build the output: the `kept` stage,
+  * the `runs[...]` map stage and `edges[id_a,id_b]`; the audit adds the
+  * chunk stage and one aggregate ([[pipelineAudit]]).
   * At 100 TB replace the exact shingle set with winnowed fingerprints
   * (d28) for a ~1/w density reduction at the same join shape.
   */
@@ -232,11 +235,13 @@ object Corpus {
   }
 
   /** The pipeline's stage intermediates — [[trainingSequences]] returns
-    * `packed`; [[pipelineAudit]] counts every stage. All descend from the
-    * single checkpointed base scan. */
+    * `packed`; [[pipelineAudit]] reads the row count and token mass of
+    * every stage. All descend from the single staged base scan. `observed`
+    * holds the audit metrics the staging jobs read (see [[auditOf]]). */
   private[graft] case class Stages(kept: DataFrame, deduped: DataFrame,
                                    mixed: DataFrame, chunks: DataFrame,
-                                   packed: DataFrame)
+                                   packed: DataFrame,
+                                   observed: Map[String, Row])
 
   /** Training-sequence materialization over `docs0` (schema: doc_id, text,
     * lang, source, n_chars). Output = [[TextOps.packChunks]] schema. */
@@ -255,12 +260,15 @@ object Corpus {
                             chunkTokens: Int = 50, stride: Int = 40,
                             budget: Int = 512, docsPerGroup: Int = 50,
                             minShared: Int = 1,
-                            materializeForAudit: Boolean = false): Stages =
-    stagesWithEdges(docs0, rates,
-      exactShingleEdges(_, shingleK, maxDf, minShared),
+                            audit: Boolean = false,
+                            driverEdgeBound: Long = Dedup.DriverEdgeBound): Stages = {
+    require(shingleK >= 1 && maxDf >= 2 && minShared >= 1,
+      "shingleK >= 1, maxDf >= 2, minShared >= 1")
+    stagesWithEdges(docs0, rates, shingleEvidence(_, shingleK), maxDf, minShared,
       chunkTokens, stride, budget, docsPerGroup,
       probeKey = s"exact:k=$shingleK:maxDf=$maxDf:minShared=$minShared",
-      materializeForAudit = materializeForAudit)
+      audit = audit, driverEdgeBound = driverEdgeBound)
+  }
 
   /** The (sh, doc_id) rows of [[exactShingleEdges]]: each doc's distinct
     * k-token shingle hashes. The native shingle_md5s is bit-identical to
@@ -285,10 +293,11 @@ object Corpus {
     * is capped before the exchange, and nothing buffers more than maxDf
     * ids of one shingle), and each shingle whose df is in [2, maxDf]
     * emits its C(df, 2) ordered pairs from one partition-local scan of its
-    * sorted run. The pair-count aggregate then counts shared shingles per
-    * pair: 2 exchanges end to end, no checkpoint job, and the same edge
-    * set as the survivor-join + self-equijoin shape (CorpusSpec pins
-    * equivalence fixtures; the d43/d45 oracles pin it end to end).
+    * sorted run. [[Dedup.sharedKeyEdges]] then counts shared shingles per
+    * pair (CorpusSpec pins equivalence fixtures; the d43/d45 oracles pin
+    * the pipeline end to end). The pipeline itself counts the same pairs
+    * on the driver ([[Dedup.evidenceNonRoots]]); this relation is the
+    * density probe's and the tests' view of the edges.
     *
     * `minShared` is the edge-evidence threshold (the precision knob the
     * winnowed path exposes as d28's n_shared): at 1 (default) a single
@@ -300,58 +309,79 @@ object Corpus {
                                        maxDf: Int, minShared: Int = 1): DataFrame = {
     require(shingleK >= 1 && maxDf >= 2 && minShared >= 1,
       "shingleK >= 1, maxDf >= 2, minShared >= 1")
-    Dedup.runPairs(shingleEvidence(kept, shingleK), maxDf)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("__n_shared"))
-      .filter(col("__n_shared") >= minShared)
+    Dedup.sharedKeyEdges(Dedup.runPairs(shingleEvidence(kept, shingleK), maxDf), minShared)
       .select(col("id_a"), col("id_b"))
   }
 
+  /** The audit's observed-metric name for one stage row. */
+  private def auditMetric(stage: String): String = s"graft_audit_$stage"
+
+  /** The pipeline over the near-dup evidence `evidenceOf(kept)` (key,
+    * doc_id): docs are near-dups iff they share at least `minShared` keys
+    * whose df is in [2, `maxDf`].
+    *
+    * Jobs: the `kept` stage, the `runs[...]` map stage of the evidence
+    * exchange, and one `edges[id_a,id_b]` job whose counted pairs the
+    * driver labels ([[Dedup.evidenceNonRoots]]; above
+    * `driverEdgeBound` the staged path and loop of [[Dedup.components]]
+    * run instead). With `audit`, the chunks are staged too, and the audit's
+    * stage rows ride the two staging jobs as observed metrics. */
   private[graft] def stagesWithEdges(docs0: DataFrame,
                                      rates: Map[String, Double],
-                                     edgesOf: DataFrame => DataFrame,
+                                     evidenceOf: DataFrame => DataFrame,
+                                     maxDf: Int, minShared: Int,
                                      chunkTokens: Int = 50, stride: Int = 40,
                                      budget: Int = 512,
                                      docsPerGroup: Int = 50,
                                      probeKey: String = "",
-                                     materializeForAudit: Boolean = false): Stages = {
+                                     audit: Boolean = false,
+                                     driverEdgeBound: Long = Dedup.DriverEdgeBound): Stages = {
     // dense-corpus auto-selection BEFORE the first materialization, so
     // the decision covers every stage of the run (see
     // [[denseCorpusStrategy]]); every materialization below is eager,
     // hence inside the withValue scope
-    val chosen = denseCorpusStrategy(docs0, edgesOf, probeKey)
+    val chosen = denseCorpusStrategy(docs0,
+      df => Dedup.sharedKeyEdges(Dedup.runPairs(evidenceOf(df), maxDf), minShared), probeKey)
     graft.Materialize.strategyOverride.withValue(
         chosen.orElse(graft.Materialize.strategyOverride.value)) {
-    // riding the audit's 00_raw pair on this scan as an observed metric
-    // was measured and rejected (plans/MEASUREMENTS.md, "Audit raw row")
+    // an audit row (rows, token mass) observed on a relation, when auditing
+    def observed(df: DataFrame, stage: String, tokens: Column): DataFrame =
+      if (!audit) df
+      else df.observe(auditMetric(stage), count(lit(1)).as("n_rows"),
+        sum(tokens).as("n_tokens"))
+    def textTokens: Column = TextOps.tokenCount("text")
     // one base-table scan, materialized: feeds the edge evidence, the
     // winner anti-join, and chunking (three consumers — without this the scan
-    // would re-run per consumer; plan-asserted in CorpusSpec)
-    val kept = graft.Materialize.stage(docs0.filter(TextOps.qualityKeep)
-      .select(col("doc_id"), col("text"), col("source")))
+    // would re-run per consumer; plan-asserted in CorpusSpec). The audit's
+    // raw and quality rows ride this job.
+    val (kept, keptRows) = graft.Materialize.stageObserved(observed(
+      observed(docs0.select(col("doc_id"), col("text"), col("source")), "00_raw",
+        textTokens).filter(TextOps.qualityKeep),
+      "01_quality", textTokens))
     // every component is labelled with its min id, so the winners are the
     // kept docs that are not a non-root of their component (a NULL id is
-    // never a winner)
-    val nonRoots = Dedup.components(kept.select(col("doc_id").as("id")),
-      edgesOf(kept)).nonRoots.select(col("id").as("__non_root"))
-    // materializeForAudit (r19 audit-probe finding): the AUDIT consumes
-    // every stage as its own aggregate branch, and the stages past `kept`
-    // are lazy — without materialization the six branches re-derive the
-    // suffix per branch (the dedup anti-join runs 4×, chunking 2×).
-    // The two fan-out nodes (deduped: 4 consumers; chunks: 2) checkpoint
-    // on the audit path only; the output-only path (d43) keeps its
-    // single-consumer chain un-barriered. Materialization is
-    // row-transparent, so the audit's counts are bit-identical either way.
-    def auditStage(df: DataFrame): DataFrame =
-      if (materializeForAudit) graft.Materialize.stage(df) else df
-    val deduped = auditStage(kept.filter(col("doc_id").isNotNull)
-      .join(nonRoots, col("doc_id") === col("__non_root"), "left_anti"))
-    val mixed = deduped
-      .filter(TextOps.domainMixKeep(rates))
-      .select(col("doc_id"), col("text"))
-    val chunks = auditStage(TextOps.chunkDocsUnsorted(mixed, chunkTokens, stride))
-    Stages(kept, deduped, mixed, chunks,
-      TextOps.packChunks(chunks, budget, docsPerGroup))
+    // never a winner). Every evidence id is a kept doc id, so no edge needs
+    // a node check.
+    val nonRoots = Dedup.evidenceNonRoots(evidenceOf(kept), maxDf, minShared,
+      kept.select(col("doc_id").as("id")), driverEdgeBound)
+      .select(col("id").as("__non_root"))
+    val deduped = kept.filter(col("doc_id").isNotNull)
+      .join(nonRoots, col("doc_id") === col("__non_root"), "left_anti")
+    def mix(df: DataFrame): DataFrame =
+      df.filter(TextOps.domainMixKeep(rates)).select(col("doc_id"), col("text"))
+    val mixed = mix(deduped)
+    // The audit stages the chunks: its aggregate over `packed` and the
+    // dedup, mix and chunk rows all read them, and the three rows ride
+    // this job. The output-only path (d43) keeps its single-consumer chain
+    // un-barriered. Staging is row-transparent, so the output is
+    // bit-identical either way.
+    val (chunks, chunkRows) =
+      if (!audit) (TextOps.chunkDocsUnsorted(mixed, chunkTokens, stride), Map.empty[String, Row])
+      else graft.Materialize.stageObserved(observed(TextOps.chunkDocsUnsorted(
+        observed(mix(observed(deduped, "02_dedup", textTokens)), "03_mixed", textTokens),
+        chunkTokens, stride), "04_chunks", col("n_chunk_tokens")))
+    Stages(kept, deduped, mixed, chunks, TextOps.packChunks(chunks, budget, docsPerGroup),
+      keptRows ++ chunkRows)
     }
   }
 
@@ -362,11 +392,11 @@ object Corpus {
     * chunk and sequence token masses are equal by construction (packing
     * loses no chunk) — the audit makes that invariant visible.
     *
-    * Scale: each row counts a relation the pipeline already
-    * materialized (the checkpointed stages); the raw row is the
-    * only base-table scan. The six rows are one stage-keyed aggregate over
-    * the union of the stages, computed here in jobs labelled
-    * `audit[...]`, and returned as a local relation in stage order. */
+    * Scale: the audit adds no pass over the data. The raw and quality rows
+    * are observed on the job that stages `kept` (the only base-table
+    * scan), and the dedup, mix and chunk rows on the job that stages the
+    * chunks; the sequence row is one aggregate over the packed output (see
+    * [[auditOf]]). Returned as a local relation in stage order. */
   def pipelineAudit(docs0: DataFrame,
                     rates: Map[String, Double],
                     shingleK: Int = 12, maxDf: Int = 20,
@@ -374,36 +404,33 @@ object Corpus {
                     budget: Int = 512, docsPerGroup: Int = 50,
                     minShared: Int = 1): DataFrame = {
     val s = stages(docs0, rates, shingleK, maxDf, chunkTokens, stride,
-      budget, docsPerGroup, minShared, materializeForAudit = true)
+      budget, docsPerGroup, minShared, audit = true)
     auditOf(docs0, s)
   }
 
+  /** The six audit rows of stages built with `audit`: (stage, n_rows,
+    * n_tokens). A row observed by its staging job is read from `s.observed`.
+    * The sequence row, and any row whose metric is absent (the `disk` and
+    * `reliable` strategies run another execution, see
+    * [[graft.Materialize.stageObserved]]), is one aggregate over the
+    * stage's relation in a job labelled `audit[...]`; the optimizer drops
+    * the packed output's final sort under it. A stage with no rows reads
+    * (0, 0). */
   private[graft] def auditOf(docs0: DataFrame, s: Stages): DataFrame = {
-    val stages = Seq(
+    val rows = Seq(
       "00_raw" -> (docs0, TextOps.tokenCount("text")),
       "01_quality" -> (s.kept, TextOps.tokenCount("text")),
       "02_dedup" -> (s.deduped, TextOps.tokenCount("text")),
       "03_mixed" -> (s.mixed, TextOps.tokenCount("text")),
       "04_chunks" -> (s.chunks, col("n_chunk_tokens")),
-      "05_sequences" -> (s.packed, col("total_tokens")))
-    // one stage-keyed aggregate over the union: one exchange for all six
-    // stages
-    val tokens = stages.map { case (stage, (df, tok)) =>
-      df.select(lit(stage).as("stage"), tok.cast("long").as("tok"))
-    }.reduce(_ unionByName _)
-      .groupBy(col("stage"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("tok")).as("n_tokens"))
-    val counted = graft.Materialize.labelled(tokens, "audit")(tokens.collect())
-      .map(r => r.getString(0) -> r).toMap
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    // a stage with no rows has no group and reads (0, 0); a stage whose
-    // token counts are all NULL reads 0 tokens
-    val rows = stages.map { case (stage, _) =>
-      counted.get(stage).fold(Row(stage, 0L, 0L)) { r =>
-        Row(stage, r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
-      }
+      "05_sequences" -> (s.packed, col("total_tokens"))
+    ).map { case (stage, (df, tokens)) =>
+      val r = s.observed.getOrElse(auditMetric(stage),
+        graft.Materialize.labelled(df, "audit")(
+          df.agg(count(lit(1)), sum(tokens.cast("long"))).head()))
+      Row(stage, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     docs0.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
       StructType(Seq(StructField("stage", StringType, nullable = false),
         StructField("n_rows", LongType, nullable = false),
@@ -415,8 +442,8 @@ object Corpus {
     * pipeline twice: calling [[trainingSequences]] then [[pipelineAudit]]
     * re-materializes every stage (a second eager copy of each stage,
     * doubled block-store footprint) and re-runs connected components. The audit
-    * rows here aggregate the SAME materialized stage relations the
-    * returned output derives from. */
+    * rows here describe the SAME staged relations the returned output
+    * derives from. */
   def trainingSequencesWithAudit(docs0: DataFrame,
                                  rates: Map[String, Double],
                                  shingleK: Int = 12, maxDf: Int = 20,
@@ -424,7 +451,7 @@ object Corpus {
                                  budget: Int = 512, docsPerGroup: Int = 50,
                                  minShared: Int = 1): (DataFrame, DataFrame) = {
     val s = stages(docs0, rates, shingleK, maxDf, chunkTokens, stride,
-      budget, docsPerGroup, minShared, materializeForAudit = true)
+      budget, docsPerGroup, minShared, audit = true)
     (s.packed, auditOf(docs0, s))
   }
 
@@ -459,9 +486,7 @@ object Corpus {
                                 chunkTokens: Int = 50, stride: Int = 40,
                                 budget: Int = 512,
                                 docsPerGroup: Int = 50): DataFrame =
-    stagesWithEdges(docs0, rates,
-      kept => Dedup.winnowNearDups(kept, minShared, k, w, maxDf)
-        .select(col("id_a"), col("id_b")),
+    stagesWithEdges(docs0, rates, Dedup.winnowEvidence(_, k, w), maxDf, minShared,
       chunkTokens, stride, budget, docsPerGroup,
       probeKey = s"winnow:k=$k:w=$w:maxDf=$maxDf:minShared=$minShared").packed
 

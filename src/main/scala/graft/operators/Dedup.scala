@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
@@ -166,20 +167,36 @@ object Dedup {
     * Figures and the rejected routes (a df count with a survivor join,
     * hashed keys, no map-side cap): plans/MEASUREMENTS.md, "Sorted-run
     * evidence and the native quality gate". */
-  private[graft] def runPairs(evidence: DataFrame, maxDf: Int): DataFrame = {
+  private[graft] def runPairs(evidence: DataFrame, maxDf: Int): DataFrame =
+    pairFrame(evidence, runPairRows(evidence, maxDf))
+
+  /** The (long, long) pair rows of [[runPairs]]; the `runs[...]` job runs
+    * here. */
+  private def runPairRows(evidence: DataFrame, maxDf: Int): RDD[InternalRow] = {
     require(maxDf >= 1, "maxDf >= 1")
-    import org.apache.spark.sql.GraftColumnBridge
-    val idType = evidence.schema(1).dataType
     val keyType = evidence.schema(0).dataType
-    val pairs = graft.Materialize.labelled(evidence, "runs") {
+    graft.Materialize.labelled(evidence, "runs") {
       val runs = sortedRuns(evidence, maxDf)
       runs.queryExecution.toRdd.mapPartitions(new RunPairs(_, keyType, maxDf))
     }
-    GraftColumnBridge.fromInternalRows(evidence.sparkSession, pairs,
+  }
+
+  /** `rows` of [[runPairRows]] as (id_a, id_b) in `evidence`'s id type. */
+  private def pairFrame(evidence: DataFrame, rows: RDD[InternalRow]): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge
+    val idType = evidence.schema(1).dataType
+    GraftColumnBridge.fromInternalRows(evidence.sparkSession, rows,
         StructType(Seq(StructField("id_a", LongType, nullable = false),
           StructField("id_b", LongType, nullable = false))))
       .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"))
   }
+
+  /** The edges of [[runPairs]] evidence: each distinct pair with its
+    * shared-key count `n_shared`, kept at `n_shared >= minShared`. */
+  private[graft] def sharedKeyEdges(pairs: DataFrame, minShared: Int): DataFrame =
+    pairs.groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .filter(col("n_shared") >= minShared)
 
   /** The first two steps of [[runPairs]]: `evidence` (key, id) with NULL
     * ids dropped and ids widened to long, at most `maxDf + 1` rows per key
@@ -290,14 +307,14 @@ object Dedup {
     * nothing buffers more than maxDf ids of one fp. */
   def winnowNearDups(docs: DataFrame, minShared: Int, k: Int = 8, w: Int = 4,
                      maxDf: Int = 50): DataFrame = {
-    val evidence = winnowFingerprints(docs, k, w)
-      .select(explode(col("fps")).as("fp"), col("doc_id"))
-    runPairs(evidence, maxDf)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    sharedKeyEdges(runPairs(winnowEvidence(docs, k, w), maxDf), minShared)
       .orderBy(col("id_a"), col("id_b"))
   }
+
+  /** The (fp, doc_id) evidence of [[winnowNearDups]]: each doc's distinct
+    * winnowed fingerprints. */
+  private[graft] def winnowEvidence(docs: DataFrame, k: Int, w: Int): DataFrame =
+    winnowFingerprints(docs, k, w).select(explode(col("fps")).as("fp"), col("doc_id"))
 
   /** The persistable MinHash index for a corpus snapshot, as the two
     * tables a production pipeline writes at ingest:
@@ -368,7 +385,11 @@ object Dedup {
     *    JUMPING over the same staged relation, the design that scales past
     *    driver memory ([[propagatedLabels]]).
     * Both paths give identical labels (DedupSimilaritySpec forces the
-    * loop with a bound of 0 and compares).
+    * loop with a bound of 0 and compares). The node check costs a
+    * broadcast job of the node ids; the corpus pipeline, whose evidence ids
+    * are nodes by construction, labels through [[evidenceNonRoots]]
+    * instead, which counts the evidence pairs in one job and comes here
+    * only above its bound.
     *
     * Raises if the loop's `maxIter` rounds don't reach the fixpoint. The
     * default cap is sized to the DOUBLING bound, not typical graphs:
@@ -401,16 +422,14 @@ object Dedup {
     def known(df: DataFrame, end: String): DataFrame =
       df.join(ids, col(end) === col("__nid"), "left_semi")
     val metricName = "graft_cc_edges"
-    val observed = known(known(
+    val (sym, metrics) = graft.Materialize.stageObserved(known(known(
       edges.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst"))),
       "src"), "dst")
-      .observe(metricName, count(lit(1)).as("n"))
-    val sym = graft.Materialize.stage(observed)
-    // the count rides the staging job (see the changed-count below for why
-    // the metric can be absent and why the observe(name) form)
-    val directed = observed.queryExecution.observedMetrics.get(metricName)
-      .map(_.getLong(0)).getOrElse(sym.count())
+      .observe(metricName, count(lit(1)).as("n")))
+    // the count rides the staging job; a strategy that runs another
+    // execution leaves no metric and pays a count job
+    val directed = metrics.get(metricName).map(_.getLong(0)).getOrElse(sym.count())
     if (driverEdgeBound > 0 && directed <= 2 * driverEdgeBound) driverLabels(nodes, sym)
     else propagatedLabels(nodes, sym, maxIter)
   }
@@ -427,15 +446,153 @@ object Dedup {
       }.collect()
     }
     graft.Materialize.release(sym)
-    val (child, root) = unionFind(Array.concat(parts.toIndexedSeq: _*))
-    import org.apache.spark.sql.Row
-    val local = nodes.sparkSession.createDataFrame(
-      java.util.Arrays.asList(child.indices.map(i => Row(child(i), root(i))): _*),
-      StructType(Seq(StructField("__cid", LongType, nullable = false),
-        StructField("__comp", LongType, nullable = false))))
+    val local = nonRootRelation(nodes.sparkSession, Array.concat(parts.toIndexedSeq: _*))
     val labels = nodes.join(local, nodes("id") === col("__cid"), "left")
       .select(nodes("id"), coalesce(col("__comp"), nodes("id")).as("comp"))
     Components(labels, local.select(col("__cid").as("id")))
+  }
+
+  /** A local relation (__cid, __comp) with one row per non-root node of
+    * the components of a flat (a₀, b₀, a₁, b₁, …) edge array, labelled by
+    * [[unionFind]]. */
+  private def nonRootRelation(spark: org.apache.spark.sql.SparkSession,
+                              pairs: Array[Long]): DataFrame = {
+    val (child, root) = unionFind(pairs)
+    import org.apache.spark.sql.Row
+    spark.createDataFrame(
+      java.util.Arrays.asList(child.indices.map(i => Row(child(i), root(i))): _*),
+      StructType(Seq(StructField("__cid", LongType, nullable = false),
+        StructField("__comp", LongType, nullable = false))))
+  }
+
+  /** The non-root ids (`id`) of the components of the near-dup graph that
+    * `evidence` (key, id) gives under the [[runPairs]] rule: two ids are
+    * adjacent iff they share at least `minShared` keys whose df is in
+    * [2, `maxDf`]. Every evidence id must be a node: no edge is checked
+    * against `nodes`, so the caller guarantees it ([[Corpus]], whose
+    * evidence ids are kept doc ids by construction; a NULL id never pairs).
+    * [[components]] keeps the node check for every other caller.
+    *
+    * After the `runs[...]` map stage, ONE job labelled `edges[id_a,id_b]`
+    * runs the run scan, counts the pairs of each partition in a table of
+    * at most `driverEdgeBound / partitions` pairs (fewer when
+    * `spark.driver.maxResultSize` needs it) and collects the tables. The
+    * driver merges them, keeps the pairs with `minShared` shared keys and
+    * labels by [[unionFind]], so it never holds more than about
+    * `driverEdgeBound` pairs. When a table or the merged count overflows,
+    * or the bound is 0, the pair-count edges and `nodes` go through
+    * [[components]]: its staged edges, then its collect or its loop. */
+  private[graft] def evidenceNonRoots(evidence: DataFrame, maxDf: Int, minShared: Int,
+                                      nodes: DataFrame,
+                                      driverEdgeBound: Long = DriverEdgeBound): DataFrame = {
+    require(minShared >= 1, "minShared >= 1")
+    val rows = runPairRows(evidence, maxDf)
+    val pairs = pairFrame(evidence, rows)
+    val counted =
+      if (driverEdgeBound <= 0) None
+      else graft.Materialize.labelled(pairs, "edges")(countedPairs(rows, driverEdgeBound))
+    counted match {
+      case Some(table) =>
+        nonRootRelation(evidence.sparkSession, table.edges(minShared))
+          .select(col("__cid").as("id"))
+      case None =>
+        components(nodes, sharedKeyEdges(pairs, minShared).select(col("id_a"), col("id_b")),
+          driverEdgeBound = driverEdgeBound).nonRoots
+    }
+  }
+
+  /** Bytes one counted pair takes in a task result: two ids and a count. */
+  private val CountedPairBytes = 24L
+
+  /** The distinct pairs of `rows` (self-pairs dropped) with their row
+    * counts, from one job, or None when a partition or the merged table
+    * holds more than `bound` pairs. */
+  private def countedPairs(rows: RDD[InternalRow], bound: Long): Option[PairTable] = {
+    val sc = rows.sparkContext
+    val parts = math.max(1, rows.getNumPartitions)
+    // half the result budget, split across the tasks
+    val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val perTask = math.max(1L, math.min(bound,
+      if (maxResult > 0) maxResult / 2 / CountedPairBytes else bound) / parts)
+    val merged = new PairTable
+    var over = false
+    sc.runJob(rows, (it: Iterator[InternalRow]) => {
+      val t = new PairTable
+      while (it.hasNext && t.size <= perTask) {
+        val r = it.next()
+        val a = r.getLong(0)
+        val b = r.getLong(1)
+        if (a != b) t.add(a, b, 1L)
+      }
+      if (t.size > perTask) null else t.triples
+    }, (_: Int, triples: Array[Long]) =>
+      if (triples == null) over = true
+      else if (!over) {
+        var i = 0
+        while (i < triples.length) {
+          merged.add(triples(i), triples(i + 1), triples(i + 2))
+          i += 3
+        }
+        over = merged.size > bound
+      })
+    if (over) None else Some(merged)
+  }
+
+  /** Open-addressing count table keyed by an id pair, over three primitive
+    * arrays (a count of 0 marks an empty slot). */
+  private final class PairTable {
+    private var slots = 1024
+    private var ka = new Array[Long](slots)
+    private var kb = new Array[Long](slots)
+    private var n = new Array[Long](slots)
+    var size = 0
+
+    private def slot(a: Long, b: Long): Int = {
+      var h = a * 0x9e3779b97f4a7c15L ^ b
+      h ^= h >>> 32
+      h *= 0xd6e8feb86659fd93L
+      (h ^ (h >>> 32)).toInt & (slots - 1)
+    }
+
+    def add(a: Long, b: Long, count: Long): Unit = {
+      if (2 * (size + 1) > slots) grow()
+      var i = slot(a, b)
+      while (n(i) != 0 && (ka(i) != a || kb(i) != b)) i = (i + 1) & (slots - 1)
+      if (n(i) == 0) { ka(i) = a; kb(i) = b; size += 1 }
+      n(i) += count
+    }
+
+    private def grow(): Unit = {
+      val (oa, ob, on) = (ka, kb, n)
+      slots *= 2
+      ka = new Array[Long](slots); kb = new Array[Long](slots); n = new Array[Long](slots)
+      size = 0
+      var i = 0
+      while (i < oa.length) { if (on(i) != 0) add(oa(i), ob(i), on(i)); i += 1 }
+    }
+
+    /** (a, b, count) triples, flat. */
+    def triples: Array[Long] = {
+      val out = new Array[Long](3 * size)
+      var j = 0
+      var i = 0
+      while (i < slots) {
+        if (n(i) != 0) { out(j) = ka(i); out(j + 1) = kb(i); out(j + 2) = n(i); j += 3 }
+        i += 1
+      }
+      out
+    }
+
+    /** The (a, b) pairs counted at least `minShared` times, flat. */
+    def edges(minShared: Int): Array[Long] = {
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      var i = 0
+      while (i < slots) {
+        if (n(i) >= minShared) { b += ka(i); b += kb(i) }
+        i += 1
+      }
+      b.result()
+    }
   }
 
   /** Union-find with min-id roots over a flat (a₀, b₀, a₁, b₁, …) edge
@@ -518,21 +675,14 @@ object Dedup {
       val nbrMin = sym.unionByName(ptr).join(labels, col("src") === col("id"))
         .groupBy(col("dst")).agg(min(col("comp")).as("nbr_comp"))
       // the changed-count rides the materialization job as an observed
-      // metric (r21 — guide §1.2 "don't compute things you throw away"
-      // applied to whole jobs): the eager materialization of every
-      // Materialize.stage strategy executes this dataset's OWN
-      // QueryExecution, so the CollectMetrics accumulator is readable
-      // synchronously afterwards (plans/MEASUREMENTS.md) and the
-      // loop-control count no longer needs its own follow-up job — one
-      // job per round instead of two. Deliberately the observe(name)
-      // form, NOT an Observation object: Observation registers with the
-      // session's ObservationManager, non-serializable session state
-      // that breaks any later closure capturing the session (Spark ML
-      // training summaries do), and its get() waits on the async
-      // listener bus. sum over an empty relation is null → no change;
-      // a missing metric (a future strategy whose action runs a
-      // different execution) falls back to the count job — correctness
-      // never depends on the metric being present.
+      // metric ([[graft.Materialize.stageObserved]]), so the loop control
+      // needs no job of its own under `local`: one job per round, not two.
+      // The observe(name) form, NOT an Observation object: Observation
+      // registers with the session's ObservationManager, non-serializable
+      // session state that breaks any later closure capturing the session
+      // (Spark ML training summaries do), and its get() waits on the async
+      // listener bus. sum over an empty relation is null → no change; a
+      // missing metric (`disk`, `reliable`) falls back to the count job.
       // per-round metric name: the disk strategy persists WITH lineage
       // kept, so round n+1's plan still contains round n's CollectMetrics
       // node and a repeated name is a DUPLICATED_METRICS_NAME analysis
@@ -543,8 +693,8 @@ object Dedup {
           least(labels("comp"), coalesce(col("nbr_comp"), labels("comp"))).as("comp"),
           (coalesce(col("nbr_comp"), labels("comp")) < labels("comp")).as("__ch"))
         .observe(metricName, sum(col("__ch").cast("long")).as("n"))
-      val next = mat(observed)
-      changed = observed.queryExecution.observedMetrics.get(metricName)
+      val (next, metrics) = graft.Materialize.stageObserved(observed)
+      changed = metrics.get(metricName)
         .map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
         .getOrElse(next.filter(col("__ch")).count())
       // drop the superseded round's blocks now (a disk handle stays

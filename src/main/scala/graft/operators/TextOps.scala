@@ -21,9 +21,13 @@ object TextOps {
   private val stopList = stopwords.map(w => s"'$w'").mkString(", ")
 
   /** Whitespace token count (keeps empty tokens — parity with DuckDB
-    * `string_split`). */
-  def tokenCount(c: String): org.apache.spark.sql.Column =
-    size(split(col(c), " ", -1)).cast("long")
+    * `string_split`): `size(split(c, ' ', -1))` as a long, evaluated by
+    * the native [[graft.functions.TokenCount]] kernel in one byte pass (the
+    * composed form lives in the test sources). NULL gives NULL. */
+  def tokenCount(c: String): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(graft.functions.TokenCount(GraftColumnBridge.expression(col(c))))
+  }
 
   /** Distinct-token (type) count — the d32 numerator, SHARED with the d50
     * quality model's type-token-ratio bin so the statistic and the model

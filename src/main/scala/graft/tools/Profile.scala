@@ -17,7 +17,7 @@ import graft.{GraftSession, Json, SparkEntry, Tables}
   * is optimized.
   *
   * {{{
-  * runMain graft.tools.Profile time  <q,...|all|flagship> [--sf DIR] [--reps N] [--ab conf.key=a,b] [--json FILE]
+  * runMain graft.tools.Profile time  <q,...|all|flagship> [--sf DIR] [--reps N] [--ab conf.key=a,b] [--sink count|noop] [--json FILE]
   * runMain graft.tools.Profile plans <q,...|all> [--sf DIR] [--round R] [--suffix S]
   * runMain graft.tools.Profile plans flagship    [--sf DIR]
   * }}}
@@ -27,9 +27,13 @@ import graft.{GraftSession, Json, SparkEntry, Tables}
   * per session), measured on a separate session so the profiled session's
   * first loads stay cold. Then, per query and rep, it records build time
   * (DataFrame construction: analysis plus any eager stages), exec time (the
-  * `.count()` action, the same action as Bench), jobs / stages / tasks, the
-  * inter-job driver gap, shuffle write, disk spill and GC from one
-  * SparkListener, and the block-manager storage in use after the action.
+  * action: `--sink count`, the default, is `.count()`, the same action as
+  * Bench; `--sink noop` writes every row and column to the `noop` sink, so
+  * Catalyst cannot prune work that `count()` never reads), jobs / stages /
+  * tasks, the inter-job driver gap, shuffle write, disk spill and GC from
+  * one SparkListener, the block-manager storage in use after the action,
+  * and the generated classes compiled during build and action with their
+  * compile time (Spark's codegen cache misses, JVM-wide).
   * Rep 1 is cold (codegen, JIT, schema inference); read the later reps.
   * `--ab` runs each query under both values of one conf key, interleaved
   * in this JVM and alternating which arm runs first (use an even rep
@@ -46,13 +50,20 @@ object Profile {
   final case class JobTime(id: Int, seconds: Double, description: String)
 
   /** One query run. `wall` spans build, action and the unpersist hygiene,
-    * so `build + exec <= wall`; `rows` is -1 and `error` set on failure. */
+    * so `build + exec <= wall`; `rows` is the count under the `count` sink
+    * and -1 under `noop`, and -1 with `error` set on failure. `compiles`
+    * and `compileMs` are the generated classes compiled during build and
+    * action and their compile time. */
   final case class Record(query: String, rep: Int, arm: Option[String],
-                          buildS: Double, execS: Double, wallS: Double,
+                          sink: String, buildS: Double, execS: Double, wallS: Double,
                           rows: Long, jobs: Seq[JobTime], stages: Int,
                           tasks: Int, gapS: Double, shuffleWriteMb: Double,
                           spillMb: Double, gcS: Double, storageMb: Double,
+                          compiles: Long, compileMs: Double,
                           error: Option[String])
+
+  /** The actions `--sink` names. */
+  val Sinks: Set[String] = Set("count", "noop")
 
   /** `--ab key=a,b`: the two values one conf key takes. */
   final case class Ab(key: String, a: String, b: String)
@@ -110,14 +121,16 @@ object Profile {
       gap / 1e3
     }
 
-    def record(query: String, rep: Int, arm: Option[String], buildS: Double,
-               execS: Double, wallS: Double, rows: Long, storageBytes: Long,
+    def record(query: String, rep: Int, arm: Option[String], sink: String,
+               buildS: Double, execS: Double, wallS: Double, rows: Long,
+               storageBytes: Long, compiles: Long, compileNs: Long,
                error: Option[String]): Record = {
       val js = jobs.values.asScala.toSeq.sortBy(_.id)
-      Record(query, rep, arm, buildS, execS, wallS, rows,
+      Record(query, rep, arm, sink, buildS, execS, wallS, rows,
         js.map(j => JobTime(j.id, if (j.end < 0) -1.0 else (j.end - j.start) / 1e3, j.desc)),
         stages.get(), tasks.get(), gapS(js), shuffleWrite.get() / 1e6,
-        spill.get() / 1e6, gcMs.get() / 1e3, storageBytes / 1e6, error)
+        spill.get() / 1e6, gcMs.get() / 1e3, storageBytes / 1e6,
+        compiles, compileNs / 1e6, error)
     }
   }
 
@@ -136,6 +149,14 @@ object Profile {
 
   private def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
 
+  /** JVM-wide codegen counters: classes compiled (codegen cache misses)
+    * and their total compile time in ns. */
+  private def codegen(): (Long, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+  }
+
   /** Min over `n` calls of bare `spark.read.parquet` vs [[Tables.load]]
     * per fixture table, on a fresh session with its own schema cache. */
   def tableLoads(spark: SparkSession, sfDir: String, n: Int): Seq[TableLoad] = {
@@ -148,10 +169,13 @@ object Profile {
   }
 
   /** Runs every query `reps` times (each rep under both `ab` arms, the
-    * first arm alternating per rep) and returns one record per run, in run
-    * order. The listener is removed and any `ab` key restored on return. */
+    * first arm alternating per rep) with `sink` as the action and returns
+    * one record per run, in run order. The listener is removed and any `ab`
+    * key restored on return. */
   def time(spark: SparkSession, names: Seq[String], sfDir: String, reps: Int,
-           ab: Option[Ab] = None, log: String => Unit = println): Seq[Record] = {
+           ab: Option[Ab] = None, sink: String = "count",
+           log: String => Unit = println): Seq[Record] = {
+    require(Sinks(sink), s"--sink wants one of ${Sinks.mkString("|")}, got '$sink'")
     val counters = new Counters
     val saved = ab.map(a => spark.conf.getOption(a.key))
     spark.sparkContext.addSparkListener(counters)
@@ -159,11 +183,16 @@ object Profile {
       for (a <- ab; v <- arm) spark.conf.set(a.key, v)
       drainListenerBus(spark)
       counters.reset()
+      val (compiles0, compileNs0) = codegen()
       val t0 = System.nanoTime()
       val built = Try(SparkEntry.queries(q)(spark, sfDir))
       val t1 = System.nanoTime()
-      val rows = built.map(_.count())
+      val rows = built.map { df =>
+        if (sink == "count") df.count()
+        else { df.write.format("noop").mode("overwrite").save(); -1L }
+      }
       val t2 = System.nanoTime()
+      val (compiles1, compileNs1) = codegen()
       val storage = spark.sparkContext.getExecutorMemoryStatus.values
         .map { case (max, free) => max - free }.sum
       unpersistAll(spark)
@@ -171,8 +200,9 @@ object Profile {
       drainListenerBus(spark)
       val err = rows.failed.toOption
         .map(e => Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-      val r = counters.record(q, rep, arm, (t1 - t0) / 1e9, (t2 - t1) / 1e9,
-        (t3 - t0) / 1e9, rows.getOrElse(-1L), storage, err)
+      val r = counters.record(q, rep, arm, sink, (t1 - t0) / 1e9, (t2 - t1) / 1e9,
+        (t3 - t0) / 1e9, rows.getOrElse(-1L), storage, compiles1 - compiles0,
+        compileNs1 - compileNs0, err)
       log(line(r))
       r.jobs.foreach(j => log(f"[profile]   job ${j.id}%4d ${j.seconds}%8.3f s  ${j.description.take(90)}"))
       r
@@ -198,9 +228,10 @@ object Profile {
   private def line(r: Record): String =
     f"[profile] ${r.query}%-34s rep ${r.rep}${r.arm.fold("")(a => s" [$a]")}: " +
       f"build=${r.buildS}%.3f s exec=${r.execS}%.3f s wall=${r.wallS}%.3f s " +
-      f"rows=${r.rows} jobs=${r.jobs.size} stages=${r.stages} tasks=${r.tasks} " +
+      f"sink=${r.sink} rows=${r.rows} jobs=${r.jobs.size} stages=${r.stages} tasks=${r.tasks} " +
       f"gap=${r.gapS}%.3f s shufWriteMB=${r.shuffleWriteMb}%.1f " +
-      f"spillMB=${r.spillMb}%.1f gc=${r.gcS}%.3f s storageMB=${r.storageMb}%.1f" +
+      f"spillMB=${r.spillMb}%.1f gc=${r.gcS}%.3f s storageMB=${r.storageMb}%.1f " +
+      f"compiles=${r.compiles} compileMs=${r.compileMs}%.1f" +
       r.error.fold("")(e => s" ERROR $e")
 
   /** Per query, the median over reps of wall(b) / wall(a); then the median
@@ -255,6 +286,7 @@ object Profile {
     "v10_psi_by_column" -> "per-column PSI sweep (unpivot-in-projection, one scan)",
     "d41_packed_sequences" -> "next-fit sequence packing (grouped aggregate-HOF fold)",
     "d43_training_sequences" -> "corpus pipeline composition (checkpoint-fed, zero re-scans)",
+    "d45_pipeline_audit" -> "corpus audit (five rows observed on the staging jobs; the declared plan is their local relation)",
     "d44_decontaminate" -> "benchmark decontamination (shingle equijoin, AQE-broadcastable bench side)",
     "d47_training_sequences_winnowed" -> "100 TB corpus pipeline (winnowed fingerprints, skew-safe df cap)",
     "d49_decontaminate_winnowed" -> "100 TB decontamination (winnowed fps, train-side stop-fp cap, minHits)",
@@ -269,8 +301,8 @@ object Profile {
   )
 
   /** Writes PLANS.md: each flagship's simple-mode plan, plus the d43 edge
-    * evidence stage, whose sorted-run shape the final d43 plan hides behind
-    * the component stage's checkpoint. */
+    * evidence stage, whose sorted-run shape the final d43 plan hides: its
+    * pairs are counted on the driver before the plan is built. */
   def flagshipPlans(spark: SparkSession, sfDir: String, out: Path): Unit = {
     val sf = Paths.get(sfDir).getFileName
     val sb = new StringBuilder
@@ -305,8 +337,11 @@ object Profile {
         "one partition-local scan of those runs emits the pairs of every " +
         "shingle with df in [2, maxDf] (the `Scan ExistingRDD` below the " +
         "pair-count aggregate; its exchange map stage ran as the `runs[...]` " +
-        "job when the edges were built), and the pair-count aggregate " +
-        "carries the `__n_shared >= minShared` evidence filter. No " +
+        "job when the edges were built). d43 counts those pairs per " +
+        "partition in one `edges[id_a,id_b]` job and merges the counts on " +
+        "the driver; the pair-count aggregate shown, with its " +
+        "`n_shared >= minShared` evidence filter, is the same edge set as " +
+        "the over-bound path and the density probe compute it. No " +
         "aggregate is keyed by `sh`, and no window or self-join appears.\n\n```\n")
       sb.append(runs.queryExecution.explainString(SimpleMode).linesIterator.take(24).mkString("\n"))
       sb.append("\n```\n\n```\n")
@@ -324,11 +359,12 @@ object Profile {
       s"""{"table":${q(t.table)},"read_ms":${n(t.readMs)},"load_ms":${n(t.loadMs)}}""")
     val runs = recs.map { r =>
       val jobs = r.jobs.map(j => s"""{"s":${n(j.seconds)},"desc":${q(j.description)}}""")
-      s"""{"query":${q(r.query)},"rep":${r.rep},"arm":${r.arm.fold("null")(q)},""" +
+      s"""{"query":${q(r.query)},"rep":${r.rep},"arm":${r.arm.fold("null")(q)},"sink":${q(r.sink)},""" +
         s""""build_s":${n(r.buildS)},"exec_s":${n(r.execS)},"wall_s":${n(r.wallS)},""" +
         s""""rows":${r.rows},"jobs":${r.jobs.size},"stages":${r.stages},"tasks":${r.tasks},""" +
         s""""driver_gap_s":${n(r.gapS)},"shuffle_write_mb":${n(r.shuffleWriteMb)},""" +
         s""""spill_mb":${n(r.spillMb)},"gc_s":${n(r.gcS)},"storage_mb":${n(r.storageMb)},""" +
+        s""""compiles":${r.compiles},"compile_ms":${n(r.compileMs)},""" +
         s""""error":${r.error.fold("null")(q)},"job_list":${jobs.mkString("[", ",", "]")}}"""
     }
     val abJson = ab.fold("null") { a =>
@@ -345,12 +381,12 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val usage = "usage: Profile <time|plans> <q,...|all|flagship> [--sf DIR] " +
-      "[--reps N] [--ab conf.key=a,b] [--json FILE] [--round R] [--suffix S]"
+      "[--reps N] [--ab conf.key=a,b] [--sink count|noop] [--json FILE] [--round R] [--suffix S]"
     val flags = args.drop(2)
     require(args.length >= 2 && Set("time", "plans")(args(0)) && flags.length % 2 == 0, usage)
     val opts = flags.grouped(2).map { case Array(k, v) => k -> v }.toMap
     require(opts.keySet.subsetOf(
-      Set("--sf", "--reps", "--ab", "--json", "--round", "--suffix")), usage)
+      Set("--sf", "--reps", "--ab", "--sink", "--json", "--round", "--suffix")), usage)
     val sfDir = opts.get("--sf").orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse(sys.error("give the fixture dir: --sf DIR or SPARK_GRAFT_SF_DIR"))
     val names = args(1) match {
@@ -366,7 +402,7 @@ object Profile {
         val ab = opts.get("--ab").map(Ab.parse)
         val loads = tableLoads(spark, sfDir, math.max(reps, 3))
         loads.foreach(t => println(f"[profile] table ${t.table}%-10s read.parquet min=${t.readMs}%7.1f ms  Tables.load min=${t.loadMs}%7.1f ms"))
-        val recs = time(spark, names, sfDir, reps, ab)
+        val recs = time(spark, names, sfDir, reps, ab, opts.getOrElse("--sink", "count"))
         ab.foreach { a =>
           val (per, med) = abRatios(recs, a)
           per.foreach { case (q, r) => println(f"[profile] ab $q%-34s ${a.b}/${a.a} = $r%.3f") }

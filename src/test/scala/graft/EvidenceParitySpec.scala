@@ -10,11 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Corpus, Dedup, TextOps}
 import graft.reference.EvidenceReference
 
-/** The corpus pipeline's two native paths against the shapes they
-  * replaced (kept in [[graft.reference.EvidenceReference]]):
+/** The corpus pipeline's native paths against the shapes they replaced
+  * (kept in [[graft.reference.EvidenceReference]]):
   *  - sorted-run near-dup evidence (`Dedup.runPairs`) against the
   *    capped-collect pair shape, with string and long keys;
-  *  - the `QualityKeep` kernel against the composed builtin predicate. */
+  *  - the non-roots of the edges counted on the driver
+  *    (`Dedup.evidenceNonRoots`) against `Dedup.components` over the
+  *    capped-collect edges, and its over-bound fallback;
+  *  - the `QualityKeep` and `TokenCount` kernels against the composed
+  *    builtin forms. */
 class EvidenceParitySpec extends AnyFunSuite {
   import SparkFixture.{spark, sfDir}
 
@@ -104,6 +108,57 @@ class EvidenceParitySpec extends AnyFunSuite {
     assertParity(winnowed(8, 4), maxDf = 50)
   }
 
+  // ---- edges counted on the driver ----
+
+  private def ids(df: DataFrame): Set[Long] =
+    df.collect().map(_.getAs[Number](0).longValue).toSet
+
+  /** Non-roots of the driver-counted edges, on the driver path and with
+    * the bound forced to 0 (the staged fallback and loop), equal the
+    * components of the capped-collect edges over the same evidence. */
+  private def assertNonRootParity(evidence: DataFrame, maxDf: Int,
+                                  minShared: Int): Set[Long] = {
+    val id = evidence.columns(1)
+    val nodes = evidence.filter(col(id).isNotNull).select(col(id).as("id")).distinct()
+    val reference = EvidenceReference.cappedPairs(evidence, maxDf)
+      .groupBy(col("id_a"), col("id_b")).count()
+      .filter(col("count") >= minShared).select(col("id_a"), col("id_b"))
+    val expected = ids(Dedup.components(nodes, reference).nonRoots)
+    assert(ids(Dedup.evidenceNonRoots(evidence, maxDf, minShared, nodes)) == expected,
+      s"driver path, minShared $minShared")
+    assert(ids(Dedup.evidenceNonRoots(evidence, maxDf, minShared, nodes,
+      driverEdgeBound = 0)) == expected, s"over-bound fallback, minShared $minShared")
+    expected
+  }
+
+  test("driver-counted edges: non-roots equal components over the same evidence, " +
+      "NULL and duplicate ids, self-pairs, minShared 1 and 2") {
+    for (ev <- Seq(evidence(StringType, cases(t => t)), evidence(LongType, cases(longKey)))) {
+      // components {1, 2, 3} (keys n, at) and {10, 11} (the NULL key); the
+      // self-pair (7, 7) of the duplicate id labels nothing
+      assert(assertNonRootParity(ev, maxDf = 3, minShared = 1) == Set(2L, 3L, 11L))
+      // (1, 2) is the only pair sharing two keys
+      assert(assertNonRootParity(ev, maxDf = 3, minShared = 2) == Set(2L))
+    }
+  }
+
+  test("driver-counted edges: non-roots equal components on the real corpus, " +
+      "exact and winnowed keys") {
+    val kept = Tables.documents(spark, sfDir).filter(TextOps.qualityKeep)
+      .select(col("doc_id"), col("text"))
+    for (minShared <- Seq(1, 2)) {
+      val exact = assertNonRootParity(Corpus.shingleEvidence(kept, 12), maxDf = 20, minShared)
+      val winnowed = assertNonRootParity(Dedup.winnowEvidence(kept, 60, 9), maxDf = 50, minShared)
+      if (minShared == 1) assert(exact.nonEmpty && winnowed.nonEmpty, "vacuous evidence")
+    }
+  }
+
+  test("driver-counted edges on empty input: no non-roots on either path") {
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("sh", StringType), StructField("doc_id", IntegerType))))
+    assert(assertNonRootParity(empty, maxDf = 20, minShared = 1).isEmpty)
+  }
+
   // ---- quality gate ----
 
   private def samples[A](gen: Gen[A], n: Int): Seq[A] =
@@ -163,6 +218,31 @@ class EvidenceParitySpec extends AnyFunSuite {
     assert(verdicts.take(8) == Seq(true, false, true, false, true, false, true, false), verdicts)
     assert(verdicts(8) && verdicts(9), "multibyte mean length is in characters")
     assert(byId.values.count(_.contains(true)) > 20, "random texts never kept: generator too weak")
+  }
+
+  test("token-count kernel equals the composed split size: NULL, empty, spaces, random texts") {
+    // long texts cross the kernel's eight-byte words at every alignment
+    val long = (0 until 40).map(i => Seq.fill(i)("ab ").mkString + "é" * (i % 3))
+    val texts: Seq[Option[String]] = None +: (boundaries ++ long ++ samples(text, 600)).map(Some(_))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        texts.zipWithIndex.map { case (t, i) => Row(i.toLong, t.orNull) }, 4),
+      StructType(Seq(StructField("id", LongType), StructField("text", StringType))))
+    val rows = df.select(col("id"), TextOps.tokenCount("text").as("native"),
+        EvidenceReference.composedTokenCount("text").as("composed"))
+      .collect()
+    rows.foreach { r =>
+      val (n, c) = (Option(r.get(1)), Option(r.get(2)))
+      assert(n == c, s"text #${r.getLong(0)}: ${texts(r.getLong(0).toInt)}")
+    }
+    val byId = rows.map(r => r.getLong(0).toInt -> Option(r.get(1))).toMap
+    assert(byId(0).isEmpty, "NULL text must give NULL")
+    assert(byId(boundaries.indexOf("") + 1).contains(1L), "empty text is one token")
+    assert(byId(boundaries.indexOf("          ") + 1).contains(11L))
+    // interpreted eval equals generated code
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val interpreted = texts.map(t => Option(graft.functions.TokenCount(
+      Literal.create(t.orNull, StringType)).eval(null)))
+    assert(interpreted == texts.indices.map(byId))
   }
 
   test("quality kernel: interpreted eval equals generated code") {

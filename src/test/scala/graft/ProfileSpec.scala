@@ -13,8 +13,8 @@ class ProfileSpec extends AnyFunSuite {
 
   private val quiet: String => Unit = _ => ()
 
-  test("time: one record per query, build + exec within wall, d43 runs more jobs than x1") {
-    val names = Seq("x1_revenue_by_nation", "d43_training_sequences")
+  test("time: one record per query, build + exec within wall, d43 runs more jobs than x10") {
+    val names = Seq("x10_pricing_summary", "d43_training_sequences")
     val recs = Profile.time(spark, names, sfDir, reps = 1, log = quiet)
     assert(recs.map(_.query) == names)
     recs.foreach { r =>
@@ -24,8 +24,25 @@ class ProfileSpec extends AnyFunSuite {
       assert(r.jobs.nonEmpty && r.stages >= 1 && r.tasks >= r.stages, r)
       assert(r.gapS >= 0.0, r)
     }
-    val Seq(x1, d43) = recs
-    assert(d43.jobs.size > x1.jobs.size, (x1.jobs.size, d43.jobs.size))
+    val Seq(x10, d43) = recs
+    assert(d43.jobs.size > x10.jobs.size, (x10.jobs.size, d43.jobs.size))
+  }
+
+  test("time --sink: noop writes every row, count counts them; each rep records its codegen compiles") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val q = Seq("d41_packed_sequences")
+    val before = compiled
+    val Seq(count) = Profile.time(spark, q, sfDir, reps = 1, log = quiet)
+    val Seq(noop) = Profile.time(spark, q, sfDir, reps = 1, sink = "noop", log = quiet)
+    val delta = compiled - before
+    assert(count.sink == "count" && count.rows > 0 && count.error.isEmpty, count)
+    assert(noop.sink == "noop" && noop.rows == -1L && noop.error.isEmpty, noop)
+    assert(noop.jobs.nonEmpty && noop.execS > 0.0, noop)
+    // the counters are the JVM's codegen-cache misses during each rep
+    assert(count.compiles + noop.compiles == delta, (count.compiles, noop.compiles, delta))
+    Seq(count, noop).foreach(r => assert(r.compiles >= 0 && (r.compileMs > 0.0) == (r.compiles > 0), r))
+    intercept[IllegalArgumentException](Profile.time(spark, q, sfDir, reps = 1, sink = "show", log = quiet))
   }
 
   test("time --ab: arm order alternates across reps, both arms return the same rows") {

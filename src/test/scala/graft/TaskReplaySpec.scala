@@ -133,6 +133,15 @@ class TaskReplaySpec extends AnyFunSuite {
     }
   }
 
+  test("corpus audit (d45 shape) is replay-safe: rows observed on the staging jobs stay exact") {
+    // the audit's stage rows are accumulator metrics of the kept and chunk
+    // staging jobs; a failed first attempt's updates must not be merged, so
+    // the bombed run's rows equal the clean run's
+    assertReplaySafe("pipelineAudit",
+      d => operators.Corpus.pipelineAudit(d,
+        Map("src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.1)))
+  }
+
   test("decontamination (d44 shape, bloom-prune path included) is replay-safe") {
     assertReplaySafe("decontaminate", { d =>
       val train = d.filter(pmod(col("doc_id"), lit(97L)) =!= 0L)

@@ -18,7 +18,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType}
   *    `maxDf + 1` ids per key under ObjectHashAggregate, keep lists of size
   *    [2, maxDf], explode the i < j pairs of each sorted list;
   *  - [[composedQualityKeep]]: the builtin-function form of the quality
-  *    gate the native `QualityKeep` kernel replaces. */
+  *    gate the native `QualityKeep` kernel replaces;
+  *  - [[composedTokenCount]]: the builtin-function form of the whitespace
+  *    token count the native `TokenCount` kernel replaces. */
 object EvidenceReference {
 
   /** Ordered (id_a, id_b) pairs of `evidence` (key, id), one per key and
@@ -37,6 +39,11 @@ object EvidenceReference {
           "b -> named_struct('id_a', a, 'id_b', b))))")).as("__p"))
       .select(col("__p.id_a").as("id_a"), col("__p.id_b").as("id_b"))
   }
+
+  /** The whitespace token count as composed builtins: split on a single
+    * space keeping empty tokens, then the array size. */
+  def composedTokenCount(c: String): Column =
+    size(split(col(c), " ", -1)).cast("long")
 
   /** The quality gate as composed builtins over `text`: three `split`s and
     * three `regexp_replace`s per row. */
