@@ -846,8 +846,8 @@ object SparkEntry {
         " END AS effective_epochs FROM ps, t ORDER BY source"),
     "d41_packed_sequences" ->
       // chunking CTEs mirror d33; the recursive CTE walks each pack group's
-      // chunks in (doc_id, chunk_id) order applying the same next-fit rule
-      // as packChunks' aggregate fold (base case = first chunk opens seq 0)
+      // chunks in (doc_id, chunk_id) order applying the same next-fit rule as
+      // packChunks' PackSequences kernel (base case = first chunk opens seq 0)
       ("WITH RECURSIVE t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents WHERE text IS NOT NULL), " +
         "e AS (SELECT doc_id, unnest(range(0, greatest(1, CAST(ceil((len(toks) - 50) / 40.0) AS BIGINT) + 1))) AS chunk_id, toks FROM t), " +
         "c AS (SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, " +

@@ -26,6 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * feeds `bytes[start(w) .. end(w+k-1))` straight into a thread-local MD5
   * — no token arrays, no slices, no joined strings. Allocation per window
   * is exactly the 32-byte hex output the operator needs anyway.
+  *
+  * With `distinct`, a window whose digest an earlier window of the same
+  * text already produced is skipped: `array_distinct` of the full array
+  * (first occurrences, in order), decided on the 16-byte digests before
+  * any hex is built.
   */
 object ShingleKernel {
   private final val Hex = "0123456789abcdef".getBytes
@@ -45,42 +50,95 @@ object ShingleKernel {
     UTF8String.fromBytes(out)
   }
 
-  def shingleMd5s(s: UTF8String, k: Int): Array[UTF8String] = {
-    val bytes = s.getBytes
-    // count tokens: split on 0x20 KEEPING empties (split(text,' ',-1) parity)
-    var nTok = 1
+  /** The 16-byte MD5 of `bytes[off, off + len)`. */
+  private[functions] def md5(bytes: Array[Byte], off: Int, len: Int): Array[Byte] = {
+    val md = mdLocal.get()
+    md.reset()
+    md.update(bytes, off, len)
+    md.digest()
+  }
+
+  /** The lowercase hex MD5 of `bytes[off, off + len)`: Spark's `md5`. */
+  private[functions] def md5Hex(bytes: Array[Byte], off: Int, len: Int): UTF8String =
+    toHexUtf8(md5(bytes, off, len))
+
+  /** Token bounds of `split(text, ' ', -1)` over the UTF-8 bytes: entry 0
+    * is -1, entry t + 1 is the offset of the space that ends token t (the
+    * byte length for the last token), so tokens a..b span the bytes
+    * `[bounds(a) + 1, bounds(b + 1))`. There are `bounds.length - 1`
+    * tokens, at least one (an empty text is one empty token). */
+  private[functions] def tokenBounds(bytes: Array[Byte]): Array[Int] = {
+    var spaces = 0
     var i = 0
-    while (i < bytes.length) { if (bytes(i) == 0x20) nTok += 1; i += 1 }
-    val n = nTok - k + 1
-    if (n <= 0) return new Array[UTF8String](0)
-    val starts = new Array[Int](nTok)
-    val ends = new Array[Int](nTok)
-    var t = 0
-    starts(0) = 0
+    while (i < bytes.length) { if (bytes(i) == 0x20) spaces += 1; i += 1 }
+    val bounds = new Array[Int](spaces + 2)
+    bounds(0) = -1
+    var t = 1
     i = 0
     while (i < bytes.length) {
-      if (bytes(i) == 0x20) { ends(t) = i; t += 1; starts(t) = i + 1 }
+      if (bytes(i) == 0x20) { bounds(t) = i; t += 1 }
       i += 1
     }
-    ends(t) = bytes.length
-    val md = mdLocal.get()
+    bounds(t) = bytes.length
+    bounds
+  }
+
+  def shingleMd5s(s: UTF8String, k: Int, distinct: Boolean): Array[UTF8String] = {
+    val bytes = s.getBytes
+    val bounds = tokenBounds(bytes)
+    val n = bounds.length - 1 - k + 1
+    if (n <= 0) return new Array[UTF8String](0)
+    val seen = if (distinct) new DigestSet(n) else null
     val out = new Array[UTF8String](n)
+    var kept = 0
     var w = 0
     while (w < n) {
-      md.reset()
-      md.update(bytes, starts(w), ends(w + k - 1) - starts(w))
-      out(w) = toHexUtf8(md.digest())
+      val start = bounds(w) + 1
+      val d = md5(bytes, start, bounds(w + k) - start)
+      if (seen == null || seen.add(d)) { out(kept) = toHexUtf8(d); kept += 1 }
       w += 1
     }
-    out
+    if (kept == n) out else java.util.Arrays.copyOf(out, kept)
+  }
+
+  /** An open-addressing set of at most `capacity` 16-byte digests, held
+    * as two longs each. MD5 output is uniform, so the low word is the
+    * probe hash. */
+  private final class DigestSet(capacity: Int) {
+    private val mask = Integer.highestOneBit(math.max(2, 2 * capacity - 1)) * 2 - 1
+    private val hi = new Array[Long](mask + 1)
+    private val lo = new Array[Long](mask + 1)
+    private val used = new Array[Boolean](mask + 1)
+
+    private def word(d: Array[Byte], off: Int): Long = {
+      var x = 0L
+      var i = 0
+      while (i < 8) { x = (x << 8) | (d(off + i) & 0xffL); i += 1 }
+      x
+    }
+
+    /** True when `d` was not in the set (and is now). */
+    def add(d: Array[Byte]): Boolean = {
+      val h = word(d, 0)
+      val l = word(d, 8)
+      var i = l.toInt & mask
+      while (used(i)) {
+        if (hi(i) == h && lo(i) == l) return false
+        i = (i + 1) & mask
+      }
+      used(i) = true; hi(i) = h; lo(i) = l
+      true
+    }
   }
 }
 
 /** Native shingle-hash expression: string → array<string> of the md5 hex
-  * of every k-token window (windows with duplicates preserved — callers
-  * `.distinct()` downstream exactly as with the composed form). Empty
+  * of every k-token window. Without `distinct` (the registered SQL
+  * `shingle_md5s`), duplicate windows are preserved; with it, the array
+  * is `array_distinct` of that one, first occurrences in order. Empty
   * array when the text has fewer than k tokens. See [[ShingleKernel]]. */
-case class ShingleMd5s(child: Expression, k: Int) extends UnaryExpression {
+case class ShingleMd5s(child: Expression, k: Int, distinct: Boolean = false)
+    extends UnaryExpression {
 
   require(k >= 1 && k <= 1024, "shingle width in 1..1024")
 
@@ -90,17 +148,18 @@ case class ShingleMd5s(child: Expression, k: Int) extends UnaryExpression {
       s"shingle_md5s expects string, got ${other.simpleString}")
   }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "shingle_md5s"
+  override def prettyName: String = if (distinct) "distinct_shingle_md5s" else "shingle_md5s"
+  override protected def flatArguments: Iterator[Any] = Iterator(child, k)
 
   override def nullSafeEval(input: Any): Any =
     new GenericArrayData(ShingleKernel
-      .shingleMd5s(input.asInstanceOf[UTF8String], k).asInstanceOf[Array[Any]])
+      .shingleMd5s(input.asInstanceOf[UTF8String], k, distinct).asInstanceOf[Array[Any]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s => {
       s"""
          |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.ShingleKernel.shingleMd5s($s, $k));
+         |  graft.functions.ShingleKernel.shingleMd5s($s, $k, $distinct));
        """.stripMargin
     })
 

@@ -11,7 +11,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Champion promotion / loading / scoring (M18–M19, S5,
   * `deployment.py:16-110`): archive-then-write filesystem transaction with
-  * UTC-stamped archival, metadata JSON, batch scoring entry. */
+  * UTC-stamped archival, metadata JSON, batch scoring entry.
+  *
+  * Serving skew, kept on purpose: [[score]] and [[scoreJson]] recompute
+  * the engineered features on the scored batch itself
+  * ([[FeaturePipeline.addEngineeredFeatures]]), so `high_value` compares
+  * each row with the 75th percentile of `monthly_charges` in THAT batch,
+  * not in the training data. The same row can score differently in
+  * different batches. This copies the reference's train/serve skew
+  * (`deployment.py:99`); fixing it would change what the reproduction
+  * reproduces, so it must not be fixed silently. */
 object Deployment {
 
   final case class ChampionMeta(modelName: String, f1: Double, rocAuc: Double,

@@ -28,18 +28,28 @@ import org.apache.spark.sql.functions._
   * materialized ONCE ([[graft.Materialize.stage]], under the module-wide
   * `spark.graft.stageStorage` strategy that every eager stage of every
   * operator follows) and every later stage derives from it, so the base
-  * table is scanned exactly once. Shingling explodes O(tokens) rows, the
-  * df cap and the pair generation are one pass over sorted runs (at most
-  * maxDf + 1 rows per shingle per map partition cross the one shingle
-  * exchange, and one partition-local scan of each shingle's run emits its
-  * pairs — see [[exactShingleEdges]]). Components cost one job that counts
-  * those pairs per partition and collects the counts
+  * table is scanned exactly once. Shingling explodes O(tokens) rows (each
+  * doc's distinct shingles, decided in the shingle kernel), the df cap and
+  * the pair generation are one pass over sorted runs (at most maxDf + 1
+  * rows per shingle per map partition cross the one shingle exchange, and
+  * one partition-local scan of each shingle's run emits its pairs — see
+  * [[exactShingleEdges]]). Components cost one job that counts those
+  * pairs per partition and collects the counts
   * ([[Dedup.evidenceNonRoots]]; above the driver bound, one (id, comp)
-  * shuffle per doc per round instead). The winner filter is a broadcast
-  * anti-join of `kept` against the non-root ids, and chunk+pack reuse the
-  * audited d33/d41 shapes. Three jobs build the output: the `kept` stage,
-  * the `runs[...]` map stage and `edges[id_a,id_b]`; the audit adds the
-  * chunk stage and one aggregate ([[pipelineAudit]]).
+  * shuffle per doc per round instead). The winner filter is a per-row
+  * binary search of a broadcast sorted array of the non-root ids (an
+  * anti-join above the driver bound), and chunk+pack are the native d33/d41
+  * generators: no higher-order function or lambda runs per row or group.
+  *
+  * Jobs: three run while the output is built — the `kept` stage, the
+  * `runs[...]` map stage and `edges[id_a,id_b]`; the audit adds the chunk
+  * stage and one `audit[...]` aggregate ([[pipelineAudit]]). The caller's
+  * action on the output then runs the unlabelled tail jobs: the pack
+  * group (`grp`) exchange, whose map side reads `kept` through the winner
+  * filter, the mix and the chunker; the output range sort's sample; and
+  * the range exchange and final sort. They carry no label because they
+  * belong to the caller's action, not to a stage of this module.
+  *
   * At 100 TB replace the exact shingle set with winnowed fingerprints
   * (d28) for a ~1/w density reduction at the same join shape.
   */
@@ -222,16 +232,17 @@ object Corpus {
     } else if (explicitAuto) Some("local") else None
   }
 
-  /** Registry-independent construction of the native shingle expression —
-    * same pattern as `Dedup.minhashSignature`: an `expr("shingle_md5s(…)")`
-    * string would require [[graft.GraftExtensions]] registration on the
-    * session and fail a plain session with a generic UNRESOLVED_ROUTINE,
-    * while every sibling operator works registration-free. */
-  private def shingleMd5s(textCol: org.apache.spark.sql.Column,
-                          k: Int): org.apache.spark.sql.Column = {
+  /** Registry-independent construction of the native shingle expression
+    * in its per-doc distinct form (`array_distinct(shingle_md5s(text, k))`,
+    * decided on the digests inside the kernel) — same pattern as
+    * `Dedup.minhashSignature`: an `expr("shingle_md5s(…)")` string would
+    * require [[graft.GraftExtensions]] registration on the session and fail
+    * a plain session with a generic UNRESOLVED_ROUTINE, while every sibling
+    * operator works registration-free. */
+  private def distinctShingleMd5s(textCol: Column, k: Int): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.functions.ShingleMd5s(
-      GraftColumnBridge.expression(textCol), k))
+      GraftColumnBridge.expression(textCol), k, distinct = true))
   }
 
   /** The pipeline's stage intermediates — [[trainingSequences]] returns
@@ -271,16 +282,17 @@ object Corpus {
   }
 
   /** The (sh, doc_id) rows of [[exactShingleEdges]]: each doc's distinct
-    * k-token shingle hashes. The native shingle_md5s is bit-identical to
-    * the composed split/transform/slice/concat_ws/md5 chain (asserted in
-    * ShingleMd5sSpec) with zero per-window allocation beyond the hex
-    * output. */
+    * k-token shingle hashes, first occurrences in order. The native
+    * shingle_md5s is bit-identical to the composed
+    * split/transform/slice/concat_ws/md5 chain (asserted in ShingleMd5sSpec)
+    * with zero per-window allocation beyond the hex output, and its
+    * distinct form to `array_distinct` of it (KernelParitySpec). */
   private[graft] def shingleEvidence(kept: DataFrame, shingleK: Int): DataFrame =
-    kept.select(explode(array_distinct(shingleMd5s(col("text"), shingleK))).as("sh"),
+    kept.select(explode(distinctShingleMd5s(col("text"), shingleK)).as("sh"),
       col("doc_id"))
 
   /** Exact-shingle near-dup evidence (the oracle-expressible default):
-    * k-token shingles, md5-hashed; `array_distinct` per doc so a phrase
+    * k-token shingles, md5-hashed; distinct per doc so a phrase
     * repeated within one doc counts once toward df (a per-row projection —
     * the old global `(doc_id, sh)` distinct paid a full exchange of the
     * exploded relation for the same set, since `doc_id` is the caller's
@@ -361,12 +373,12 @@ object Corpus {
     // every component is labelled with its min id, so the winners are the
     // kept docs that are not a non-root of their component (a NULL id is
     // never a winner). Every evidence id is a kept doc id, so no edge needs
-    // a node check.
-    val nonRoots = Dedup.evidenceNonRoots(evidenceOf(kept), maxDf, minShared,
-      kept.select(col("doc_id").as("id")), driverEdgeBound)
-      .select(col("id").as("__non_root"))
-    val deduped = kept.filter(col("doc_id").isNotNull)
-      .join(nonRoots, col("doc_id") === col("__non_root"), "left_anti")
+    // a node check. On the driver path the non-roots are a broadcast
+    // sorted array and the filter is a per-row binary search: no join and
+    // no broadcast exchange job.
+    val deduped = Dedup.withoutNonRoots(kept, "doc_id",
+      Dedup.evidenceNonRoots(evidenceOf(kept), maxDf, minShared,
+        kept.select(col("doc_id").as("id")), driverEdgeBound))
     def mix(df: DataFrame): DataFrame =
       df.filter(TextOps.domainMixKeep(rates)).select(col("doc_id"), col("text"))
     val mixed = mix(deduped)
@@ -530,7 +542,7 @@ object Corpus {
   def decontaminate(train: DataFrame, benchmark: DataFrame,
                     shingleK: Int = 8): DataFrame = {
     require(shingleK >= 1, "shingleK >= 1")
-    // array_distinct per doc (r21 — guide §2.4): `doc_id` is the caller's
+    // distinct per doc (r21 — guide §2.4): `doc_id` is the caller's
     // primary key, so per-row dedup makes the exploded relation distinct
     // per (doc_id, sh) BY CONSTRUCTION — the train side's old global
     // `.distinct()` paid a full exchange of the exploded corpus relation
@@ -538,7 +550,7 @@ object Corpus {
     // prune → join with NO exchange before the join's own.
     def raw(df: DataFrame): DataFrame = df
       .select(col("doc_id"),
-        explode(array_distinct(shingleMd5s(col("text"), shingleK))).as("sh"))
+        explode(distinctShingleMd5s(col("text"), shingleK)).as("sh"))
     // the benchmark side still needs the CROSS-doc distinct: `bs` is the
     // set semijoined against, and duplicate fps across bench docs would
     // double-count hits

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
@@ -52,7 +52,6 @@ object Dedup {
     * composed n×array_min(transform) form allocated n intermediate arrays
     * per row). Returns array<long> of length n. */
   def minhashSignature(hashedShinglesCol: String, n: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.functions.MinhashSignature(
       GraftColumnBridge.expression(col(hashedShinglesCol)), n))
   }
@@ -132,7 +131,6 @@ object Dedup {
     * primitive. One codegen'd scan; `fps` is the sorted distinct fingerprint
     * set, ~2/(w+1) of the k-grams. */
   def winnowFingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
     docs.select(col("doc_id"),
       GraftColumnBridge.column(graft.functions.WinnowFingerprints(
         GraftColumnBridge.expression(col("text")), k, w)).as("fps"))
@@ -183,7 +181,6 @@ object Dedup {
 
   /** `rows` of [[runPairRows]] as (id_a, id_b) in `evidence`'s id type. */
   private def pairFrame(evidence: DataFrame, rows: RDD[InternalRow]): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
     val idType = evidence.schema(1).dataType
     GraftColumnBridge.fromInternalRows(evidence.sparkSession, rows,
         StructType(Seq(StructField("id_a", LongType, nullable = false),
@@ -203,7 +200,6 @@ object Dedup {
     * per map partition, hash-partitioned by key and sorted by (key, id)
     * within each partition. */
   private[graft] def sortedRuns(evidence: DataFrame, maxDf: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
     val Array(key, id) = evidence.columns
     val ev = evidence.select(col(key), col(id).cast("long").as(id))
       .filter(col(id).isNotNull)
@@ -465,7 +461,7 @@ object Dedup {
         StructField("__comp", LongType, nullable = false))))
   }
 
-  /** The non-root ids (`id`) of the components of the near-dup graph that
+  /** The non-root ids of the components of the near-dup graph that
     * `evidence` (key, id) gives under the [[runPairs]] rule: two ids are
     * adjacent iff they share at least `minShared` keys whose df is in
     * [2, `maxDf`]. Every evidence id must be a node: no edge is checked
@@ -479,12 +475,16 @@ object Dedup {
     * `spark.driver.maxResultSize` needs it) and collects the tables. The
     * driver merges them, keeps the pairs with `minShared` shared keys and
     * labels by [[unionFind]], so it never holds more than about
-    * `driverEdgeBound` pairs. When a table or the merged count overflows,
-    * or the bound is 0, the pair-count edges and `nodes` go through
-    * [[components]]: its staged edges, then its collect or its loop. */
+    * `driverEdgeBound` pairs; the result is `Left` of the non-root ids in
+    * ascending order. When a table or the merged count overflows, or the
+    * bound is 0, the pair-count edges and `nodes` go through
+    * [[components]] (its staged edges, then its collect or its loop), and
+    * the result is `Right` of its non-root relation (id). Either way,
+    * [[withoutNonRoots]] drops them. */
   private[graft] def evidenceNonRoots(evidence: DataFrame, maxDf: Int, minShared: Int,
                                       nodes: DataFrame,
-                                      driverEdgeBound: Long = DriverEdgeBound): DataFrame = {
+                                      driverEdgeBound: Long = DriverEdgeBound)
+      : Either[Array[Long], DataFrame] = {
     require(minShared >= 1, "minShared >= 1")
     val rows = runPairRows(evidence, maxDf)
     val pairs = pairFrame(evidence, rows)
@@ -492,12 +492,29 @@ object Dedup {
       if (driverEdgeBound <= 0) None
       else graft.Materialize.labelled(pairs, "edges")(countedPairs(rows, driverEdgeBound))
     counted match {
-      case Some(table) =>
-        nonRootRelation(evidence.sparkSession, table.edges(minShared))
-          .select(col("__cid").as("id"))
+      case Some(table) => Left(unionFind(table.edges(minShared))._1)
       case None =>
-        components(nodes, sharedKeyEdges(pairs, minShared).select(col("id_a"), col("id_b")),
-          driverEdgeBound = driverEdgeBound).nonRoots
+        Right(components(nodes, sharedKeyEdges(pairs, minShared).select(col("id_a"), col("id_b")),
+          driverEdgeBound = driverEdgeBound).nonRoots)
+    }
+  }
+
+  /** The rows of `df` whose `id` column is non-NULL and not among
+    * [[evidenceNonRoots]]' ids: the winners of a dedup. Ascending driver
+    * ids are shipped with `sc.broadcast`, which runs no job, and tested per
+    * row by binary search ([[graft.functions.InSortedIds]]); a distributed
+    * non-root relation is anti-joined. */
+  private[graft] def withoutNonRoots(df: DataFrame, id: String,
+                                     nonRoots: Either[Array[Long], DataFrame]): DataFrame = {
+    val known = df.filter(col(id).isNotNull)
+    nonRoots match {
+      case Left(ids) =>
+        val sorted = df.sparkSession.sparkContext.broadcast(ids)
+        known.filter(!GraftColumnBridge.column(graft.functions.InSortedIds(
+          GraftColumnBridge.expression(col(id).cast("long")), sorted)))
+      case Right(relation) =>
+        known.join(relation.select(col("id").as("__non_root")),
+          col(id) === col("__non_root"), "left_anti")
     }
   }
 
@@ -715,7 +732,6 @@ object Dedup {
     * 64-column groupBy formulation this replaces shuffled one row per
     * (doc, token)). */
   def simhash(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
     docs.select(col("doc_id"),
         expr("transform(array_distinct(split(text, ' ', -1)), t -> xxhash64(t))").as("__hs"))
       .select(col("doc_id"),

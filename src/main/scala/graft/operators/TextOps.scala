@@ -490,6 +490,12 @@ object TextOps {
     chunkDocsUnsorted(docs, chunkTokens, stride)
       .orderBy(col("doc_id"), col("chunk_id"))
 
+  /** [[chunkDocs]] without the output sort: the native
+    * [[graft.functions.ChunkWindows]] generator finds each document's
+    * token offsets in one byte pass and md5s every window's byte span, so
+    * no token array, window slice or joined string is built (the composed
+    * split/sequence/slice/concat_ws/md5 form lives in the test sources).
+    * NULL text gives no chunks. */
   private[graft] def chunkDocsUnsorted(docs: DataFrame, chunkTokens: Int = 50,
                                        stride: Int = 40): DataFrame = {
     require(chunkTokens >= 1 && stride >= 1, "chunkTokens and stride must be >= 1")
@@ -498,21 +504,9 @@ object TextOps {
     // property test); overlap = chunkTokens − stride ≥ 0 is the contract
     require(stride <= chunkTokens,
       s"stride ($stride) must be <= chunkTokens ($chunkTokens): larger strides skip tokens")
-    // explicit NULL-text filter, NOT formula null-propagation: the window
-    // count uses greatest(), which SKIPS a NULL argument (size(NULL) →
-    // NULL → greatest(0, NULL) = 0 → one phantom empty chunk) — the
-    // least/greatest-null trap the engine's conventions name
-    docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), split(col("text"), " ", -1).as("t"))
-      .select(col("doc_id"), col("t"),
-        explode(expr(s"sequence(0, greatest(0, " +
-            s"CAST(ceil((size(t) - $chunkTokens) / CAST($stride AS DOUBLE)) AS INT)))"))
-          .as("chunk_id"))
-      .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
-        expr(s"slice(t, chunk_id * $stride + 1, $chunkTokens)").as("c"))
-      .select(col("doc_id"), col("chunk_id"),
-        size(col("c")).cast("long").as("n_chunk_tokens"),
-        md5(concat_ws(" ", col("c")).cast("binary")).as("chunk_hash"))
+    import org.apache.spark.sql.GraftColumnBridge
+    docs.select(col("doc_id"), GraftColumnBridge.column(graft.functions.ChunkWindows(
+      GraftColumnBridge.expression(col("text")), chunkTokens, stride)))
   }
 
   /** D5 — sequence packing: assemble [[chunkDocs]] chunks into
@@ -528,23 +522,22 @@ object TextOps {
     * per-group dense sequence index; a group that packs ≥ seqStride
     * sequences raises rather than colliding into the next group's ids.
     *
-    * Preconditions: doc_id ≥ 0; every chunk's token count ≥ 1 and ≤ budget
-    * (chunkDocs emits ≤ chunkTokens tokens; an oversize chunk would get a
-    * lone over-budget sequence rather than being split).
+    * Preconditions: doc_id ≥ 0; every chunk's token count ≥ 1 (a NULL or
+    * smaller count raises a named error) and ≤ budget (chunkDocs emits
+    * ≤ chunkTokens tokens; an oversize chunk gets a lone over-budget
+    * sequence rather than being split).
     *
-    * Scale shape: one shuffle to co-locate each group, a per-group linear
-    * fold (`aggregate` higher-order function — stays in the SQL engine, no
-    * UDF), explode back, and one seq-keyed aggregate. The fold's
-    * `array_append` copies its accumulator, so per-group cost is
-    * O(chunks²) in the worst case — docsPerGroup is the knob that bounds
-    * it (50 docs ≈ hundreds of chunks ≈ 10⁵ element copies, trivial);
-    * groups are id-ranged so the output is reproducible under any
-    * parallelism. */
+    * Scale shape: one shuffle to co-locate each group, then one linear
+    * next-fit pass per group over its sorted chunk array (the native
+    * [[graft.functions.PackSequences]] generator, which emits each
+    * sequence's row directly) and the output sort. Per-group cost is the
+    * sort plus O(chunks); groups are id-ranged so the output is
+    * reproducible under any parallelism. */
   def packChunks(chunks: DataFrame, budget: Int = 512, docsPerGroup: Int = 50,
                  seqStride: Long = 1000000L): DataFrame =
     // ord = doc_id reproduces the historical (doc_id, chunk_id) pack
-    // order bit-for-bit: the generalized fold sorts struct(ord, doc_id,
-    // chunk_id, n), which for ord ≡ doc_id is the same total order
+    // order bit-for-bit: the packer sorts struct(ord, doc_id, chunk_id,
+    // n), which for ord ≡ doc_id is the same total order
     packChunksBy(chunks.withColumn("ord", col("doc_id")),
       budget, docsPerGroup, seqStride)
 
@@ -555,68 +548,30 @@ object TextOps {
     * long that is CONSTANT per document (each document's chunks stay
     * consecutive in pack order — the streaming property a sequence
     * loader needs). Everything else — budget rule, seq_id arithmetic,
-    * the seqStride guard, output schema — is [[packChunks]]'s contract
-    * verbatim. */
+    * the seqStride and token-count errors, output schema — is
+    * [[packChunks]]'s contract verbatim.
+    *
+    * The group's chunks are collected as structs of (ord, doc_id,
+    * chunk_id, n) longs and sorted; [[graft.functions.PackKernel]] walks
+    * them once. seq_id = grp·seqStride + seq is injective per (grp, seq),
+    * so every sequence lives in exactly one group: one exchange (the grp
+    * groupBy) end to end. */
   def packChunksBy(chunks: DataFrame, budget: Int = 512, ordsPerGroup: Int = 50,
                    seqStride: Long = 1000000L): DataFrame = {
     require(budget >= 1 && ordsPerGroup >= 1, "budget and ordsPerGroup must be >= 1")
-    // seq_id = grp·seqStride + seq is collision-free only while every
-    // group's sequence count stays below seqStride; a pathological group
-    // (one ~40M-token doc → >1e6 chunks at the defaults) must fail loudly
-    // here, not silently bleed seq_ids into the next group's id space. The
-    // guard lives INSIDE the seq_id expression so the optimizer can never
-    // prune it as an unused column.
-    def checkedSeq = when(col("sq.seq") < seqStride, col("sq.seq"))
-      .otherwise(raise_error(concat(
-        lit(s"packChunks: per-group sequence index reached seqStride ($seqStride) in grp "),
-        col("grp").cast("string"),
-        lit(" — raise seqStride or lower ordsPerGroup"))))
-    chunks.select(
+    import org.apache.spark.sql.GraftColumnBridge
+    val packed = chunks.select(
         floor(col("ord") / ordsPerGroup).cast("long").as("grp"),
-        col("ord"), col("doc_id"), col("chunk_id"), col("n_chunk_tokens"))
+        col("ord").cast("long").as("ord"), col("doc_id").cast("long").as("doc_id"),
+        col("chunk_id").cast("long").as("chunk_id"),
+        col("n_chunk_tokens").cast("long").as("n"))
       .groupBy(col("grp"))
       .agg(sort_array(collect_list(struct(col("ord"), col("doc_id"), col("chunk_id"),
-        col("n_chunk_tokens").as("n")))).as("cs"))
-      // next-fit fold: fill starts AT budget so the first chunk always
-      // "overflows" into seq 0 — keeps the numbering dense without a
-      // special first-element case
-      .select(col("grp"), expr(
-        s"""aggregate(cs,
-             named_struct(
-               'out', cast(array() as array<struct<ord:bigint,doc_id:bigint,chunk_id:bigint,n:bigint,seq:bigint>>),
-               'fill', cast($budget as bigint),
-               'seq', cast(-1 as bigint)),
-             (acc, x) -> named_struct(
-               'out', array_append(acc.out, named_struct(
-                 'ord', x.ord, 'doc_id', x.doc_id, 'chunk_id', x.chunk_id, 'n', x.n,
-                 'seq', if(acc.fill + x.n > $budget, acc.seq + 1, acc.seq))),
-               'fill', if(acc.fill + x.n > $budget, x.n, acc.fill + x.n),
-               'seq', if(acc.fill + x.n > $budget, acc.seq + 1, acc.seq))
-           ).out""").as("out"))
-      // per-sequence aggregation WITHIN the folded array (r21 — guide
-      // §2.4 "remove shuffles outright"): seq_id = grp·seqStride + seq is
-      // injective per (grp, seq), so every seq_id's rows live in exactly
-      // one grp group and the old explode → groupBy(seq_id) re-shuffled
-      // rows that never change groups. `seq` is non-decreasing along the
-      // fold output (the fold only ever increments it), so the runs are
-      // contiguous and `filter(out, x.seq = s)` preserves the fold's
-      // (ord, doc_id, chunk_id) order — exactly the order the old
-      // sort_array(collect_list(...)) reconstructed after the shuffle
-      // (the sort key set is unique, so the orders coincide). Per-group
-      // cost is O(chunks · seqs), bounded by ordsPerGroup exactly like
-      // the fold itself. One exchange (the grp groupBy) end to end
-      // instead of two, identical rows (d41/d43/d63 oracles pin it).
-      .select(col("grp"), explode(expr(
-        """transform(sequence(0, out[size(out) - 1].seq), s -> named_struct(
-             'seq', s, 'chunks', filter(out, x -> x.seq = s)))""")).as("sq"))
-      .select((col("grp") * seqStride + checkedSeq).as("seq_id"),
-        size(col("sq.chunks")).cast("long").as("n_chunks"),
-        expr("array_join(transform(sq.chunks, " +
-          "c -> concat(cast(c.doc_id as string), ':', cast(c.chunk_id as string))), ',')")
-          .as("chunk_ids"),
-        expr("aggregate(sq.chunks, cast(0 as bigint), (a, c) -> a + c.n)")
-          .as("total_tokens"))
-      .select(col("seq_id"), col("n_chunks"), col("chunk_ids"), col("total_tokens"),
+        col("n")))).as("cs"))
+      .select(GraftColumnBridge.column(graft.functions.PackSequences(
+        GraftColumnBridge.expression(col("grp")), GraftColumnBridge.expression(col("cs")),
+        budget, seqStride)))
+    packed.select(col("seq_id"), col("n_chunks"), col("chunk_ids"), col("total_tokens"),
         Features.pround(col("total_tokens").cast("double") / budget, 6).as("fill_ratio"))
       .orderBy(col("seq_id"))
   }
@@ -904,7 +859,7 @@ object TextOps {
     * Scale shape: the rank relation is (doc_id, ord) — 16 bytes/row —
     * joined to chunks on doc_id (id-keyed equijoin, chunk text never
     * materialized: chunks carry counts and hashes only), then the d41
-    * pack fold with parallelism = #groups ≈ corpus/50. One TeraSort
+    * next-fit pass with parallelism = #groups ≈ corpus/50. One TeraSort
     * (epochShuffle) + two shuffles (join, pack groupBy). */
   def epochPackedSequences(docs: DataFrame, seed: Int = 0, budget: Int = 512,
                            docsPerGroup: Int = 50,

@@ -284,8 +284,9 @@ object Profile {
     "m19_segment_auc" -> "per-segment Mann-Whitney AUC (segment-partitioned window)",
     "d29_unigram_surprisal" -> "unigram-LM surprisal (checkpointed explode, vocab join)",
     "v10_psi_by_column" -> "per-column PSI sweep (unpivot-in-projection, one scan)",
-    "d41_packed_sequences" -> "next-fit sequence packing (grouped aggregate-HOF fold)",
-    "d43_training_sequences" -> "corpus pipeline composition (checkpoint-fed, zero re-scans)",
+    "d33_chunked_docs" -> "context-window chunking (native chunk generator: one byte pass per document, md5 of each window's byte span)",
+    "d41_packed_sequences" -> "next-fit sequence packing (native chunk and pack generators, one linear pass per pack group)",
+    "d43_training_sequences" -> "corpus pipeline composition (checkpoint-fed, zero re-scans; winner filter by broadcast sorted ids)",
     "d45_pipeline_audit" -> "corpus audit (five rows observed on the staging jobs; the declared plan is their local relation)",
     "d44_decontaminate" -> "benchmark decontamination (shingle equijoin, AQE-broadcastable bench side)",
     "d47_training_sequences_winnowed" -> "100 TB corpus pipeline (winnowed fingerprints, skew-safe df cap)",

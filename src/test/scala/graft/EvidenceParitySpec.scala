@@ -15,8 +15,9 @@ import graft.reference.EvidenceReference
   *  - sorted-run near-dup evidence (`Dedup.runPairs`) against the
   *    capped-collect pair shape, with string and long keys;
   *  - the non-roots of the edges counted on the driver
-  *    (`Dedup.evidenceNonRoots`) against `Dedup.components` over the
-  *    capped-collect edges, and its over-bound fallback;
+  *    (`Dedup.evidenceNonRoots`, ascending ids) against `Dedup.components`
+  *    over the capped-collect edges, and its over-bound fallback (a
+  *    relation);
   *  - the `QualityKeep` and `TokenCount` kernels against the composed
   *    builtin forms. */
 class EvidenceParitySpec extends AnyFunSuite {
@@ -124,10 +125,16 @@ class EvidenceParitySpec extends AnyFunSuite {
       .groupBy(col("id_a"), col("id_b")).count()
       .filter(col("count") >= minShared).select(col("id_a"), col("id_b"))
     val expected = ids(Dedup.components(nodes, reference).nonRoots)
-    assert(ids(Dedup.evidenceNonRoots(evidence, maxDf, minShared, nodes)) == expected,
-      s"driver path, minShared $minShared")
-    assert(ids(Dedup.evidenceNonRoots(evidence, maxDf, minShared, nodes,
-      driverEdgeBound = 0)) == expected, s"over-bound fallback, minShared $minShared")
+    Dedup.evidenceNonRoots(evidence, maxDf, minShared, nodes) match {
+      case Left(driver) =>
+        assert(driver.toSeq == expected.toSeq.sorted, s"driver path, minShared $minShared")
+      case Right(_) => fail("the driver path returned a relation")
+    }
+    Dedup.evidenceNonRoots(evidence, maxDf, minShared, nodes, driverEdgeBound = 0) match {
+      case Right(fallback) =>
+        assert(ids(fallback) == expected, s"over-bound fallback, minShared $minShared")
+      case Left(_) => fail("the over-bound fallback returned driver ids")
+    }
     expected
   }
 

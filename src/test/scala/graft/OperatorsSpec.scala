@@ -663,6 +663,25 @@ class OperatorsSpec extends AnyFunSuite {
       seqStride = 3L).count() == 3L)
   }
 
+  test("D5 packing: a chunk with a NULL or non-positive token count raises a named error") {
+    import spark.implicits._
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    // two zero-token chunks in group 1: the composed fold returned seq_id
+    // 999999, inside group 0's id range, plus a phantom empty sequence
+    val zero = Seq((0L, 0L, Option(4L)), (100L, 0L, Option(0L)), (100L, 1L, Option(0L)))
+    // a NULL count: the composed fold returned seq_id -1 with NULL tokens
+    val nul = Seq((0L, 0L, Option(4L)), (1L, 0L, Option.empty[Long]))
+    for ((rows, shown) <- Seq(zero -> "100:0 in grp 1 has n_chunk_tokens 0",
+                              nul -> "1:0 in grp 0 has n_chunk_tokens NULL")) {
+      val e = intercept[Exception] {
+        TextOps.packChunks(rows.toDF("doc_id", "chunk_id", "n_chunk_tokens"),
+          budget = 10, docsPerGroup = 100).collect()
+      }
+      assert(messages(e).exists(_.contains(shown)), e.toString)
+    }
+  }
+
   test("D5 packing: no chunk lost, no sequence over budget, fill floor, group isolation, determinism") {
     val chunks = TextOps.chunkDocs(docs)
     val nChunks = chunks.count()

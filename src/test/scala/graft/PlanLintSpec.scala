@@ -401,20 +401,15 @@ class PlanLintSpec extends AnyFunSuite {
     assert(reads.map(_._2).toSet == Set("stageStorage", "bloomPrune"), reads)
   }
 
-  test("no ObjectHashAggregate keyed by a shingle or fingerprint in the near-dup evidence of d28, d43, d45 and d47") {
-    // the near-dup evidence is sorted runs (Dedup.runPairs): a per-key
-    // collect runs under ObjectHashAggregate, which falls back to
-    // sort-based aggregation past 128 keys per task. The evidence of
-    // d43/d45/d47 runs inside their eager stages, so the lint reads every
-    // plan the query executes (the SQL execution events), not only the
-    // final one.
+  /** Runs `body` with a function that collects a DataFrame and returns
+    * every physical plan its execution ran: the final plan plus the plans
+    * of the SQL execution events, which include the eager stages run while
+    * the DataFrame was built. */
+  private def withExecutedPlans[T](
+      body: ((() => org.apache.spark.sql.DataFrame) => Seq[String]) => T): T = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
       SparkListenerSQLExecutionStart}
-    // the node in a plan's tree string and in the formatted explain of
-    // the SQL execution events ("Input [n]: [...]" then "Keys [n]: [...]")
-    val keyedRe = ("ObjectHashAggregate(?:\\(keys=\\[|\\nInput \\[\\d+\\]: [^\\n]*" +
-      "\\nKeys \\[\\d+\\]: \\[)(?:sh|fp)#").r
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -428,20 +423,35 @@ class PlanLintSpec extends AnyFunSuite {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
     }
-    def executedPlans(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
+    def executedPlans(build: () => org.apache.spark.sql.DataFrame): Seq[String] = {
       drain()
       plans.clear()
-      val df = build
+      val df = build()
       df.collect()
       drain()
       df.queryExecution.executedPlan.toString +: plans.asScala.toSeq
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
+    try body(executedPlans)
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("no ObjectHashAggregate keyed by a shingle or fingerprint in the near-dup evidence of d28, d43, d45 and d47") {
+    // the near-dup evidence is sorted runs (Dedup.runPairs): a per-key
+    // collect runs under ObjectHashAggregate, which falls back to
+    // sort-based aggregation past 128 keys per task. The evidence of
+    // d43/d45/d47 runs inside their eager stages, so the lint reads every
+    // plan the query executes (the SQL execution events), not only the
+    // final one.
+    // the node in a plan's tree string and in the formatted explain of
+    // the SQL execution events ("Input [n]: [...]" then "Keys [n]: [...]")
+    val keyedRe = ("ObjectHashAggregate(?:\\(keys=\\[|\\nInput \\[\\d+\\]: [^\\n]*" +
+      "\\nKeys \\[\\d+\\]: \\[)(?:sh|fp)#").r
+    withExecutedPlans { executedPlans =>
       val queries = Seq("d28_winnow_neardups", "d43_training_sequences",
         "d45_pipeline_audit", "d47_training_sequences_winnowed")
       val violations = queries.flatMap { name =>
-        val seen = executedPlans(SparkEntry.queries(name)(spark, sfDir))
+        val seen = executedPlans(() => SparkEntry.queries(name)(spark, sfDir))
         seen.flatMap(p => keyedRe.findFirstIn(p)).distinct
           .map(m => s"$name: ${m.replace('\n', ' ')}")
       }
@@ -450,9 +460,52 @@ class PlanLintSpec extends AnyFunSuite {
       // silently blinding it)
       import org.apache.spark.sql.functions.{col, collect_list}
       import spark.implicits._
-      val banned = executedPlans(Seq(("x", 1L)).toDF("sh", "doc_id")
+      val banned = executedPlans(() => Seq(("x", 1L)).toDF("sh", "doc_id")
         .groupBy(col("sh")).agg(collect_list(col("doc_id"))))
       assert(banned.count(p => keyedRe.findFirstIn(p).isDefined) >= 2, banned.mkString("\n"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("no ArrayAggregate, ArrayDistinct or lambda function in the corpus tail plans of d33, " +
+      "d41, d43, d44, d45, d47 and d63, and no BroadcastExchange in d43 on the driver path") {
+    // the packer, the chunker, the per-doc shingle distinct and the winner
+    // filter are native kernels (graft.functions); an interpreted fold,
+    // distinct or lambda per row or group, or a broadcast exchange of the
+    // non-root ids, is the shape they replaced. Every executed plan counts,
+    // the eager stages' included.
+    val interpretedRe = "(?<![A-Za-z_])(?:aggregate|array_distinct|lambdafunction)\\(".r
+    withExecutedPlans { executedPlans =>
+      val queries = Seq("d33_chunked_docs", "d41_packed_sequences", "d43_training_sequences",
+        "d44_decontaminate", "d45_pipeline_audit", "d47_training_sequences_winnowed",
+        "d63_epoch_packed")
+      val violations = queries.flatMap { name =>
+        val seen = executedPlans(() => SparkEntry.queries(name)(spark, sfDir))
+        val interpreted = seen.flatMap(p => interpretedRe.findAllIn(p)).distinct
+          .map(m => s"$name: $m")
+        val broadcast =
+          if (name == "d43_training_sequences" && seen.exists(_.contains("BroadcastExchange")))
+            Seq(s"$name: BroadcastExchange on the driver path")
+          else Seq.empty
+        interpreted ++ broadcast
+      }
+      assert(violations.isEmpty, violations.mkString("\n"))
+      // the lint sees each banned shape: the composed forms the kernels
+      // replaced, and the anti-join against a local relation
+      import org.apache.spark.sql.functions.col
+      import spark.implicits._
+      val chunks = Seq((0L, 0L, 0L, 4L)).toDF("ord", "doc_id", "chunk_id", "n_chunk_tokens")
+      val fold = executedPlans(() =>
+        graft.reference.CorpusTailReference.composedPackChunksBy(chunks, 10, 50, 1000000L))
+      assert(Set("aggregate(", "lambdafunction(").subsetOf(
+        fold.flatMap(interpretedRe.findAllIn).toSet), fold.mkString("\n"))
+      val docs = Seq((1L, "a b c a b c")).toDF("doc_id", "text")
+      val distinct = executedPlans(() => docs.select(
+        graft.reference.CorpusTailReference.composedDistinctShingles(col("text"), 2)))
+      assert(distinct.exists(p => interpretedRe.findFirstIn(p).contains("array_distinct(")),
+        distinct.mkString("\n"))
+      val antiJoin = executedPlans(() =>
+        graft.reference.CorpusTailReference.antiJoinWinners(docs, "doc_id", Seq(1L)))
+      assert(antiJoin.exists(_.contains("BroadcastExchange")), antiJoin.mkString("\n"))
+    }
   }
 }

@@ -133,6 +133,29 @@ class TaskReplaySpec extends AnyFunSuite {
     }
   }
 
+  test("corpus pipeline (d43 shape) is replay-safe on the broadcast-filter path, and a " +
+      "retried filter task re-reads the broadcast non-root ids") {
+    val rates = Map("src1" -> 0.5, "src2" -> 0.25, "src3" -> 0.1)
+    // this fixture's near-dup edges are labelled on the driver, so the
+    // winner filter is the broadcast sorted-id predicate, with no
+    // broadcast exchange
+    val plan = operators.Corpus.trainingSequences(docs, rates)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("in_sorted_ids") && !plan.contains("BroadcastExchange"), plan)
+    assertReplaySafe("trainingSequences[broadcast filter]",
+      d => operators.Corpus.trainingSequences(d, rates))
+    // the pipeline's filter reads a staged relation, so the planted failure
+    // above fires in the staging job; here it fires in the filter's own
+    // stage, and the retried task re-initializes the predicate from the
+    // broadcast
+    val nonRoots = docs.select(col("doc_id")).filter(pmod(col("doc_id"), lit(3L)) === 0L)
+      .collect().map(_.getLong(0)).sorted
+    assert(nonRoots.nonEmpty)
+    assertReplaySafe("withoutNonRoots[broadcast]",
+      d => operators.Dedup.withoutNonRoots(d.select(col("doc_id"), col("text")), "doc_id",
+        Left(nonRoots)))
+  }
+
   test("corpus audit (d45 shape) is replay-safe: rows observed on the staging jobs stay exact") {
     // the audit's stage rows are accumulator metrics of the kept and chunk
     // staging jobs; a failed first attempt's updates must not be merged, so
